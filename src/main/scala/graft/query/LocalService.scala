@@ -1,7 +1,6 @@
 package graft.query
 
 import graft.core.{Bm25, Oracle}
-import graft.index.PostingCodec
 
 /** Low-latency serving over a built index — the Spark analog of the
   * reference's resident engine + gRPC server (`qq_server.cc:61-132`,
@@ -10,8 +9,9 @@ import graft.index.PostingCodec
   * query pays seconds of scheduling instead. This service keeps the HOT
   * working set (decoded posting lists for queried terms) resident on the
   * driver and evaluates conjunctive/phrase BM25 top-k with the same k-way
-  * leapfrog + bounded heap as the reference — one Spark job per cache MISS
-  * batch, zero jobs on a warm path.
+  * leapfrog + bounded heap as the reference. A cache MISS launches no Spark
+  * job either: it reads only the matching rows of the snapshot's posting
+  * and termstats column chunks on the driver ([[SnapshotReader]]).
   *
   * Results are identical to [[Searcher.search]] (same postings, same lossy
   * BM25, same tie rule); the distributed path remains the scale story for
@@ -28,6 +28,10 @@ import graft.index.PostingCodec
   * instance stays internally CONSISTENT on warm paths; only
   * delete-tombstones support in-place reload ([[reloadTombstones]] —
   * deletes don't change any resident statistic, they only mask docs).
+  * Cache misses read the index files that were committed when the service
+  * was constructed, never a segment appended later. Once compaction has
+  * retired one of those files, a miss that needs it throws
+  * [[LocalService.SnapshotRetiredException]]: serve from [[reopened]].
   */
 final class LocalService(val ix: Searcher.LoadedIndex,
                          maxCachedPostings: Long = 50000000L,
@@ -35,23 +39,22 @@ final class LocalService(val ix: Searcher.LoadedIndex,
                          scanThreshold: Int = 1 << 16,
                          maxResidentNorms: Long = 1L << 28) {
 
-  private final case class TermList(docIds: Array[Int], tfs: Array[Int],
-                                    positions: Array[Array[Int]]) {
-    def n: Int = docIds.length
-    def hasPositions: Boolean = positions != null
-  }
+  import LocalService.TermList
+
+  /** The snapshot's posting/termstats files, pinned here at construction. */
+  private val reader = new SnapshotReader(ix)
 
   // LRU over decoded term lists. Access-order mutates on get, so every
   // cache touch is under this monitor — but only map bookkeeping is: the
-  // decode, the Spark collect, and the scoring loop all run outside it, so
+  // file read, the decode, and the scoring loop all run outside it, so
   // concurrent clients serialize only on microsecond map ops. TermList
   // arrays are immutable; a reference obtained under the lock stays valid
   // after a concurrent eviction.
   private val cache = new java.util.LinkedHashMap[String, TermList](64, 0.75f, true)
   private var cachedPostings = 0L
 
-  /** df per term from termstats (0 = absent), resolved once per term with a
-    * metadata-only job — the gate that runs BEFORE any posting collect. */
+  /** df per term from termstats (0 = absent), resolved once per term by a
+    * driver-side read — the gate that runs BEFORE any posting fetch. */
   private val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Decoded postings currently resident (diagnostic). */
@@ -85,52 +88,22 @@ final class LocalService(val ix: Searcher.LoadedIndex,
 
   private def dfOf(terms: Seq[String]): Map[String, Long] = {
     val unknown = terms.filterNot(dfCache.containsKey)
-    if (unknown.nonEmpty) {
-      val spark = ix.spark
-      import spark.implicits._
-      import org.apache.spark.sql.functions.col
-      val rows = ix.termstats.filter(col("term").isin(unknown: _*))
-        .select("term", "df").as[(String, Long)].collect().toMap
-      unknown.foreach(t => dfCache.put(t, java.lang.Long.valueOf(rows.getOrElse(t, 0L))))
-    }
+    if (unknown.nonEmpty)
+      reader.dfs(unknown).foreach { case (t, df) => dfCache.put(t, java.lang.Long.valueOf(df)) }
     terms.map(t => t -> dfCache.get(t).longValue()).toMap
   }
 
-  /** Fetch+decode posting lists for `terms` in ONE Spark job, returning the
-    * decoded lists AND inserting them into the cache (best-effort — eviction
-    * may reclaim them immediately; the returned references stay valid, so
-    * callers serve from the return value, never re-read the cache). Callers
-    * must have df-gated `terms` (each under `maxFetchPostings`). */
+  /** Fetch+decode posting lists for `terms` in one driver-side read,
+    * returning the decoded lists AND inserting them into the cache
+    * (best-effort — eviction may reclaim them immediately; the returned
+    * references stay valid, so callers serve from the return value, never
+    * re-read the cache). Callers must have df-gated `terms` (each under
+    * `maxFetchPostings`). */
   private def fetchLists(terms: Seq[String],
                          withPositions: Boolean): Map[String, TermList] = {
-    import org.apache.spark.sql.functions.col
-    val cols =
-      if (withPositions) Seq("term", "prevDocId", "firstDocId", "n", "docIds", "tfs", "positions")
-      else Seq("term", "prevDocId", "firstDocId", "n", "docIds", "tfs")
-    val rows = ix.postings
-      .filter(col("term").isin(terms: _*))
-      .select(cols.head, cols.tail: _*)
-      .collect()
-    val byTerm = rows.groupBy(_.getString(0))
-    val out = Map.newBuilder[String, TermList]
+    val lists = reader.lists(terms, withPositions)
     terms.foreach { t =>
-      val blocks = byTerm.getOrElse(t, Array.empty).sortBy(_.getInt(2)) // firstDocId
-      if (blocks.nonEmpty) {
-        val ids = scala.collection.mutable.ArrayBuilder.make[Int]
-        val tfs = scala.collection.mutable.ArrayBuilder.make[Int]
-        val pos = if (withPositions)
-          new scala.collection.mutable.ArrayBuffer[Array[Int]]() else null
-        blocks.foreach { r =>
-          val n = r.getInt(3)
-          val dt = PostingCodec.decodeDocIdTf(r.getInt(1), n,
-            r.getAs[Array[Byte]]("docIds"), r.getAs[Array[Byte]]("tfs"))
-          dt.foreach { case (d, tf) => ids += d; tfs += tf }
-          if (withPositions)
-            pos ++= PostingCodec.decodePositions(n, r.getAs[Array[Byte]]("positions"))
-        }
-        val tl = TermList(ids.result(), tfs.result(),
-          if (withPositions) pos.toArray else null)
-        out += t -> tl
+      lists.get(t).foreach { tl =>
         synchronized {
           evictUntilFits(tl.n.toLong)
           val old = cache.put(t, tl)
@@ -139,7 +112,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
         }
       }
     }
-    out.result()
+    lists
   }
 
   /** Fall back to the distributed engine — identical semantics/scores
@@ -158,8 +131,8 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       .collect().sortBy(_.rank).map(h => Oracle.Hit(h.docId, h.score)).toSeq
 
   /** In-flight fetches, keyed by term (suffix "#p" = with positions):
-    * concurrent clients missing the same term share ONE Spark job instead
-    * of a thundering herd of identical collects. */
+    * concurrent clients missing the same term share ONE read instead of a
+    * thundering herd of identical ones. */
   private val inflight =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Unit]]()
 
@@ -338,8 +311,8 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     *
     * Scale: cache-resident terms answer with a binary search; a term over
     * the fetch budget never materializes its list — tf comes from a
-    * block-range-pruned decode job (the [[Searcher]] J3 skip analog), df
-    * from termstats. */
+    * block-range-pruned driver-side decode (the [[Searcher]] J3 skip
+    * analog), df from termstats. */
   def explain(queryTerms: Seq[String], docId: Int,
               boosts: Map[String, Double] = Map.empty): Seq[LocalService.Explanation] = {
     val uniq = queryTerms.distinct
@@ -387,20 +360,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * covers the doc — the J3 skip-pointer analog as a point lookup; never
     * materializes the term's full list (safe for hot terms over the fetch
     * budget). 0 when the doc does not contain the term. */
-  private def tfViaBlocks(term: String, docId: Int): Long = {
-    import org.apache.spark.sql.functions.col
-    val rows = ix.postings
-      .filter(col("term") === term &&
-        col("firstDocId") <= docId && col("lastDocId") >= docId)
-      .select("prevDocId", "n", "docIds", "tfs").collect()
-    var tf = 0L
-    rows.foreach { r =>
-      PostingCodec.decodeDocIdTf(r.getInt(0), r.getInt(1),
-        r.getAs[Array[Byte]]("docIds"), r.getAs[Array[Byte]]("tfs"))
-        .foreach { case (d, t) => if (d == docId) tf = t.toLong }
-    }
-    tf
-  }
+  private def tfViaBlocks(term: String, docId: Int): Long = reader.tf(term, docId)
 
   /** One bounded-heap leapfrog pass over docIds in `[fromDoc, untilDoc)` —
     * the k-way max-pivot intersection of the reference
@@ -1081,6 +1041,21 @@ final class LocalService(val ix: Searcher.LoadedIndex,
 }
 
 object LocalService {
+  /** A decoded posting list; `positions` is null when fetched without. */
+  private[graft] final case class TermList(docIds: Array[Int], tfs: Array[Int],
+                                           positions: Array[Array[Int]]) {
+    def n: Int = docIds.length
+    def hasPositions: Boolean = positions != null
+  }
+
+  /** A cache miss needed an index file of the service's pinned snapshot
+    * that compaction has since retired. The service cannot serve that
+    * miss; swap in [[LocalService.reopened]]. */
+  final class SnapshotRetiredException(path: String, cause: Throwable)
+    extends IllegalStateException(
+      s"index file $path of this service's snapshot was retired by compaction; " +
+        "serve from reopened()", cause)
+
   /** One term's slice of an `explain` decomposition: contribution =
     * idf·tfNorm, and the per-doc score is the slot-ordered Σ contribution. */
   final case class Explanation(term: String, tf: Long, df: Long,

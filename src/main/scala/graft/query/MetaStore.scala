@@ -259,7 +259,8 @@ object MetaStore {
     val distinct = terms.distinct
     val directCap = confLong(ix, "spark.graft.meta.directRows", 16384L)
     // df-estimated exclusion meta volume; unknown dfs estimate as the cap
-    // (unknown ⇒ assume hot ⇒ take the bounded two-level path)
+    // (unknown ⇒ assume hot ⇒ take the bounded two-level path, so the
+    // direct path needs an estimate strictly below the cap)
     val est = distinct.iterator
       .map(t => dfs.get(t).map(_ / 128L + 1L).getOrElse(directCap)).sum
     def fetch(bound: Array[(Int, Int)]): Array[(String, Int, Int)] =
@@ -267,7 +268,7 @@ object MetaStore {
         .select("term", "firstDocId", "lastDocId")
         .filter(overlapPred(coarsenTo(bound, math.max(1, maxIv))))
         .as[(String, Int, Int)].collect()
-    if (est <= directCap) {
+    if (est < directCap) {
       val rows = fetch(cand)
       exclDiagTL.set(ExclDiag(est, twoLevel = false, 0L, cand.length, rows.length.toLong))
       rows

@@ -114,8 +114,30 @@ object Searcher {
       * filter is partition pruning: retired dirs are never scanned. */
     private def segRead(stage: String): DataFrame = {
       val df = spark.read.parquet(s"$indexDir/$stage")
-      if (!hasSegments) df
-      else df.filter(col("seg").isin(liveSegments: _*))
+      visibleSegments.fold(df)(live => df.filter(col("seg").isin(live: _*)))
+    }
+    /** The segments [[segRead]] reads: None for a batch (unsegmented)
+      * index, else the manifest-committed live set ([[liveSegments]]). */
+    private def visibleSegments: Option[Seq[Long]] =
+      if (!hasSegments) None else Some(liveSegments)
+    /** The parquet files [[segRead]] would scan for `stage`, listed on the
+      * driver (no Spark job): the stage directory of a batch index, or the
+      * `seg=` directories of the visible segments — uncommitted or retired
+      * segment directories are never listed. Hidden and `_`-prefixed files
+      * are skipped, as Spark's file index skips them. */
+    def stageFiles(stage: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(indexDir, stage)
+      val dirs = visibleSegments.fold(Seq(root))(_.map(s => root.resolve(s"seg=$s")))
+      dirs.filter(java.nio.file.Files.isDirectory(_)).flatMap { d =>
+        val s = java.nio.file.Files.list(d)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.filter { f =>
+            val n = f.getFileName.toString
+            !n.startsWith("_") && !n.startsWith(".") && java.nio.file.Files.isRegularFile(f)
+          }.map(_.toString).toSeq.sorted
+        } finally s.close()
+      }
     }
     def postings: DataFrame = segRead("postings")
     /** Whether the postings carry the inline per-posting norm stream

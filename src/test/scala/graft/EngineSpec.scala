@@ -1420,6 +1420,76 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Searcher.load(spark, tmp).nDocs == NDocs)
   }
 
+  test("SnapshotReader: driver column reads equal the Spark DataFrame reads") {
+    import spark.implicits._
+    built
+    // a salted rewrite of the postings: every term with df > 64 is sharded
+    // into docId-range runs encoded by different tasks, so one term's
+    // blocks span several files
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_salted").toString
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(tmp), new java.io.File(dir))
+      val docstore = spark.read.parquet(s"$tmp/docstore").as[IndexBuilder.DocRow]
+      IndexBuilder.buildBlocks(spark, IndexBuilder.flatPostings(docstore), NDocs,
+          partitions = 8, saltTarget = 64)
+        .write.mode("overwrite").option("compression", "zstd").parquet(s"$dir/postings")
+      val salted = Searcher.load(spark, dir)
+      val ifFiles = salted.postings.filter($"term" === "if")
+        .select(org.apache.spark.sql.functions.input_file_name()).distinct().count()
+      assert(ifFiles > 1, s"'if' should span several files, got $ifFiles")
+      val rare = oracle.postings.keys.toSeq.sorted
+        .find(t => t.startsWith("fn_") && oracle.postings(t).length == 1)
+        .getOrElse(fail("no df-1 fn_ identifier in the corpus"))
+      val terms = Seq("if", rare, "zzz_absent")
+      val reader = new graft.query.SnapshotReader(salted)
+      SnapshotReads.assertSameAsSpark(spark, salted, reader, terms)
+      assert(reader.dfs(terms) == Map("if" -> oracle.postings("if").length.toLong,
+        rare -> 1L, "zzz_absent" -> 0L))
+      // the block-pruned tf probe agrees with the decoded list at every doc
+      val ifList = reader.lists(Seq("if"), withPositions = false)("if")
+      ifList.docIds.zip(ifList.tfs).take(200).foreach { case (d, tf) =>
+        assert(reader.tf("if", d) == tf.toLong, s"tf('if', $d)")
+      }
+      val ifDocs = ifList.docIds.toSet
+      (0 until NDocs.toInt).find(!ifDocs.contains(_)).foreach(d => assert(reader.tf("if", d) == 0L))
+      assert(reader.tf("zzz_absent", 0) == 0L)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("LocalService: cache misses and an over-cap explain launch no Spark job") {
+    built
+    val svc = new graft.query.LocalService(ix)
+    val tight = new graft.query.LocalService(ix, maxFetchPostings = 50L)
+    // the resident norms and the docId space load once per service, with
+    // Spark jobs; load them on a term the probes below never touch
+    svc.search(Seq("fn_1_0"), 1)
+    tight.search(Seq("fn_1_0"), 1)
+    val (_, m0, _) = svc.cacheStats
+    def noJobs[A](what: String)(body: => A): A = {
+      val (jobs, out) = SparkJobs.during(spark)(body)
+      assert(jobs == 0, s"$what launched $jobs Spark jobs")
+      out
+    }
+    val term = noJobs("term miss")(svc.search(Seq("epsilon"), 10))
+    val pair = noJobs("pair miss")(svc.search(Seq("hash", "seed"), 10))
+    val phrase = noJobs("phrase miss")(svc.search(Seq("if", "return"), 10, phrase = true))
+    assert(svc.cacheStats._2 - m0 == 5, s"every probe term should miss: ${svc.cacheStats}")
+    assert(term.map(_.docId) == Oracle.search(oracle, Seq("epsilon"), 10).map(_.docId))
+    assert(pair.map(_.docId) == Oracle.search(oracle, Seq("hash", "seed"), 10).map(_.docId))
+    assert(phrase.map(_.docId) ==
+      Oracle.search(oracle, Seq("if", "return"), 10, phrase = true).map(_.docId))
+    // both terms are over tight's fetch cap: explain probes tf block by block
+    val doc = phrase.head.docId
+    val resident = tight.residentPostings
+    val ex = noJobs("over-cap explain")(tight.explain(Seq("if", "return"), doc))
+    assert(ex == svc.explain(Seq("if", "return"), doc) && ex.nonEmpty)
+    assert(tight.residentPostings == resident, "explain must not cache an over-cap list")
+    // an over-cap query still routes to the distributed Searcher
+    val (jobs, hits) = SparkJobs.during(spark)(tight.search(Seq("if", "return"), 10))
+    assert(jobs > 0, "an over-cap query should run distributed")
+    assert(hits.map(_.docId) == Oracle.search(oracle, Seq("if", "return"), 10).map(_.docId))
+  }
+
   test("legacy index without the inline norm stream: fallback join is rank-identical") {
     // indexes written before the lenBytes stream existed lack the column;
     // every scoring path must fall back to the (docId, lenByte) docstore
@@ -1470,4 +1540,71 @@ object TestQueries {
     Seq("if", "val", "def", "for"),
     Seq("fn_1_0"), Seq("fn_10_0", "if"),
     Seq("if", "nosuchterm_xyz"))
+}
+
+/** Spark jobs launched by a block of code. */
+object SparkJobs {
+  private val Fence = "spark-jobs-fence"
+
+  /** (jobs started while `body` ran, its result). Listener events arrive
+    * asynchronously and in order, so a marker job submitted after `body`
+    * fences the count: once its start is delivered, so is every earlier
+    * job's. A marker before `body` drains earlier jobs' late events. */
+  def during[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (Int, A) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val fences = new java.util.concurrent.Semaphore(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == Fence)
+          fences.release()
+        else started.incrementAndGet()
+    }
+    def fence(): Unit = {
+      sc.setJobGroup(Fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fences.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS), "fence job unseen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence()
+      started.set(0)
+      val out = body
+      fence()
+      (started.get(), out)
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The Spark DataFrame reads a [[graft.query.SnapshotReader]] replaces, as
+  * the reference it is checked against. */
+object SnapshotReads {
+  def assertSameAsSpark(spark: org.apache.spark.sql.SparkSession, ix: Searcher.LoadedIndex,
+                        reader: graft.query.SnapshotReader, terms: Seq[String]): Unit = {
+    import spark.implicits._
+    val sparkDfs = ix.termstats.filter($"term".isin(terms: _*))
+      .select("term", "df").as[(String, Long)].collect().toMap
+    assert(reader.dfs(terms) == terms.map(t => t -> sparkDfs.getOrElse(t, 0L)).toMap,
+      s"dfs differ for $terms")
+    val lists = reader.lists(terms, withPositions = true)
+    val plain = reader.lists(terms, withPositions = false)
+    terms.foreach { t =>
+      val blocks = ix.postings.filter($"term" === t)
+        .select("prevDocId", "firstDocId", "n", "docIds", "tfs", "positions")
+        .as[(Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
+        .collect().sortBy(_._2)
+      val dt = blocks.flatMap { case (prev, _, n, ids, tfs, _) =>
+        PostingCodec.decodeDocIdTf(prev, n, ids, tfs) }
+      val pos = blocks.flatMap { case (_, _, n, _, _, p) => PostingCodec.decodePositions(n, p) }
+      if (blocks.isEmpty) assert(!lists.contains(t) && !plain.contains(t), s"absent '$t' decoded")
+      else {
+        val got = lists(t)
+        assert(got.docIds.toSeq == dt.map(_._1).toSeq, s"docIds differ for '$t'")
+        assert(got.tfs.toSeq == dt.map(_._2).toSeq, s"tfs differ for '$t'")
+        assert(got.positions.map(_.toSeq).toSeq == pos.map(_.toSeq).toSeq,
+          s"positions differ for '$t'")
+        assert(plain(t).docIds.toSeq == got.docIds.toSeq && !plain(t).hasPositions)
+      }
+    }
+  }
 }

@@ -238,4 +238,16 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
+
+  test("exclusion meta: one unknown-df term takes the two-level path") {
+    eng
+    val ix = Searcher.load(spark, tmp)
+    val all = Array((0, 4095))
+    // an unknown df estimates as exactly the direct cap: not below it
+    val unknown = MetaStore.boundedRangeMeta(ix, Seq("rare"), all)
+    assert(MetaStore.lastExclDiag.twoLevel, s"unknown df went direct: ${MetaStore.lastExclDiag}")
+    val known = MetaStore.boundedRangeMeta(ix, Seq("rare"), all, Map("rare" -> 16L))
+    assert(!MetaStore.lastExclDiag.twoLevel, s"a known rare df should go direct: ${MetaStore.lastExclDiag}")
+    assert(unknown.toSeq.sorted == known.toSeq.sorted && known.nonEmpty)
+  }
 }

@@ -583,4 +583,74 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(pinned.ix.nDocs == 60 && pinned.reopened().ix.nDocs == 80)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("LocalService misses read the construction-time snapshot; compaction asks for reopen") {
+    val s = spark
+    import s.implicits._
+    // "shared" is in every even doc of both segments
+    def df(lo: Int, hi: Int) = (lo until hi).map { i =>
+      val shared = if (i % 2 == 0) " shared" else ""
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha common$i$shared")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_pinned").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 60), dir, segId = 0, partitions = 2)
+      val svc = new graft.query.LocalService(Searcher.load(spark, dir))
+      val idle = new graft.query.LocalService(Searcher.load(spark, dir))
+      assert(svc.search(Seq("common3"), 1).map(_.docId) == Seq(3)) // norms now resident
+      StreamingIndexer.appendSegment(spark, df(60, 80), dir, segId = 1, partitions = 2)
+      // a cold-cache miss after the append reads segment 0 only: exactly
+      // the index as of that commit
+      val want = Searcher.search(Searcher.load(spark, dir, asOfSeg = Some(0L)), Seq("shared"), 50)
+        .collect().sortBy(_.rank).map(h => (h.docId, h.score)).toSeq
+      val (_, m0, _) = svc.cacheStats
+      val got = svc.search(Seq("shared"), 50).map(h => (h.docId, h.score))
+      assert(svc.cacheStats._2 == m0 + 1, "expected a cache miss")
+      assert(want.size == 30 && got == want)
+      val phrase = svc.search(Seq("alpha", "common7"), 5, phrase = true)
+      assert(phrase.map(_.docId) == Seq(7))
+      // compaction retires the pinned segment files: a miss that needs them
+      // fails with the typed error instead of reading another snapshot
+      StreamingIndexer.compact(spark, dir, partitions = 2)
+      val e = intercept[graft.query.LocalService.SnapshotRetiredException](
+        idle.search(Seq("shared"), 50))
+      assert(e.getMessage.contains("reopened()"))
+      intercept[graft.query.LocalService.SnapshotRetiredException](svc.search(Seq("common5"), 5))
+      // warm lists stay servable; a reopened service sees the compacted index
+      assert(svc.search(Seq("shared"), 50).map(h => (h.docId, h.score)) == want)
+      assert(svc.reopened().search(Seq("shared"), 50).size == 40)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("SnapshotReader: driver reads equal Spark reads on a segmented index") {
+    val s = spark
+    import s.implicits._
+    def df(lo: Int, hi: Int) = (lo until hi).map { i =>
+      val seg2 = if (i >= 340) " onlylast" else ""
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha beta common$i alpha$seg2")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_snapread").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 300), dir, segId = 0, partitions = 2)
+      StreamingIndexer.appendSegment(spark, df(300, 340), dir, segId = 1, partitions = 2)
+      StreamingIndexer.appendSegment(spark, df(340, 360), dir, segId = 2, partitions = 2)
+      // an uncommitted segment on disk (an append that has written its
+      // stages but not its manifest): a copy of segment 1
+      Seq("postings", "termstats").foreach { st =>
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(s"$dir/$st/seg=1"), new java.io.File(s"$dir/$st/seg=7"))
+      }
+      val terms = Seq("alpha", "beta", "onlylast", "common301", "common5", "zzz_absent")
+      Seq(Searcher.load(spark, dir), Searcher.load(spark, dir, asOfSeg = Some(1L))).foreach { ix =>
+        assert(ix.stageFiles("postings").nonEmpty &&
+          !ix.stageFiles("postings").exists(_.contains("seg=7")))
+        assert(ix.stageFiles("postings").exists(_.contains("seg=2")) == ix.asOfSeg.isEmpty)
+        SnapshotReads.assertSameAsSpark(spark, ix, new graft.query.SnapshotReader(ix), terms)
+      }
+      val pinned = new graft.query.SnapshotReader(Searcher.load(spark, dir, asOfSeg = Some(1L)))
+      assert(pinned.dfs(Seq("alpha", "common341")) == Map("alpha" -> 340L, "common341" -> 0L))
+      val alpha = pinned.lists(Seq("alpha"), withPositions = true)("alpha")
+      assert(alpha.docIds.toSeq == (0 until 340) && alpha.positions.forall(_.toSeq == Seq(0, 3)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }
