@@ -87,14 +87,9 @@ final class Engine private (val ix: Searcher.LoadedIndex) {
   import Engine._
 
   def nDocs: Long = ix.nDocs
-  def avgDocLen: Double = ix.avgLen
 
   /** Per-term document frequencies (`PostinglistSizes` analog). */
-  def docFreqs(terms: Seq[String]): Map[String, Long] = {
-    import ix.spark.implicits._
-    ix.termstats.filter(org.apache.spark.sql.functions.col("term").isin(terms.distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
-  }
+  def docFreqs(terms: Seq[String]): Map[String, Long] = ix.dfs(terms.distinct)
 
   def search(q: SearchQuery): SearchResult = {
     if (q.nResults <= 0) return SearchResult(Nil, Map.empty) // `qq_mem_engine.h:338-340`

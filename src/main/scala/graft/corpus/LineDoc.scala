@@ -113,12 +113,9 @@ object LineDoc {
       Manifest.commit(spark, indexDir, "postings")
     }
     if (!Manifest.isCommitted(indexDir, "termstats")) {
-      spark.read.parquet(s"$indexDir/postings")
-        .groupBy("term")
-        .agg(org.apache.spark.sql.functions.sum($"n").cast("long").as("df"),
-          org.apache.spark.sql.functions.sum($"sumTf").cast("long").as("cf"))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$indexDir/termstats")
+      IndexBuilder.writeTermStats(spark.read.parquet(s"$indexDir/postings")
+          .select($"term", $"n".as("df"), $"sumTf".as("cf")),
+        math.max(1, partitions / 4), s"$indexDir/termstats")
       Manifest.commit(spark, indexDir, "termstats")
     }
     Manifest.commitSnapshot(spark, indexDir, docs.size.toLong)

@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   *   2. docstore — (docId, repo, path, commit, lang, sha256, content)
   *   3. doclen   — (docId, len, lenByte) + avg scalar
   *   4. postings — term-partitioned, salted for hot terms, block-encoded
-  *   5. termstats— (term, df, cf) aggregated from block METADATA (Σn, ΣsumTf)
+  *   5. termstats— (term, df, cf) aggregated from block METADATA (Σn, ΣsumTf),
+  *                 range-partitioned and sorted by term
   *
   * Scale design: the only required shuffles are (a) the range-sort for docId
   * assignment, (b) the term(+salt) repartition for posting-list grouping,
-  * and (c) the termstats partial+final aggregation. Hot terms ('if',
+  * and (c) the termstats partial+final aggregation and its (vocabulary-
+  * sized) range repartition. Hot terms ('if',
   * 'return' — df ≈ corpus size) are salted into contiguous docId-range
   * shards so no single task ever materializes a whole hot posting list
   * (SURVEY.md §7.5.3-4); blocks are independently decodable so shards never
@@ -38,7 +40,6 @@ object IndexBuilder {
   final case class FlatPosting(term: String, docId: Int, tf: Int,
                                posBlob: Array[Byte], offBlob: Array[Byte],
                                lenByte: Int = 0)
-  final case class DocLen(docId: Int, len: Int, lenByte: Int)
   final case class BlockRow(term: String, prevDocId: Int, firstDocId: Int, lastDocId: Int,
                             n: Int, maxTf: Int, minLenByte: Int, sumTf: Int,
                             docIds: Array[Byte], tfs: Array[Byte], lenBytes: Array[Byte],
@@ -139,15 +140,6 @@ object IndexBuilder {
           lb)
       }
     }
-  }
-
-  /** (docId, rawLen, lossy 1-byte code) — `doc_length_store.h` analog. */
-  def docLengths(docs: Dataset[DocRow]): Dataset[DocLen] = {
-    import docs.sparkSession.implicits._
-    docs.map(d => {
-      val len = Tokenizer.terms(d.content).length
-      DocLen(d.docId, len, LenByte.encode(len.toLong))
-    })
   }
 
   /** Block-encode postings, salting hot terms into contiguous docId-range
@@ -277,17 +269,6 @@ object IndexBuilder {
           def next(): BlockRow = { refill(); pending.next() }
         }
       }
-  }
-
-  final case class TermStat(term: String, df: Long, cf: Long)
-
-  /** Per-term document frequency + collection frequency — partial+final
-    * (map-side combine) aggregation, no skew issue. */
-  def termStats(flat: Dataset[FlatPosting]): Dataset[TermStat] = {
-    import flat.sparkSession.implicits._
-    flat.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum($"tf").cast("long").as("cf"))
-      .as[TermStat]
   }
 
   /** Deterministic hot-term detection sample: docs with
@@ -427,9 +408,7 @@ object IndexBuilder {
         else spark.read.parquet(s"$indexDir/postings")
           .select($"term", $"n".cast("long").as("df"), $"sumTf".cast("long").as("cf"))
       timed("termstats.agg") {
-        src.groupBy("term")
-          .agg(sum($"df").cast("long").as("df"), sum($"cf").cast("long").as("cf"))
-          .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/termstats")
+        writeTermStats(src, math.max(1, partitions / 4), s"$indexDir/termstats")
       }
       timed("termstats.commit") { Manifest.commit(spark, indexDir, "termstats") }
     }}
@@ -440,6 +419,28 @@ object IndexBuilder {
     * blocks. Must match `spark.graft.meta.superSpan`'s default; a session
     * overriding that conf falls back to the per-query aggregation. */
   val SuperSpan: Long = 1L << 14
+
+  /** Row-group size of the termstats stage, ~1 MB (tens of thousands of
+    * terms): the driver-side df lookup scans the `term` column of each row
+    * group it cannot rule out, so this bounds its cost per wanted term at
+    * any vocabulary size. */
+  private val TermStatsRowGroupBytes: Int = 1 << 20
+
+  /** Writes term statistics (term, df, cf), summed from per-term partial
+    * rows (term, df, cf), to `path`: range-partitioned into `outParts`
+    * files and sorted by term, so each file and each row group covers its
+    * own term range and the driver-side df lookup
+    * ([[graft.query.Searcher.LoadedIndex.dfs]]) skips every one whose
+    * `term` min/max excludes the wanted terms. Shared by the batch build,
+    * the streaming segments and compaction. */
+  def writeTermStats(partials: DataFrame, outParts: Int, path: String): Unit =
+    partials.groupBy("term")
+      .agg(sum(col("df")).cast("long").as("df"), sum(col("cf")).cast("long").as("cf"))
+      .repartitionByRange(outParts, col("term"))
+      .sortWithinPartitions("term")
+      .write.mode("overwrite").option("compression", "zstd")
+      .option("parquet.block.size", TermStatsRowGroupBytes.toLong)
+      .parquet(path)
 
   /** Coarse super-block rows (term, lo, hi, df, cf) of a block store —
     * one row per (term, docId super-bucket), written term-sorted so the

@@ -33,12 +33,8 @@ object Dedup {
            sort_array(collect_list(col(idCol))).as("members"))
   }
 
-  /** One md5 hex digest per shingle — the single expensive hash pass; all
-    * signature components derive from it (see [[minhashSigFromHashes]]). */
-  def shingleHashes(textCol: Column, n: Int = 3): Column =
-    transform(TextOps.shingles(TextOps.tokens(textCol), n), s => md5(s))
-
-  /** Minhash signature from precomputed shingle digests: component `i` is
+  /** Minhash signature from precomputed shingle digests (one md5 hex
+    * digest per shingle, the single expensive hash pass): component `i` is
     * `min over shingles of rotate(md5hex, 4*i hex chars)` — a hex-string
     * rotation puts a different 16-bit window of the digest in front per
     * component, so the per-component minima select near-independent shingles
@@ -53,13 +49,6 @@ object Dedup {
     }
     array(comps: _*)
   }
-
-  /** md5-rotation minhash signature over word `n`-gram shingles (one digest
-    * per shingle, `sigLen` derived components). Prefer materializing
-    * [[shingleHashes]] as a column first so the digest pass is evaluated
-    * once, then [[minhashSigFromHashes]] over it. */
-  def minhashSig(textCol: Column, n: Int = 3, sigLen: Int = 8): Column =
-    minhashSigFromHashes(shingleHashes(textCol, n), sigLen)
 
   /** LSH candidate pairs: signature split into `bands` bands; docs sharing
     * any band key are candidates. Output: (id_a, id_b) distinct pairs,

@@ -376,9 +376,7 @@ object BoolQuery {
       val (p, ng) = leafTerms(n); p ++ ng
     }.distinct
     if (all0.isEmpty) return empty
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(all0: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] = ix.dfs(all0)
     val live: Seq[(Int, Node)] = queries.flatMap { case (qid, n) =>
       foldForEval(n, dfs.contains).map(qid -> _)
     }
@@ -477,9 +475,7 @@ object BoolQuery {
     val (pos0, neg0) = leafTerms(root0)
     val all0 = (pos0 ++ neg0).distinct
     if (all0.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(all0: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] = ix.dfs(all0)
     val root = fold(root0, dfs.contains)
     if (root == False || root == True || !hasPositive(root))
       return spark.emptyDataset[Searcher.Hit]

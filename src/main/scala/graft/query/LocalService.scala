@@ -41,7 +41,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
 
   import LocalService.TermList
 
-  /** The snapshot's posting/termstats files, pinned here at construction. */
+  /** The snapshot's posting/termstats files, pinned here at construction:
+    * the loaded index's snapshot that was current then, whose footer cache
+    * this service shares while the index still sees it. */
   private val reader = new SnapshotReader(ix)
 
   // LRU over decoded term lists. Access-order mutates on get, so every

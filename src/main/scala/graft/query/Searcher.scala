@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
   * (`vacuum_engine.h:201-258` → `query_processing.h:956-979` dispatch →
   * k-way leapfrog → lossy BM25 → bounded heap).
   *
+  * Planning runs on the driver with no Spark job once the index is warm:
+  * each stage's relation is resolved once per index snapshot (a
+  * [[LoadedIndex]] memoizes it under the stage's file listing, so
+  * `spark.read`'s schema inference is not paid per query), the query
+  * terms' dfs (P2) are read from the termstats footers and column chunks
+  * ([[LoadedIndex.dfs]]), and block metadata comes from [[MetaStore]]'s
+  * caches. The jobs a query launches are then the scoring plan's own.
+  *
   * Plan shape (all Catalyst-planned):
   *   1. term lookup (P1): `postings.filter(term IN queryTerms)` — pushed to
   *     the parquet scan; blocks are written term-sorted so row-group min/max
@@ -34,6 +42,13 @@ object Searcher {
 
   final case class Hit(docId: Int, score: Double, rank: Int)
 
+  /** The visible snapshot of one index stage: the segments in view (None
+    * for a batch index) and the (path, length, mtime) of every parquet
+    * file they hold. Any append, compaction or in-place rewrite of the
+    * stage changes it. */
+  private final case class StageKey(segs: Option[Seq[Long]],
+                                    files: Seq[(String, Long, Long)])
+
   final case class LoadedIndex(spark: SparkSession, indexDir: String, nDocs: Long,
                                avgLen: Double, lossyCache: Array[Double],
                                asOfSeg: Option[Long] = None) {
@@ -45,12 +60,13 @@ object Searcher {
       MetaStore.lruMap(512)
     private[query] val coarseCovCache: java.util.Map[String, Array[(Int, Int)]] =
       MetaStore.lruMap(4096)
-    /** [[postings]] re-reads the manifest-committed LIVE segment set per
+    /** [[postings]] re-resolves the manifest-committed LIVE segment set per
       * call, so a long-lived LoadedIndex over a streaming index SEES new
       * appends — the meta caches must not pin a term's old block set.
       * [[MetaStore]] calls this before every cache use: when the committed
-      * segment set changed, both caches drop (a directory listing, no
-      * Spark job — segRead already pays the same listing per query).
+      * segment set changed, both caches drop (a manifest listing, no
+      * Spark job — each stage accessor pays the same listing for its
+      * snapshot key).
       * Returns a monotonic invalidation epoch captured BEFORE the segment
       * listing; writers re-check it with [[metaCacheEpochIs]] before
       * caching. The epoch bumps on every clear, so a fetch whose view may
@@ -107,73 +123,121 @@ object Searcher {
       val live = graft.index.Manifest.committedSegments(indexDir)
       asOfSeg.fold(live)(n => live.filter(_ <= n))
     }
+    /** The segments a stage read sees: None for a batch (unsegmented)
+      * index, else the manifest-committed live set ([[liveSegments]]). */
+    private def visibleSegments: Option[Seq[Long]] =
+      if (!hasSegments) None else Some(liveSegments)
+
+    /** The visible snapshot of `stage` ([[StageKey]]): the stage directory
+      * of a batch index, or the `seg=` directories of the visible segments
+      * — uncommitted or retired segment directories are never listed.
+      * Hidden and `_`-prefixed files are skipped, as Spark's file index
+      * skips them. Listed on the driver, no Spark job. */
+    private def stageKey(stage: String): StageKey = {
+      val segs = visibleSegments
+      val root = java.nio.file.Paths.get(indexDir, stage)
+      StageKey(segs, dataFiles(segs.fold(Seq(root))(_.map(s => root.resolve(s"seg=$s")))))
+    }
+    /** (path, length, mtime) of the data files directly under `dirs`,
+      * sorted by path; a missing directory lists nothing. */
+    private def dataFiles(dirs: Seq[java.nio.file.Path]): Seq[(String, Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      dirs.filter(java.nio.file.Files.isDirectory(_)).flatMap { d =>
+        val s = java.nio.file.Files.list(d)
+        try s.iterator().asScala.filter { f =>
+          val n = f.getFileName.toString
+          !n.startsWith("_") && !n.startsWith(".")
+        }.flatMap { f =>
+          val a = java.nio.file.Files.readAttributes(f,
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          if (a.isRegularFile) Some((f.toString, a.size, a.lastModifiedTime.toMillis))
+          else None
+        }.toSeq.sortBy(_._1)
+        finally s.close()
+      }
+    }
+
+    /** Per-snapshot memo: each relation (and each stage's driver-side
+      * file reader) is resolved once per snapshot key — `spark.read`'s
+      * schema inference is a Spark job, so re-resolving per query would
+      * pay it on every call. One entry per name: a new key replaces the
+      * old snapshot's entry, never adds to it. */
+    private final class Memo(val key: AnyRef, build: => AnyRef) {
+      lazy val value: AnyRef = build
+    }
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, Memo]()
+    private def memoized[A <: AnyRef](name: String, key: AnyRef)(build: => A): A =
+      memo.compute(name, (_, old) => if (old != null && old.key == key) old else new Memo(key, build))
+        .value.asInstanceOf[A]
+
     /** For a segmented (streaming) index, restrict partition discovery to
       * the manifest-committed LIVE segments — an in-flight append or a
       * compaction between publish and cleanup leaves seg= directories on
       * disk that must not be read (exactly-once visibility). The isin
       * filter is partition pruning: retired dirs are never scanned. */
-    private def segRead(stage: String): DataFrame = {
+    private def segRead(stage: String, key: StageKey): DataFrame = {
       val df = spark.read.parquet(s"$indexDir/$stage")
-      visibleSegments.fold(df)(live => df.filter(col("seg").isin(live: _*)))
+      key.segs.fold(df)(live => df.filter(col("seg").isin(live: _*)))
     }
-    /** The segments [[segRead]] reads: None for a batch (unsegmented)
-      * index, else the manifest-committed live set ([[liveSegments]]). */
-    private def visibleSegments: Option[Seq[Long]] =
-      if (!hasSegments) None else Some(liveSegments)
-    /** The parquet files [[segRead]] would scan for `stage`, listed on the
-      * driver (no Spark job): the stage directory of a batch index, or the
-      * `seg=` directories of the visible segments — uncommitted or retired
-      * segment directories are never listed. Hidden and `_`-prefixed files
-      * are skipped, as Spark's file index skips them. */
-    def stageFiles(stage: String): Seq[String] = {
-      val root = java.nio.file.Paths.get(indexDir, stage)
-      val dirs = visibleSegments.fold(Seq(root))(_.map(s => root.resolve(s"seg=$s")))
-      dirs.filter(java.nio.file.Files.isDirectory(_)).flatMap { d =>
-        val s = java.nio.file.Files.list(d)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { f =>
-            val n = f.getFileName.toString
-            !n.startsWith("_") && !n.startsWith(".") && java.nio.file.Files.isRegularFile(f)
-          }.map(_.toString).toSeq.sorted
-        } finally s.close()
-      }
+    private def stageRelation(stage: String, name: String = "")(
+        relation: (DataFrame, StageKey) => DataFrame = (df, _) => df): DataFrame = {
+      val key = stageKey(stage)
+      memoized(if (name.isEmpty) stage else name, key)(relation(segRead(stage, key), key))
     }
-    def postings: DataFrame = segRead("postings")
+    /** Driver-side reader over the visible snapshot's files of `stage`
+      * (listed on the driver, no Spark job — see [[StageKey]]); its footer
+      * cache lives as long as the snapshot does. */
+    private[graft] def parquetFiles(stage: String): SnapshotReader.StageFiles = {
+      val key = stageKey(stage)
+      memoized(s"$stage.files", key)(new SnapshotReader.StageFiles(key.files.map(_._1)))
+    }
+
+    def postings: DataFrame = stageRelation("postings")()
     /** Whether the postings carry the inline per-posting norm stream
       * (`lenBytes`, [[graft.index.PostingCodec]]). When true, scoring is
       * join-free; a legacy index without the column falls back to the
       * (docId, lenByte) docstore-projection join. Resolved once per loaded
-      * index from the parquet schema — no data read. */
-    lazy val hasInlineLen: Boolean =
-      try postings.columns.contains("lenBytes") catch { case _: Throwable => false }
+      * index from the visible files' parquet footers on the driver — no
+      * data read, no Spark job. Only a missing stage (no visible postings
+      * file) reads as false; a footer that cannot be read is an error. */
+    lazy val hasInlineLen: Boolean = {
+      val files = parquetFiles("postings")
+      files.paths.nonEmpty && files.paths.forall(files.hasColumn(_, "lenBytes"))
+    }
     /** For an incrementally-built index (streaming segments) stats rows are
       * per (term, segment) and need summing; a batch index skips the extra
       * aggregation. */
-    def termstats: DataFrame = {
-      val raw = segRead("termstats")
-      if (hasSegments) raw.groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
+    def termstats: DataFrame = stageRelation("termstats") { (raw, key) =>
+      if (key.segs.isDefined) raw.groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
       else raw
     }
+    /** df of each query term present in the visible snapshot's termstats
+      * (a segmented index sums its per-segment rows); an absent term has
+      * no entry. Read on the driver ([[SnapshotReader]]): row groups whose
+      * `term` statistics exclude every wanted term are skipped, and no
+      * Spark job runs. */
+    def dfs(terms: Seq[String]): Map[String, Long] =
+      SnapshotReader.presentDfs(parquetFiles("termstats"), terms)
     /** Doc lengths: a columnar projection of the docstore (len/lenByte are
       * stored inline — parquet reads exactly these 3 columns); falls back
       * to a legacy standalone doclen/ stage when present. */
     def doclen: DataFrame =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(indexDir, "doclen")))
-        segRead("doclen")
-      else segRead("docstore").select("docId", "len", "lenByte")
-    def docstore: DataFrame = segRead("docstore")
-    /** Two-way phrase-pruning bloom store, if present AND covering every
-      * live segment. The J5 semi-join is an inner join on docId, so a
-      * bloom store missing some segment's docs would silently drop phrase
-      * candidates from those docs — partial coverage therefore disables
-      * pruning entirely (lossy-safe: the positional check stays exact). */
+        stageRelation("doclen")()
+      else stageRelation("docstore", "doclen")((df, _) => df.select("docId", "len", "lenByte"))
+    def docstore: DataFrame = stageRelation("docstore")()
     /** Committed delete tombstones (union of generations), if any — the
       * Lucene live-docs analog ([[graft.index.Tombstones]]). None on the
       * common no-deletes index: the query path pays one directory listing,
-      * no Spark job. */
-    def tombstones: Option[DataFrame] =
-      graft.index.Tombstones.read(spark, indexDir)
+      * no Spark job. Memoized per committed generation set AND its files:
+      * generation numbers restart at 1 once a compaction retires every
+      * generation, so the numbers alone do not name a snapshot. */
+    def tombstones: Option[DataFrame] = {
+      val gens = graft.index.Tombstones.committedGens(indexDir)
+      val root = java.nio.file.Paths.get(indexDir, "tombstones")
+      memoized("tombstones", (gens, dataFiles(gens.map(g => root.resolve(s"gen=$g")))))(
+        graft.index.Tombstones.read(spark, indexDir))
+    }
     /** Reversed-term dictionary (lazy, cached once per loaded index): the
       * leading-wildcard scale path. A `*suffix` glob has no literal prefix
       * to push into the sorted dictionary, so the naive rewrite LIKE-scans
@@ -192,14 +256,18 @@ object Searcher {
         .sortWithinPartitions("rev")
         .cache()
     }
+    /** Two-way phrase-pruning bloom store, if present AND covering every
+      * live segment. The J5 semi-join is an inner join on docId, so a
+      * bloom store missing some segment's docs would silently drop phrase
+      * candidates from those docs — partial coverage therefore disables
+      * pruning entirely (lossy-safe: the positional check stays exact). */
     def bloom: Option[DataFrame] = {
       val p = java.nio.file.Paths.get(indexDir, "bloom")
-      if (!java.nio.file.Files.exists(p)) None
-      else if (!hasSegments) Some(spark.read.parquet(s"$indexDir/bloom"))
-      else {
-        val live = liveSegments
-        if (!live.forall(s => java.nio.file.Files.exists(p.resolve(s"seg=$s")))) None
-        else Some(spark.read.parquet(s"$indexDir/bloom").filter(col("seg").isin(live: _*)))
+      val key = stageKey("bloom")
+      memoized("bloom", key) {
+        if (!java.nio.file.Files.exists(p) ||
+            key.segs.exists(!_.forall(s => java.nio.file.Files.exists(p.resolve(s"seg=$s"))))) None
+        else Some(segRead("bloom", key))
       }
     }
     /** Trigram posting runs ([[graft.index.TrigramIndex]]), if present AND
@@ -232,20 +300,28 @@ object Searcher {
       * MINIMUM over segments, the distance every table covers).
       * A `def` (like [[postings]]): the segment set is re-checked per
       * call, so an append lacking a fuzzy table stops serving the
-      * segmented stage immediately. */
-    def fuzzy: Option[(DataFrame, Int, Boolean)] =
-      if (!hasSegments) {
-        if (!graft.index.Manifest.isCommitted(indexDir, "fuzzy")) None
-        else Some((spark.read.parquet(s"$indexDir/fuzzy"),
-          graft.index.FuzzyIndex.stageMaxDist(indexDir), false))
-      } else {
-        val live = liveSegments
-        val dists = live.map(s => graft.index.FuzzyIndex.segMaxDist(indexDir, s))
-        if (live.isEmpty || dists.exists(_ <= 0)) None
-        else Some((spark.read.option("basePath", s"$indexDir/fuzzy")
-          .parquet(live.map(s => s"$indexDir/fuzzy/seg=$s"): _*),
-          dists.min, true))
+      * segmented stage immediately; the relation itself is resolved once
+      * per snapshot. */
+    def fuzzy: Option[(DataFrame, Int, Boolean)] = {
+      val key = stageKey("fuzzy")
+      key.segs match {
+        case None =>
+          val committed = graft.index.Manifest.isCommitted(indexDir, "fuzzy")
+          val dist = if (committed) graft.index.FuzzyIndex.stageMaxDist(indexDir) else 0
+          memoized("fuzzy", (key, committed, dist)) {
+            if (!committed) None
+            else Some((spark.read.parquet(s"$indexDir/fuzzy"), dist, false))
+          }
+        case Some(live) =>
+          val dists = live.map(s => graft.index.FuzzyIndex.segMaxDist(indexDir, s))
+          memoized("fuzzy", (key, dists)) {
+            if (live.isEmpty || dists.exists(_ <= 0)) None
+            else Some((spark.read.option("basePath", s"$indexDir/fuzzy")
+              .parquet(live.map(s => s"$indexDir/fuzzy/seg=$s"): _*),
+              dists.min, true))
+          }
       }
+    }
     /** Persisted coarse super-block metadata (term, lo, hi) for
       * [[MetaStore]]'s two-level fetch. A batch index serves its
       * `superblocks/` stage; a SEGMENTED index serves the union of
@@ -254,18 +330,24 @@ object Searcher {
       * them); otherwise the per-query aggregation over postings remains
       * the fallback. A `def` for the same append-staleness reason as
       * [[fuzzy]]. */
-    def superBlocks: Option[DataFrame] =
-      if (!hasSegments) {
-        if (!graft.index.Manifest.isCommitted(indexDir, "superblocks")) None
-        else Some(spark.read.parquet(s"$indexDir/superblocks"))
-      } else {
-        val live = liveSegments
-        val p = java.nio.file.Paths.get(indexDir, "superblocks")
-        if (live.isEmpty ||
-            !live.forall(s => java.nio.file.Files.exists(p.resolve(s"seg=$s")))) None
-        else Some(spark.read.option("basePath", s"$indexDir/superblocks")
-          .parquet(live.map(s => s"$indexDir/superblocks/seg=$s"): _*))
+    def superBlocks: Option[DataFrame] = {
+      val key = stageKey("superblocks")
+      val committed = key.segs.isEmpty &&
+        graft.index.Manifest.isCommitted(indexDir, "superblocks")
+      memoized("superblocks", (key, committed)) {
+        key.segs match {
+          case None =>
+            if (!committed) None
+            else Some(spark.read.parquet(s"$indexDir/superblocks"))
+          case Some(live) =>
+            val p = java.nio.file.Paths.get(indexDir, "superblocks")
+            if (live.isEmpty ||
+                !live.forall(s => java.nio.file.Files.exists(p.resolve(s"seg=$s")))) None
+            else Some(spark.read.option("basePath", s"$indexDir/superblocks")
+              .parquet(live.map(s => s"$indexDir/superblocks/seg=$s"): _*))
+        }
       }
+    }
   }
 
   /** Load an index for querying. `asOfSeg` opens a SNAPSHOT read of a
@@ -376,9 +458,7 @@ object Searcher {
     // (`qq_mem_engine.h:345-347`). Disjunctive (SearchOperator::OR,
     // declared `types.h:70` but never implemented by the reference —
     // completed here): absent terms contribute nothing.
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin((terms0 ++ exTerms).distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] = ix.dfs((terms0 ++ exTerms).distinct)
     if (conjunctive && terms0.exists(t => !dfs.contains(t)))
       return spark.emptyDataset[Hit]
     val terms = if (conjunctive) terms0 else terms0.filter(dfs.contains)
@@ -496,7 +576,6 @@ object Searcher {
       blocks.join(keysDf, Seq("term", "firstDocId"), "left_semi")
     }
 
-    val lenByteOf = ix.doclen.select($"docId", $"lenByte")
     // per-SLOT scoring: the reference (and the oracle) sums a doc's score
     // slot by slot in query order (`scoring.h:133-142`), while a hash-agg
     // sum(partScore) accumulates in partition-dependent order — equal up to
@@ -668,7 +747,9 @@ object Searcher {
       if (!phrase) scoreOf(pruned)
       else minusExcluded({
           val m = matched.toDF("term", "docId", "tf", "lenByte")
-          if (ix.hasInlineLen) m else m.drop("lenByte").join(lenByteOf, "docId")
+          // only a legacy index reads the (docId, lenByte) projection
+          if (ix.hasInlineLen) m
+          else m.drop("lenByte").join(ix.doclen.select($"docId", $"lenByte"), "docId")
         }
         .join(slotDf, "term")
         .withColumn("partScore", partScoreExpr)
@@ -879,9 +960,7 @@ object Searcher {
       "a term may belong to only one synonym group")
     if (grps.isEmpty || k <= 0) return spark.emptyDataset[Hit]
     val allMembers = grps.flatten
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(allMembers: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] = ix.dfs(allMembers)
     val liveGroups = grps.map(_.filter(dfs.contains))
     if (liveGroups.exists(_.isEmpty)) return spark.emptyDataset[Hit] // P2 analog
     val liveTerms = liveGroups.flatten
@@ -1084,8 +1163,7 @@ object Searcher {
     val tfMap: Map[String, Int] = graft.core.Tokenizer.terms(body.head)
       .groupBy(identity).map { case (t, xs) => t -> xs.length }
     if (tfMap.isEmpty) return spark.emptyDataset[Hit]
-    val dfs = ix.termstats.filter($"term".isin(tfMap.keys.toSeq: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs = ix.dfs(tfMap.keys.toSeq)
     val ranked = tfMap.toSeq
       .flatMap { case (t, tf) =>
         dfs.get(t).map(df => (t, math.round(tf * Bm25.idf(ix.nDocs, df) * 1e6)))
@@ -1112,9 +1190,7 @@ object Searcher {
     val terms = queryTerms.distinct
     if (terms.isEmpty || excludeTerms.exists(terms.contains)) return empty
     val ex = excludeTerms.distinct
-    val dfsAll: Map[String, Long] = ix.termstats
-      .filter($"term".isin(terms ++ ex: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfsAll: Map[String, Long] = ix.dfs(terms ++ ex)
     if (terms.exists(t => !dfsAll.contains(t))) return empty
     val blocks = ix.postings.filter($"term".isin(terms ++ ex: _*))
     val posBlocks = ix.postings.filter($"term".isin(terms: _*))
@@ -1250,10 +1326,8 @@ object Searcher {
     if (allTerms.isEmpty || k <= 0) return empty
     // one stats fetch covers positive AND exclusion terms (the latter so
     // the exclusion meta fetch can df-estimate its direct-path escape)
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(
-        (allTerms ++ excludes.valuesIterator.flatten).distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] =
+      ix.dfs((allTerms ++ excludes.valuesIterator.flatten).distinct)
     val idfs = dfs.map { case (t, d) => t -> Bm25.idf(ix.nDocs, d) }
     // P2 guard: a conjunctive query is live only if EVERY term exists; a
     // disjunctive one if ANY does (absent terms drop out of its term list).
@@ -1511,9 +1585,7 @@ object Searcher {
     def empty = Seq.empty[(Int, Int, Int, Double)].toDF("queryId", "rank", "docId", "score")
     val allTerms = queries.flatMap(_._2).distinct
     if (allTerms.isEmpty || k <= 0) return empty
-    val dfs: Map[String, Long] = ix.termstats
-      .filter($"term".isin(allTerms: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val dfs: Map[String, Long] = ix.dfs(allTerms)
     // P2 guard — phrase queries are conjunctive by definition
     val live = queries.filter(q => q._2.nonEmpty && q._2.forall(dfs.contains))
     if (live.isEmpty) return empty

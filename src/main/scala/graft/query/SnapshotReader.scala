@@ -3,9 +3,10 @@ package graft.query
 import graft.index.PostingCodec
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
+import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.DummyRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
 import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
@@ -14,29 +15,33 @@ import scala.jdk.CollectionConverters._
 
 /** Driver-side reads of a loaded index's postings and termstats — the
   * serving path's cache-miss I/O, with no Spark job. The file set is the
-  * index's committed view ([[Searcher.LoadedIndex.stageFiles]]) resolved
+  * index's committed view ([[Searcher.LoadedIndex.parquetFiles]]) resolved
   * ONCE, at construction: every read sees exactly that snapshot, never a
   * segment committed later. A pinned file that compaction has since
   * retired raises [[LocalService.SnapshotRetiredException]].
   *
   * Each read is a point lookup by term through parquet-mr's column API:
-  * the `term` column chunk is scanned for the wanted terms, and the other
-  * requested columns are read only in row groups that matched, and only
-  * their matching rows are materialized ("read as needed"; the record API
-  * would assemble every row). Footers are cached per file; nothing else
-  * stays resident. */
-private[graft] final class SnapshotReader(ix: Searcher.LoadedIndex) {
+  * row groups whose `term` min/max statistics exclude every wanted term
+  * are skipped from the footer alone, the `term` column chunk of the rest
+  * is scanned for the wanted terms, and the other requested columns are
+  * read only in row groups that matched, and only their matching rows are
+  * materialized ("read as needed"; the record API would assemble every
+  * row). Footers are cached per file for as long as the loaded index's
+  * snapshot lasts; nothing else stays resident. */
+private[graft] final class SnapshotReader private (postings: SnapshotReader.StageFiles,
+                                                   termstats: SnapshotReader.StageFiles) {
   import SnapshotReader._
 
-  private val postings = new StageFiles(ix.stageFiles("postings"))
-  private val termstats = new StageFiles(ix.stageFiles("termstats"))
+  /** A reader over the snapshot `ix` sees now; it shares that snapshot's
+    * footer caches. */
+  def this(ix: Searcher.LoadedIndex) =
+    this(ix.parquetFiles("postings"), ix.parquetFiles("termstats"))
 
   /** df per term, summed over the snapshot's termstats rows (one per
     * segment on a streamed index); 0 for an absent term. */
   def dfs(terms: Seq[String]): Map[String, Long] = {
-    val sums = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    termstats.lookup(terms.toSet, Seq("df")).foreach(r => sums(r.term) += r.long(0))
-    terms.map(t => t -> sums(t)).toMap
+    val present = presentDfs(termstats, terms)
+    terms.map(t => t -> present.getOrElse(t, 0L)).toMap
   }
 
   /** Decoded posting lists of `terms` (blocks in firstDocId order across
@@ -87,43 +92,85 @@ private[graft] object SnapshotReader {
     def bytes(i: Int): Array[Byte] = values(i).asInstanceOf[Array[Byte]]
   }
 
+  /** df of each of `terms` that has termstats rows, summed over them
+    * (one row per segment on a streamed index); absent terms have no
+    * entry. */
+  def presentDfs(termstats: StageFiles, terms: Seq[String]): Map[String, Long] = {
+    val sums = scala.collection.mutable.Map.empty[String, Long]
+    termstats.lookup(terms.toSet, Seq("df"))
+      .foreach(r => sums(r.term) = sums.getOrElse(r.term, 0L) + r.long(0))
+    sums.toMap
+  }
+
+  /** Row groups of a file that may hold one of `terms`: those whose
+    * `term` column chunk has no min/max statistics, or whose [min, max]
+    * range contains a wanted term. */
+  def rowGroupsFor(footer: ParquetMetadata, terms: Set[String]): Seq[Int] = {
+    val wanted = terms.toSeq.map(Binary.fromString)
+    footer.getBlocks.asScala.toSeq.zipWithIndex.collect {
+      case (block, g) if mayHold(block, wanted) => g
+    }
+  }
+
+  private def mayHold(block: BlockMetaData, wanted: Seq[Binary]): Boolean =
+    block.getColumns.asScala.find(_.getPath.toDotString == "term")
+      .map(_.getStatistics.asInstanceOf[Statistics[Binary]]) match {
+      case Some(st) if st != null && !st.isEmpty && st.hasNonNullValue =>
+        val cmp = st.comparator()
+        wanted.exists(w => cmp.compare(st.genericGetMin, w) <= 0 &&
+          cmp.compare(w, st.genericGetMax) <= 0)
+      case _ => true
+    }
+
   /** The parquet files of one stage, with a per-file footer cache. */
-  private final class StageFiles(paths: Seq[String]) {
+  private[graft] final class StageFiles(val paths: Seq[String]) {
     private val footers = new java.util.concurrent.ConcurrentHashMap[String, ParquetMetadata]()
     private val conf = new org.apache.hadoop.conf.Configuration()
 
-    private def open(path: String): ParquetFileReader = {
-      val file = new LocalInputFile(java.nio.file.Paths.get(path))
-      // options per reader: a reader's close() releases its options' codec
-      // factory, which must not pull decompressors from concurrent readers
-      val options = HadoopReadOptions.builder(conf).build()
-      try {
-        val footer = footers.get(path)
-        if (footer != null) new ParquetFileReader(file, footer, options, file.newStream())
-        else {
-          val r = new ParquetFileReader(file, options)
-          footers.put(path, r.getFooter)
-          r
-        }
-      } catch {
+    // options per reader: a reader's close() releases its options' codec
+    // factory, which must not pull decompressors from concurrent readers
+    private def options() = HadoopReadOptions.builder(conf).build()
+
+    private def retiredIfMissing[A](path: String)(body: => A): A =
+      try body catch {
         case e @ (_: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException) =>
           throw new LocalService.SnapshotRetiredException(path, e)
       }
+
+    private def footer(path: String): ParquetMetadata = {
+      val cached = footers.get(path)
+      if (cached != null) cached
+      else retiredIfMissing(path) {
+        val r = new ParquetFileReader(new LocalInputFile(java.nio.file.Paths.get(path)), options())
+        try { footers.put(path, r.getFooter); r.getFooter } finally r.close()
+      }
     }
 
+    private def open(path: String): ParquetFileReader = retiredIfMissing(path) {
+      val file = new LocalInputFile(java.nio.file.Paths.get(path))
+      new ParquetFileReader(file, footer(path), options(), file.newStream())
+    }
+
+    /** Whether the file at `path` (one of [[paths]]) has a column `name`. */
+    def hasColumn(path: String, name: String): Boolean =
+      footer(path).getFileMetaData.getSchema.containsField(name)
+
     /** Rows whose `term` is in `terms`, across every file and row group,
-      * with `cols` read at those rows only. `where` first reads its own
-      * columns at the term-matched rows and keeps the rows it accepts, so
-      * `cols` — typically the payload — is read only for those. */
+      * with `cols` read at those rows only. Row groups the footer's term
+      * statistics rule out are never read; a file with none left is never
+      * opened. `where` first reads its own columns at the term-matched
+      * rows and keeps the rows it accepts, so `cols` — typically the
+      * payload — is read only for those. */
     def lookup(terms: Set[String], cols: Seq[String],
                where: (Seq[String], Row => Boolean) = (Nil, _ => true)): Seq[Row] = {
       if (terms.isEmpty) return Nil
       val wanted = terms.toArray.map(Binary.fromString)
       val out = Seq.newBuilder[Row]
       paths.foreach { path =>
-        val reader = open(path)
-        try {
-          reader.getRowGroups.asScala.indices.foreach { g =>
+        val groups = rowGroupsFor(footer(path), terms)
+        if (groups.nonEmpty) {
+          val reader = open(path)
+          try groups.foreach { g =>
             val rowCount = reader.getRowGroups.get(g).getRowCount.toInt
             val (hit, hitTerms) = matchTerms(reader, g, rowCount, wanted)
             if (hit.nonEmpty) {
@@ -140,8 +187,8 @@ private[graft] object SnapshotReader {
                 kept.indices.foreach(i => out += new Row(termOf(kept(i)), got.map(_(i))))
               }
             }
-          }
-        } finally reader.close()
+          } finally reader.close()
+        }
       }
       out.result()
     }

@@ -73,10 +73,8 @@ object StreamingIndexer {
         math.max(1, partitions / 4))
       .write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$indexDir/superblocks/seg=$segId")
-    spark.read.parquet(s"$indexDir/superblocks/seg=$segId")
-      .groupBy("term")
-      .agg(sum($"df").cast("long").as("df"), sum($"cf").cast("long").as("cf"))
-      .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/termstats/seg=$segId")
+    IndexBuilder.writeTermStats(spark.read.parquet(s"$indexDir/superblocks/seg=$segId"),
+      math.max(1, partitions / 4), s"$indexDir/termstats/seg=$segId")
 
     // per-segment SymSpell delete table (fuzzy probes over streamed
     // indexes, [[graft.index.FuzzyIndex.probeSegmented]]); opt-in like
@@ -234,11 +232,8 @@ object StreamingIndexer {
         math.max(1, partitions / 4))
       .write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$indexDir/superblocks/seg=$newSeg")
-    spark.read.parquet(s"$indexDir/superblocks/seg=$newSeg")
-      .groupBy("term")
-      .agg(sum($"df").cast("long").as("df"), sum($"cf").cast("long").as("cf"))
-      .write.mode("overwrite").option("compression", "zstd")
-      .parquet(s"$indexDir/termstats/seg=$newSeg")
+    IndexBuilder.writeTermStats(spark.read.parquet(s"$indexDir/superblocks/seg=$newSeg"),
+      math.max(1, partitions / 4), s"$indexDir/termstats/seg=$newSeg")
     srcStore.drop("seg")
       .write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$indexDir/docstore/seg=$newSeg")

@@ -1527,6 +1527,96 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacyDir))
     }
   }
+
+  test("warm LoadedIndex: Searcher.search runs only its scoring query's jobs") {
+    built
+    val warm = Searcher.load(spark, tmp)
+    val queries = Seq((Seq("hash", "seed"), false), (Seq("if", "return"), true))
+    def run(terms: Seq[String], phrase: Boolean) =
+      Searcher.search(warm, terms, 10, phrase = phrase).collect().sortBy(_.rank).toSeq
+    val cold = queries.map { case (t, p) => run(t, p) }
+    queries.zip(cold).foreach { case ((terms, phrase), want) =>
+      // schema inference and the termstats collect would each start jobs
+      // outside the scoring query's one SQL execution
+      val (execs, got) = SparkJobs.executionsDuring(spark)(run(terms, phrase))
+      assert(execs.nonEmpty && !execs.contains(null),
+        s"$terms: a job ran outside any SQL execution: $execs")
+      assert(execs.distinct.size == 1, s"$terms: jobs of several queries ran: $execs")
+      assert(got == want)
+      assert(got.map(_.docId) == Oracle.search(oracle, terms, 10, phrase = phrase).map(_.docId))
+    }
+    assert(warm.postings eq warm.postings, "an unchanged snapshot must reuse its relation")
+  }
+
+  test("hasInlineLen: a missing postings stage reads false, an unreadable footer throws") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_inline").toString
+    try {
+      def fresh = Searcher.LoadedIndex(spark, dir, 0L, 0.0, Array.empty)
+      assert(!fresh.hasInlineLen)
+      val part = java.nio.file.Paths.get(dir, "postings", "part-00000.parquet")
+      java.nio.file.Files.createDirectories(part.getParent)
+      java.nio.file.Files.write(part, "not a parquet file".getBytes("UTF-8"))
+      intercept[RuntimeException](fresh.hasInlineLen)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("SnapshotReader skips row groups whose term range excludes every wanted term") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_groups").toString
+    try {
+      val rows = (0 until 3000).map(i => (f"t$i%05d", (i % 7 + 1).toLong, 1L))
+      rows.toDF("term", "df", "cf").coalesce(1).sortWithinPartitions("term")
+        .write.option("parquet.block.size", 4096).parquet(s"$dir/termstats")
+      val file = new java.io.File(s"$dir/termstats").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(file))
+      val footer = try r.getFooter finally r.close()
+      val nGroups = footer.getBlocks.size
+      assert(nGroups >= 3, s"want several row groups, got $nGroups")
+      val first = graft.query.SnapshotReader.rowGroupsFor(footer, Set("t00000"))
+      val last = graft.query.SnapshotReader.rowGroupsFor(footer, Set("t02999"))
+      assert(first == Seq(0) && last == Seq(nGroups - 1))
+      assert(graft.query.SnapshotReader.rowGroupsFor(footer, Set("a", "u")).isEmpty)
+      assert(graft.query.SnapshotReader.rowGroupsFor(footer, Set("t00000", "t02999")) ==
+        Seq(0, nGroups - 1))
+      val ix = Searcher.LoadedIndex(spark, dir, 0L, 0.0, Array.empty)
+      val terms = Seq("t00000", "t01234", "t02999", "t1", "zzz")
+      assert(ix.dfs(terms) == rows.filter(r => terms.contains(r._1)).map(r => r._1 -> r._2).toMap)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a built index's termstats files hold disjoint, term-sorted ranges") {
+    built
+    val files = new java.io.File(s"$tmp/termstats").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.toPath).toSeq
+    assert(files.size >= 2, s"want several termstats files, got ${files.size}")
+    val footers = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(f))
+      try r.getFooter finally r.close()
+    }
+    // each file's rows are term-sorted, so its row groups' ranges are too
+    files.foreach { f =>
+      val terms = spark.read.parquet(f.toString).select("term").collect().map(_.getString(0)).toSeq
+      assert(terms.nonEmpty && terms == terms.sorted, s"$f is not term-sorted")
+    }
+    val ranges = footers.map { footer =>
+      import scala.jdk.CollectionConverters._
+      val stats = footer.getBlocks.asScala.map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "term").get.getStatistics)
+      (stats.map(_.minAsString).min, stats.map(_.maxAsString).max)
+    }.sortBy(_._1)
+    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"overlapping termstats files: $ranges")
+    }
+    // so a df lookup of one term keeps the row groups of one file only
+    Seq("if", "hash", "zzz_absent").foreach { t =>
+      val kept = footers.count(f => graft.query.SnapshotReader.rowGroupsFor(f, Set(t)).nonEmpty)
+      assert(kept <= 1, s"$t: $kept files kept")
+    }
+  }
 }
 
 object TestQueries {
@@ -1546,19 +1636,27 @@ object TestQueries {
 object SparkJobs {
   private val Fence = "spark-jobs-fence"
 
-  /** (jobs started while `body` ran, its result). Listener events arrive
-    * asynchronously and in order, so a marker job submitted after `body`
-    * fences the count: once its start is delivered, so is every earlier
-    * job's. A marker before `body` drains earlier jobs' late events. */
+  /** (jobs started while `body` ran, its result). */
   def during[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (Int, A) = {
+    val (execs, out) = executionsDuring(spark)(body)
+    (execs.size, out)
+  }
+
+  /** (the SQL execution id of each job started while `body` ran — null
+    * for a job outside any SQL execution —, its result). Listener events
+    * arrive asynchronously and in order, so a marker job submitted after
+    * `body` fences the record: once its start is delivered, so is every
+    * earlier job's. A marker before `body` drains earlier jobs' late
+    * events. */
+  def executionsDuring[A](spark: org.apache.spark.sql.SparkSession)(body: => A): (Seq[String], A) = {
     val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val fences = new java.util.concurrent.Semaphore(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == Fence)
           fences.release()
-        else started.incrementAndGet()
+        else started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
     }
     def fence(): Unit = {
       sc.setJobGroup(Fence, "fence")
@@ -1568,10 +1666,11 @@ object SparkJobs {
     sc.addSparkListener(listener)
     try {
       fence()
-      started.set(0)
+      started.clear()
       val out = body
       fence()
-      (started.get(), out)
+      import scala.jdk.CollectionConverters._
+      (started.asScala.toSeq.map(_.orNull), out)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -642,15 +642,110 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val terms = Seq("alpha", "beta", "onlylast", "common301", "common5", "zzz_absent")
       Seq(Searcher.load(spark, dir), Searcher.load(spark, dir, asOfSeg = Some(1L))).foreach { ix =>
-        assert(ix.stageFiles("postings").nonEmpty &&
-          !ix.stageFiles("postings").exists(_.contains("seg=7")))
-        assert(ix.stageFiles("postings").exists(_.contains("seg=2")) == ix.asOfSeg.isEmpty)
+        val files = ix.parquetFiles("postings").paths
+        assert(files.nonEmpty && !files.exists(_.contains("seg=7")))
+        assert(files.exists(_.contains("seg=2")) == ix.asOfSeg.isEmpty)
         SnapshotReads.assertSameAsSpark(spark, ix, new graft.query.SnapshotReader(ix), terms)
       }
       val pinned = new graft.query.SnapshotReader(Searcher.load(spark, dir, asOfSeg = Some(1L)))
       assert(pinned.dfs(Seq("alpha", "common341")) == Map("alpha" -> 340L, "common341" -> 0L))
       val alpha = pinned.lists(Seq("alpha"), withPositions = true)("alpha")
       assert(alpha.docIds.toSeq == (0 until 340) && alpha.positions.forall(_.toSeq == Seq(0, 3)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a held LoadedIndex resolves each snapshot once: appends, pins and compaction") {
+    val s = spark
+    import s.implicits._
+    def df(lo: Int, hi: Int, extra: String) = (lo until hi).map { i =>
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha common$i$extra")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 60, ""), dir, segId = 0, partitions = 2)
+      val ix = Searcher.load(spark, dir)
+      val pinned = Searcher.load(spark, dir, asOfSeg = Some(0L))
+      def docs(i: Searcher.LoadedIndex, t: String): Set[Int] =
+        Searcher.search(i, Seq(t), 500).collect().map(_.docId).toSet
+      val terms = Seq("alpha", "late")
+      assert(ix.dfs(terms) == Map("alpha" -> 60L))
+      val (p0, t0, pp0) = (ix.postings, ix.termstats, pinned.postings)
+      assert((ix.postings eq p0) && (ix.termstats eq t0), "unchanged snapshot re-resolved")
+      StreamingIndexer.appendSegment(spark, df(60, 80, " late"), dir, segId = 1, partitions = 2)
+      // unpinned: the append is a new snapshot — fresh relations, new dfs
+      val (p1, t1) = (ix.postings, ix.termstats)
+      assert((p1 ne p0) && (t1 ne t0))
+      assert(ix.dfs(terms) == Map("alpha" -> 80L, "late" -> 20L))
+      assert(docs(ix, "late") == (60 until 80).toSet)
+      // pinned at segment 0: same snapshot, same relation, same answers
+      assert(pinned.postings eq pp0)
+      assert(pinned.dfs(terms) == Map("alpha" -> 60L))
+      assert(docs(pinned, "late").isEmpty && docs(pinned, "alpha") == (0 until 60).toSet)
+      StreamingIndexer.compact(spark, dir, partitions = 2)
+      // compaction rewrites every stage into a new segment: fresh relations
+      // whose answers equal a fresh load's
+      assert((ix.postings ne p1) && (ix.termstats ne t1))
+      assert(ix.dfs(terms) == Map("alpha" -> 80L, "late" -> 20L))
+      val fresh = Searcher.load(spark, dir)
+      assert(docs(ix, "late") == docs(fresh, "late") && docs(ix, "alpha") == (0 until 80).toSet)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a held LoadedIndex sees tombstones republished after a compaction retired them") {
+    val s = spark
+    import s.implicits._
+    def df(rows: Seq[(String, String)]) =
+      rows.map { case (p, text) => ("r", p, "c", "txt", text) }
+        .toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tomb_memo").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(Seq("p0" -> "alpha one", "p1" -> "alpha two",
+        "p2" -> "alpha three")), dir, segId = 0, partitions = 2)
+      val ix = Searcher.load(spark, dir)
+      def docs(i: Searcher.LoadedIndex, t: String): Set[Int] =
+        Searcher.search(i, Seq(t), 50).collect().map(_.docId).toSet
+      def nextSeg = StreamingIndexer.committedSegments(dir).max + 1
+      assert(StreamingIndexer.upsertSegment(spark, df(Seq("p1" -> "alpha twice")), dir,
+        segId = nextSeg, partitions = 2) == 1L)
+      assert(graft.index.Tombstones.committedGens(dir) == Seq(1L))
+      assert(docs(ix, "two").isEmpty && docs(ix, "twice").size == 1)
+      // the compaction applies and retires every generation, so the next
+      // upsert publishes generation 1 again, with other files
+      StreamingIndexer.compact(spark, dir, partitions = 2)
+      assert(graft.index.Tombstones.committedGens(dir).isEmpty)
+      assert(StreamingIndexer.upsertSegment(spark, df(Seq("p2" -> "alpha thrice")), dir,
+        segId = nextSeg, partitions = 2) == 1L)
+      assert(graft.index.Tombstones.committedGens(dir) == Seq(1L))
+      val fresh = Searcher.load(spark, dir)
+      assert(docs(ix, "three").isEmpty, "the new tombstone is not applied")
+      assert(docs(ix, "alpha") == docs(fresh, "alpha") && docs(ix, "alpha").size == 3)
+      assert(docs(ix, "thrice") == docs(fresh, "thrice") && docs(ix, "thrice").size == 1)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("LoadedIndex.dfs equals the Spark termstats aggregation on a segmented index") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, sum}
+    def df(lo: Int, hi: Int) = (lo until hi).map { i =>
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha w${i % 5} common$i alpha")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_dfs").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 50), dir, segId = 0, partitions = 2)
+      StreamingIndexer.appendSegment(spark, df(50, 70), dir, segId = 1, partitions = 2)
+      StreamingIndexer.appendSegment(spark, df(70, 75), dir, segId = 2, partitions = 2)
+      val terms = Seq("alpha", "w0", "w4", "common3", "common72", "zzz_absent")
+      Seq(None, Some(1L)).foreach { asOf =>
+        val ix = Searcher.load(spark, dir, asOfSeg = asOf)
+        val live = StreamingIndexer.committedSegments(dir).filter(seg => asOf.forall(seg <= _))
+        val want = spark.read.parquet(s"$dir/termstats")
+          .filter(col("seg").isin(live: _*) && col("term").isin(terms: _*))
+          .groupBy("term").agg(sum("df").as("df"))
+          .as[(String, Long)].collect().toMap
+        assert(want.contains("common3") && want.size == (if (asOf.isEmpty) 5 else 4))
+        assert(ix.dfs(terms) == want, s"asOfSeg $asOf")
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }
