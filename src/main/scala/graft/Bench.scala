@@ -361,6 +361,7 @@ object Bench {
     // (-1 / {} = phase not reached)
     var queriesJson = "{}"
     var queriesTotal = -1.0
+    var queriesFailedJson = "[]"
     var searchJson = """{"n_queries":-1,"sec":-1,"qps":-1,"served_qps":-1,"served_qps_16":-1,"served_p50_ms":-1,"served_p99_ms":-1,"cache_hits":-1,"cache_misses":-1,"cache_evictions":-1,"cache_hit_rate":-1}"""
     var httpJson = """{"n_wire_queries":-1,"http_qps_16":-1,"http_p50_ms":-1,"http_p99_ms":-1}"""
     var streamingJson = """{"docs":-1,"docs_per_sec":-1,"compact_sec":-1}"""
@@ -395,7 +396,7 @@ object Bench {
     }
     def artifact(partial: String): String = {
       val p = if (partial == null) "" else s""""partial":"$partial","""
-      s"""{$p"metric":"total","value":$queriesTotal,"unit":"sec","queries":$queriesJson,"sf":"$sfDir","indexing":$indexingJson,"search":$searchJson,"streaming":$streamingJson,"match_rate":$matchRateV}"""
+      s"""{$p"metric":"total","value":$queriesTotal,"unit":"sec","queries":$queriesJson,"queries_failed":$queriesFailedJson,"sf":"$sfDir","indexing":$indexingJson,"search":$searchJson,"streaming":$streamingJson,"match_rate":$matchRateV}"""
     }
     writeBenchFile("BENCH_partial.json", artifact("warmup_done"))
     // under-supported override: a level whose minimum has <2 supporting
@@ -445,14 +446,20 @@ object Bench {
     // --- operator queries + search ---
     val spark = session(8)
     spark.sparkContext.setLogLevel("WARN")
+    // a query that throws is a failure, not a time: it is named in
+    // "queries_failed" and its seconds stay out of the total
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (_, sec) = timed {
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+      val (ok, sec) = timed {
+        try { fn(spark, sfDir).count(); true }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"query $name failed: $e"); false }
       }
-      name -> sec
+      (name, ok, sec)
     }
-    queriesJson = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    queriesTotal = results.map(_._2).sum
+    val (passed, failed) = results.partition(_._2)
+    queriesJson = passed.map { case (k, _, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    queriesFailedJson = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    queriesTotal = passed.map(_._3).sum
     writeBenchFile("BENCH_partial.json", artifact("queries_done"))
 
     // --- BM25 query-set throughput + oracle match rate on the built index ---

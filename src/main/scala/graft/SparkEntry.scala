@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{LenByte, Tokenizer, Varint}
+import graft.core.{Kernel, LenByte, Tokenizer, Varint}
 import graft.index.{IndexBuilder, PostingCodec, TrigramIndex}
 import graft.ops.{Dedup, Multimodal, Similarity, Sketch, TextOps}
 import graft.plans.{IndexCatalog, IndexRewrite}
@@ -355,7 +355,7 @@ object SparkEntry {
       .flatMapGroups { (docId, rows) =>
         val byTerm = rows.map(r => r._1 -> r._3).toMap
         if (terms.forall(byTerm.contains) &&
-            graft.core.Oracle.phraseMatch(terms.map(byTerm)))
+            Kernel.phraseAt(terms.map(byTerm).toArray, null, new Array[Int](terms.size)))
           Iterator.single(docId.toLong)
         else Iterator.empty
       }
@@ -1103,7 +1103,7 @@ object SparkEntry {
 
     // J4: phrase match driven by the positional index — decode positions for
     // the two query terms' blocks only, then adjusted-position intersection
-    // per doc (`Oracle.phraseMatch`, reference `query_processing.h:282-362`)
+    // per doc (`Kernel.phraseAt`, reference `query_processing.h:282-362`)
     "j4_phrase" -> ((s, dir) =>
       phraseMatchedDocIds(s, dir, Seq("table", "scan")).orderBy("doc_id")),
 
@@ -1136,7 +1136,7 @@ object SparkEntry {
         .flatMapGroups { (docId, rows) =>
           val byTerm = rows.map(r => r._1 -> r._3).toMap
           if (terms.forall(byTerm.contains) &&
-              graft.core.Oracle.proximityMatch(terms.map(byTerm), 3))
+              Kernel.proximity(terms.map(byTerm).toArray, 3, new Array[Int](terms.size)))
             Iterator.single(docId.toLong)
           else Iterator.empty
         }
@@ -1564,11 +1564,11 @@ object SparkEntry {
           val byTerm = rows.map(r => r._1 -> (r._3, r._4)).toMap
           if (!terms.forall(byTerm.contains)) Iterator.empty
           else {
-            val starts = graft.core.Oracle.phraseMatchStarts(terms.map(t => byTerm(t)._1))
+            val starts = Kernel.phraseStarts(terms.map(t => byTerm(t)._1).toArray)
             starts.iterator.flatMap { p =>
               terms.iterator.zipWithIndex.map { case (t, slot) =>
                 val (ps0, os0) = byTerm(t)
-                val (st, en) = os0(java.util.Arrays.binarySearch(ps0, p + slot))
+                val (st, en) = os0(Kernel.lowerBound(ps0, 0, ps0.length, p + slot))
                 (docId.toLong, (p + slot).toLong, slot.toLong, t, st.toLong, en.toLong)
               }
             }

@@ -1,21 +1,25 @@
 package graft.core
 
-/** Single-JVM reference oracle: a direct, small port of the reference
-  * engine's query-processing semantics, used for differential testing of the
-  * distributed Spark pipeline (mirrors the reference's own engine-vs-engine
-  * differential tests, `tests_15.cc:158-211`).
+/** Single-JVM reference oracle: the query semantics restated as naively
+  * as they can be, to check the engines against. It shares no matching
+  * code with them: the engines run one shared kernel (leapfrog, merge-scan
+  * phrase check, greedy proximity, bounded heap); this file filters by
+  * set membership, checks phrases by set intersection, enumerates every
+  * ordered span for proximity, and sorts all candidates for top-k. Only
+  * [[Bm25]] and [[LenByte]] are shared — golden values pin them. A
+  * ScalaCheck law holds the kernel equal to this oracle on random corpora,
+  * and the engine differentials and benchmark check answers against it.
   *
-  * Semantics ported (reference `src/qq_mem/src/query_processing.h`):
-  *  - conjunctive k-way posting-list intersection by max-pivot leapfrog
-  *    (`ProcessMultipleTerms` `query_processing.h:710-728,810-852`)
-  *  - phrase match: adjusted-position leapfrog within a matched doc
-  *    (`PhraseQueryProcessor2` `query_processing.h:282-362`)
-  *  - lossy BM25 doc score (`CalcDocScoreLossy` `scoring.h:124-145`)
-  *  - bounded min-heap top-k: insert while size<k, then replace root only on
-  *    strictly greater score (`query_processing.h:914-932`) — with candidates
-  *    visited in ascending docId, the surviving set equals top-k by
-  *    (score desc, docId asc); we emit that order (SURVEY.md §8.4 pragmatic
-  *    tie rule, adopted engine-wide).
+  * Semantics (reference `src/qq_mem/src/query_processing.h`, completed
+  * where the reference stops):
+  *  - conjunctive match: a doc holding every query term, none of the
+  *    excluded terms, and — for a phrase — the terms at the query's
+  *    relative positions;
+  *  - lossy BM25 doc score, summed in query-slot order (`CalcDocScoreLossy`
+  *    `scoring.h:124-145`);
+  *  - top-k by (score desc, docId asc), the engine-wide tie rule
+  *    (SURVEY.md §8.4): the set the reference's bounded heap keeps when it
+  *    is fed ascending docIds (`query_processing.h:914-932`).
   */
 object Oracle {
 
@@ -82,75 +86,38 @@ object Oracle {
     * `excludeTerms` completes the Boolean set-operator family (the reference
     * declares only AND; OR/NOT are natural closures — Lucene MUST_NOT
     * semantics): a doc containing ANY excluded term is dropped from the
-    * candidate set, and excluded terms never contribute to the score. */
+    * candidate set, and excluded terms never contribute to the score.
+    *
+    * A phrase checks explicit `phraseShifts` when given (stopword gaps),
+    * else adjacency at `slop = 0`, else ordered proximity within `slop`.
+    * A term's weight is idf·boost (Lucene `term^B`), then ·tfNorm. */
   def search(ix: Index, queryTerms: Seq[String], k: Int, phrase: Boolean = false,
              excludeTerms: Seq[String] = Nil, slop: Int = 0,
              boosts: Map[String, Double] = Map.empty,
              phraseShifts: Option[Seq[Int]] = None): Seq[Hit] = {
-    if (queryTerms.isEmpty || k <= 0) return Nil
-    val lists = queryTerms.map(t => ix.postings.getOrElse(t, return Nil))
-    // query-time term boost (Lucene `term^B`; absent in the reference, whose
-    // SearchQuery has no per-term weight — a natural completion): each
-    // slot's weight is the driver-side double idf·B, then ·tfNorm — the
-    // same association order on every path, so scores stay bitwise-equal
-    val idfs = queryTerms.map(t =>
-      Bm25.idf(ix.nDocs, ix.df(t)) * boosts.getOrElse(t, 1.0))
-    val excluded: Set[Int] = excludeTerms.distinct.iterator
-      .flatMap(t => ix.postings.getOrElse(t, Array.empty[(Int, Int, Array[Int])]))
-      .map(_._1).toSet
-
-    // k-way max-pivot leapfrog over docId-sorted lists
-    val cursors = Array.fill(lists.size)(0)
-    val hits = scala.collection.mutable.ArrayBuffer.empty[Hit]
-    var done = false
-    while (!done) {
-      var maxDoc = -1
-      var allAligned = true
-      var i = 0
-      while (i < lists.size && !done) {
-        if (cursors(i) >= lists(i).length) done = true
-        else {
-          val d = lists(i)(cursors(i))._1
-          if (maxDoc == -1) maxDoc = d
-          else if (d != maxDoc) { allAligned = false; if (d > maxDoc) maxDoc = d }
+    if (queryTerms.isEmpty || k <= 0 || !queryTerms.forall(ix.postings.contains)) return Nil
+    val byDoc: Map[String, Map[Int, (Int, Array[Int])]] = queryTerms.distinct.map { t =>
+      t -> ix.postings(t).map { case (d, tf, ps) => d -> ((tf, ps)) }.toMap
+    }.toMap
+    val excluded: Set[Int] = excludeTerms.flatMap(t =>
+      ix.postings.getOrElse(t, Array.empty[(Int, Int, Array[Int])]).map(_._1)).toSet
+    val weights = queryTerms.map(t => Bm25.idf(ix.nDocs, ix.df(t)) * boosts.getOrElse(t, 1.0))
+    val matched = ix.postings(queryTerms.head).map(_._1).filter { d =>
+      queryTerms.forall(t => byDoc(t).contains(d)) && !excluded.contains(d) && (!phrase || {
+        val posLists = queryTerms.map(t => byDoc(t)(d)._2)
+        phraseShifts match {
+          case Some(sh) => phraseMatchAt(posLists, sh)
+          case None if slop == 0 => phraseMatch(posLists)
+          case None => proximityMatch(posLists, slop)
         }
-        i += 1
-      }
-      if (!done) {
-        if (allAligned) {
-          val docId = maxDoc
-          val matches = !excluded.contains(docId) &&
-            (!phrase || {
-              val posLists = lists.indices.map(j => lists(j)(cursors(j))._3)
-              if (slop != 0) proximityMatch(posLists, slop)
-              else phraseShifts match {
-                case Some(sh) => phraseMatchAt(posLists, sh) // stopword gaps
-                case None     => phraseMatch(posLists)
-              }
-            })
-          if (matches) {
-            val lenByte = LenByte.encode(ix.docLen(docId).toLong)
-            var score = 0.0
-            var j = 0
-            while (j < lists.size) {
-              score += idfs(j) * Bm25.tfNormLossy(lists(j)(cursors(j))._2.toLong, lenByte, ix.lossyCache)
-              j += 1
-            }
-            hits += Hit(docId, score)
-          }
-          var j = 0
-          while (j < lists.size) { cursors(j) += 1; j += 1 }
-        } else {
-          // skip-forward all lists to maxDoc (galloping not needed at oracle scale)
-          var j = 0
-          while (j < lists.size) {
-            while (cursors(j) < lists(j).length && lists(j)(cursors(j))._1 < maxDoc) cursors(j) += 1
-            j += 1
-          }
-        }
-      }
+      })
     }
-    topK(hits, k)
+    topK(matched.map { d =>
+      val lenByte = LenByte.encode(ix.docLen(d).toLong)
+      Hit(d, queryTerms.zip(weights).foldLeft(0.0) { case (s, (t, w)) =>
+        s + w * Bm25.tfNormLossy(byDoc(t)(d)._1.toLong, lenByte, ix.lossyCache)
+      })
+    }, k)
   }
 
   /** Disjunctive BM25 top-k. The reference DECLARES `SearchOperator::OR`
@@ -166,7 +133,7 @@ object Oracle {
     val excluded: Set[Int] = excludeTerms.distinct.iterator
       .flatMap(t => ix.postings.getOrElse(t, Array.empty[(Int, Int, Array[Int])]))
       .map(_._1).toSet
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
+    val acc = scala.collection.mutable.HashMap.empty[Int, Double]
     // slot-outer iteration: every doc's contributions accumulate in query
     // slot order — same FP order as a per-doc slot loop
     present.foreach { t =>
@@ -179,13 +146,10 @@ object Oracle {
         }
       }
     }
-    // topK's boundary tie rule assumes candidates in ascending docId
-    topK(acc.iterator.map { case (d, s) => Hit(d, s) }.toSeq.sortBy(_.docId), k)
+    topK(acc.map { case (d, s) => Hit(d, s) }, k)
   }
 
-  /** Adjusted-position leapfrog: term i's positions shifted by -i must
-    * intersect (`query_processing.h:335-362`). Returns true if the phrase
-    * occurs at least once. */
+  /** Whether the phrase occurs: some start p has slot i at p + i. */
   def phraseMatch(positionLists: Seq[Array[Int]]): Boolean =
     phraseMatchStarts(positionLists).nonEmpty
 
@@ -193,18 +157,8 @@ object Oracle {
     * matching appearance sits at `start + i`. This is the position table
     * the reference keeps per result for phrase highlighting
     * (`query_processing.h:365-392` AppendPositionCol). */
-  def phraseMatchStarts(positionLists: Seq[Array[Int]]): Array[Int] = {
-    if (positionLists.isEmpty) return Array.empty
-    if (positionLists.size == 1) return positionLists.head.clone().sorted
-    var candidates: Set[Int] = positionLists.head.toSet
-    var i = 1
-    while (i < positionLists.size && candidates.nonEmpty) {
-      val shifted = positionLists(i).iterator.map(_ - i).toSet
-      candidates = candidates.intersect(shifted)
-      i += 1
-    }
-    candidates.toArray.sorted
-  }
+  def phraseMatchStarts(positionLists: Seq[Array[Int]]): Array[Int] =
+    starts(positionLists, positionLists.indices).toArray.sorted
 
   /** [[phraseMatch]] with EXPLICIT per-slot position shifts — the
     * query-side position increments Lucene's `match_phrase` keeps when an
@@ -213,81 +167,30 @@ object Oracle {
     * is irrelevant (only differences matter). */
   def phraseMatchAt(positionLists: Seq[Array[Int]], shifts: Seq[Int]): Boolean = {
     require(positionLists.size == shifts.size, "one shift per slot")
-    if (positionLists.isEmpty) return false
-    if (positionLists.size == 1) return positionLists.head.nonEmpty
-    var candidates: Set[Int] =
-      positionLists.head.iterator.map(_ - shifts.head).toSet
-    var i = 1
-    while (i < positionLists.size && candidates.nonEmpty) {
-      val shifted = positionLists(i).iterator.map(_ - shifts(i)).toSet
-      candidates = candidates.intersect(shifted)
-      i += 1
-    }
-    candidates.nonEmpty
+    starts(positionLists, shifts).nonEmpty
   }
+
+  /** Starts p with `p + shifts(i)` in slot i for every i: the
+    * intersection of the slots' position sets, each shifted back. */
+  private def starts(positionLists: Seq[Array[Int]], shifts: Seq[Int]): Set[Int] =
+    if (positionLists.isEmpty) Set.empty
+    else positionLists.zip(shifts).map { case (ps, sh) => ps.map(_ - sh).toSet }.reduce(_ intersect _)
 
   /** Ordered proximity (Lucene span-near / `"a b"~N` slop analog; absent in
     * the reference, which only has exact adjacency): the query's slots must
     * occur in ORDER at strictly increasing positions p₁<…<p_k with total
     * span `p_k − p₁ ≤ (k−1) + slop`. `slop = 0` degenerates to exact
-    * adjacency, i.e. [[phraseMatch]].
-    *
-    * Greedy minimal-chain scan: for each candidate start p₁ the smallest
-    * ordered chain is built by advancing each later slot's cursor to the
-    * first position strictly above the previous slot's pick — minimal p_k
-    * for that p₁, hence minimal span. Cursors persist across starts
-    * (chains are monotone in p₁), so the whole check is
-    * O(Σ positions). */
+    * adjacency. Enumerates every ordered chain (cutting one off once its
+    * span already exceeds the window). */
   def proximityMatch(positionLists: Seq[Array[Int]], slop: Int): Boolean = {
     val k = positionLists.size
-    if (k == 0) return false
-    if (positionLists.exists(_.isEmpty)) return false
-    if (k == 1) return true
     val window = (k - 1) + slop
-    val idx = new Array[Int](k)
-    val first = positionLists.head
-    var ci = 0
-    while (ci < first.length) {
-      val p1 = first(ci)
-      var prev = p1
-      var i = 1
-      while (i < k) {
-        val arr = positionLists(i)
-        var c = idx(i)
-        while (c < arr.length && arr(c) <= prev) c += 1
-        idx(i) = c
-        if (c >= arr.length) return false // later p₁ only raises the bound
-        prev = arr(c)
-        i += 1
-      }
-      if (prev - p1 <= window) return true
-      ci += 1
-    }
-    false
+    def chain(i: Int, prev: Int, start: Int): Boolean =
+      i == k || positionLists(i).exists(p => p > prev && p - start <= window && chain(i + 1, p, start))
+    k > 0 && positionLists.head.exists(p => chain(1, p, p))
   }
 
-  /** Bounded min-heap top-k with the deterministic tie rule.
-    *
-    * The reference inserts while size<k then replaces the root only on a
-    * strictly greater score (`query_processing.h:914-932`); with candidates
-    * fed in ascending docId this keeps, among equal-score docs at the
-    * boundary, the earliest-seen (lowest docId) ones — i.e. the surviving
-    * set is exactly top-k by (score desc, docId asc). We implement that
-    * deterministic rule directly (SURVEY.md §8.4 pragmatic tie rule) so
-    * oracle and distributed engine agree bit-for-bit even under ties.
-    */
-  def topK(candidates: Iterable[Hit], k: Int): Seq[Hit] = {
-    val heap = scala.collection.mutable.PriorityQueue.empty[Hit](
-      Ordering.by[Hit, (Double, Int)](h => (-h.score, h.docId))) // head = worst kept
-    candidates.foreach { h =>
-      if (heap.size < k) heap.enqueue(h)
-      else {
-        val worst = heap.head
-        if (h.score > worst.score || (h.score == worst.score && h.docId < worst.docId)) {
-          heap.dequeue(); heap.enqueue(h)
-        }
-      }
-    }
-    heap.toSeq.sortBy(h => (-h.score, h.docId))
-  }
+  /** Top k by (score desc, docId asc): sort every candidate, take k. */
+  def topK(candidates: Iterable[Hit], k: Int): Seq[Hit] =
+    candidates.toSeq.sortBy(h => (-h.score, h.docId)).take(k)
 }

@@ -84,15 +84,10 @@ object BlockMax {
 
   /** Max `ub` over blocks of `metas` overlapping [lo, hi] (0.0 if none). */
   def maxUbIn(metas: Array[BlockMeta], lo: Int, hi: Int): Double = {
-    // binary search the first block with last >= lo, walk while first <= hi
-    var a = 0
-    var b = metas.length
-    while (a < b) {
-      val mid = (a + b) >>> 1
-      if (metas(mid).last < lo) a = mid + 1 else b = mid
-    }
+    // the first block with last >= lo (blocks are disjoint and ascending),
+    // then walk while first <= hi
     var best = 0.0
-    var i = a
+    var i = metas.view.map(_.last).search(lo).insertionPoint
     while (i < metas.length && metas(i).first <= hi) {
       if (metas(i).ub > best) best = metas(i).ub
       i += 1

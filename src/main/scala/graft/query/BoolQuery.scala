@@ -284,32 +284,6 @@ object BoolQuery {
     (pos.toSeq, (neg -- pos).toSeq)
   }
 
-  // ---- interval algebra over disjoint ascending (first, last) arrays ----
-  private def intersectIv(a: Array[(Int, Int)], b: Array[(Int, Int)]): Array[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuilder.make[(Int, Int)]
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val lo = math.max(a(i)._1, b(j)._1)
-      val hi = math.min(a(i)._2, b(j)._2)
-      if (lo <= hi) out += ((lo, hi))
-      if (a(i)._2 < b(j)._2) i += 1 else j += 1
-    }
-    out.result()
-  }
-
-  private def unionIv(ivs: Seq[Array[(Int, Int)]]): Array[(Int, Int)] = {
-    val all = ivs.flatten.sortBy(_._1)
-    if (all.isEmpty) return Array.empty
-    val out = scala.collection.mutable.ArrayBuffer(all.head)
-    all.tail.foreach { case (lo, hi) =>
-      val (plo, phi) = out.last
-      if (lo <= phi + 1) { if (hi > phi) out(out.length - 1) = (plo, hi) }
-      else out += ((lo, hi))
-    }
-    out.toArray
-  }
-
   /** Candidate docId coverage of a folded tree: any matching doc lies
     * inside (AND intersects positive children, OR unions children, NOT
     * never restricts). */
@@ -319,9 +293,9 @@ object BoolQuery {
       case And(cs) =>
         cs.filter(hasPositive).map(coverage(_, ranges)) match {
           case Seq()       => Array.empty
-          case head +: tail => tail.foldLeft(head)(intersectIv)
+          case head +: tail => tail.foldLeft(head)(MetaStore.intersectIv)
         }
-      case Or(cs) => unionIv(cs.map(coverage(_, ranges)))
+      case Or(cs) => MetaStore.unionIv(cs.map(coverage(_, ranges)))
       case Not(_) => Array.empty // only reachable for pure-negative trees
       case _      => Array.empty
     }

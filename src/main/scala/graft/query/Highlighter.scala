@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.{Bm25, Tokenizer}
+import graft.core.{Bm25, Kernel, Tokenizer}
 
 /** Snippet generation — the analog of the reference's `SimpleHighlighter`
   * (A6/F11: `highlighter.h:303-434`, sentence break `highlighter.h:118-196`):
@@ -89,14 +89,8 @@ object Highlighter {
                              maxPassages: Int = 3, avgPassageLen: Double = 20.0): Seq[Passage] = {
     val spans = sentences(text)
     val starts = termOffsets.view.mapValues(_.map(_._1)).toMap
-    def countIn(arr: Array[Int], s: Int, e: Int): Int = {
-      // #starts in [s, e): binary search both bounds
-      var lo = java.util.Arrays.binarySearch(arr, s)
-      if (lo < 0) lo = -lo - 1
-      var hi = java.util.Arrays.binarySearch(arr, e)
-      if (hi < 0) hi = -hi - 1 else { while (hi > 0 && arr(hi - 1) >= e) hi -= 1 }
-      hi - lo
-    }
+    def countIn(arr: Array[Int], s: Int, e: Int): Int = // #starts in [s, e)
+      Kernel.lowerBound(arr, 0, arr.length, e) - Kernel.lowerBound(arr, 0, arr.length, s)
     val scored = spans.flatMap { case (s, e) =>
       val freqs = starts.iterator
         .map { case (t, arr) => t -> countIn(arr, s, e) }
@@ -132,14 +126,15 @@ object Highlighter {
     }
     if (!terms.forall(pos.contains)) return Map.empty
     val posArrs = terms.map(t => pos(t).toArray)
-    val starts = graft.core.Oracle.phraseMatchStarts(posArrs)
+    val starts = Kernel.phraseStarts(posArrs.toArray)
     if (starts.isEmpty) return Map.empty
     val out = scala.collection.mutable.Map.empty[String, scala.collection.mutable.TreeSet[(Int, Int)]]
     starts.foreach { p =>
       terms.iterator.zipWithIndex.foreach { case (t, slot) =>
         // positions per term ascend (tokenize order), so the appearance
         // index is a binary search; its offset pair shares that index
-        val j = java.util.Arrays.binarySearch(posArrs(terms.indexOf(t)), p + slot)
+        val arr = posArrs(terms.indexOf(t))
+        val j = Kernel.lowerBound(arr, 0, arr.length, p + slot)
         out.getOrElseUpdate(t, scala.collection.mutable.TreeSet.empty) += off(t)(j)
       }
     }

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.{Bm25, Oracle}
+import graft.core.{Bm25, Kernel, Oracle}
 
 /** Low-latency serving over a built index — the Spark analog of the
   * reference's resident engine + gRPC server (`qq_server.cc:61-132`,
@@ -8,15 +8,20 @@ import graft.core.{Bm25, Oracle}
   * latency because its working set lives in memory; a fresh Spark job per
   * query pays seconds of scheduling instead. This service keeps the HOT
   * working set (decoded posting lists for queried terms) resident on the
-  * driver and evaluates conjunctive/phrase BM25 top-k with the same k-way
-  * leapfrog + bounded heap as the reference. A cache MISS launches no Spark
-  * job either: it reads only the matching rows of the snapshot's posting
-  * and termstats column chunks on the driver ([[SnapshotReader]]).
+  * driver and evaluates BM25 top-k through [[Kernel]], the matching kernel
+  * the distributed path's positional checks and per-group heaps also run
+  * (the reference's k-way leapfrog, phrase check and bounded heap). A
+  * cache MISS launches no Spark job either: it reads only the matching
+  * rows of the snapshot's posting and termstats column chunks on the
+  * driver ([[SnapshotReader]]).
   *
   * Results are identical to [[Searcher.search]] (same postings, same lossy
-  * BM25, same tie rule); the distributed path remains the scale story for
-  * cold terms / 100 TB indexes, this is the serving story for a hot query
-  * mix. Cache is LRU-bounded by total cached postings.
+  * BM25, same tie rule) and are checked against [[graft.core.Oracle]], a
+  * naive restatement that shares no matching code (the ScalaCheck law
+  * `KernelProperties` holds kernel ≡ oracle). The distributed path
+  * remains the scale story for cold terms / 100 TB indexes, this is the
+  * serving story for a hot query mix. Cache is LRU-bounded by total cached
+  * postings.
   *
   * '''Snapshot semantics''' (the Lucene point-in-time searcher contract):
   * every resident structure — decoded postings, dfs, expansion/suggest
@@ -174,9 +179,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
         val f = inflight.remove(key(t))
         if (f != null) f.complete(())
       }
-    waits.foreach { f =>
+    waits.foreach { f => // owners only ever complete normally
       try f.get(120, java.util.concurrent.TimeUnit.SECONDS)
-      catch { case _: Throwable => () } // fall through to the direct fetch
+      catch { case _: java.util.concurrent.TimeoutException => () } // fall through to the direct fetch
     }
     val after: Map[String, TermList] =
       synchronized { missing.map(t => t -> cache.get(t)) }.toMap
@@ -243,49 +248,29 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       }
 
     // delete tombstones ride the exclusion mechanism: one more sorted-id
-    // list for scanRange's binary-search membership test
-    val exAll: IndexedSeq[TermList] =
-      if (deletedDocs.isEmpty) exLists
-      else exLists :+ TermList(deletedDocs, null, null)
+    // list the kernel tests each aligned candidate against
+    val excluded = (exLists.map(_.docIds) ++
+      (if (deletedDocs.isEmpty) Nil else Seq(deletedDocs))).toArray
 
     val byTerm = uniq.zip(lists).toMap
-    val slots = queryTerms.map(byTerm).toIndexedSeq
+    val slots = queryTerms.map(byTerm).toArray
     // slot weight = idf·boost, the same driver-side double as the other
     // paths — boosted scores stay bitwise-identical engine-wide
     val idfs = queryTerms.map { t =>
       Bm25.idf(ix.nDocs, byTerm(t).n.toLong) * boosts.getOrElse(t, 1.0)
     }.toArray
+    val query = new Kernel.Conjunction(slots.map(_.docIds), slots.map(_.tfs), idfs,
+      positions = if (phrase) slots.map(_.positions) else null,
+      shifts = phraseShifts.map(_.toArray).orNull, slop = slop, excluded = excluded)
     val lenBytes = docLenBytes
-    // parallel range scan for heavy queries: the leapfrog cost is bounded
-    // by the SMALLEST list (every candidate aligns on it), so when that
-    // list is large — a hot∧hot conjunction or a full-corpus phrase, the
-    // serving tail that grows linearly with corpus size — the docId domain
-    // is split at equal-count boundaries of the smallest list and each
-    // range scanned on its own core with its own bounded heap. Per-doc
-    // scores are range-independent (slot-ordered FP sum), each range heap
-    // keeps its top-k by the global (score desc, docId asc) total order,
-    // and the merge takes the first k of the union by the same order —
-    // bitwise-identical results to the sequential scan (asserted in
-    // EngineSpec). Cheap queries stay on the caller thread: below the
-    // threshold the split overhead exceeds the scan.
     val (aScore, aDoc) = after.getOrElse((Double.PositiveInfinity, -1))
-    val minN = slots.map(_.n).min
-    val w = LocalService.scanParallelism
-    if (minN < math.max(scanThreshold, w) || w < 2)
-      scanRange(slots, idfs, lenBytes, k, phrase, 0, Int.MaxValue, exAll, slop,
-        aScore, aDoc, phraseShifts)
-    else {
-      val small = slots.minBy(_.n)
-      val bounds = (1 until w).map(i => small.docIds((small.n.toLong * i / w).toInt))
-      val ranges = (0 +: bounds).zip(bounds :+ Int.MaxValue)
-      val tasks = ranges.map { case (lo, hi) =>
-        LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-          def call(): Seq[Oracle.Hit] =
-            scanRange(slots, idfs, lenBytes, k, phrase, lo, hi, exAll, slop,
-              aScore, aDoc, phraseShifts)
-        })
-      }
-      tasks.flatMap(_.get()).sortBy(h => (-h.score, h.docId)).take(k)
+    // the leapfrog cost is bounded by the SMALLEST list (every candidate
+    // aligns on it), so a heavy query — a hot∧hot conjunction or a
+    // full-corpus phrase, the serving tail that grows with corpus size —
+    // splits the docId domain at equal-count boundaries of that list
+    val small = slots.minBy(_.n)
+    scanRanges(k, small.n.toLong, small.docIds, Int.MaxValue) { (lo, hi, top) =>
+      query.scan(lenBytes, ix.lossyCache, lo, hi, top, aScore, aDoc)
     }
   }
 
@@ -342,8 +327,8 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val rows = uniq.map { t =>
       byTerm.get(t) match {
         case Some(tl) =>
-          val i = java.util.Arrays.binarySearch(tl.docIds, docId)
-          if (i < 0) return Nil // conjunctive: doc misses this term
+          val i = Kernel.lowerBound(tl.docIds, 0, tl.n, docId)
+          if (i == tl.n || tl.docIds(i) != docId) return Nil // conjunctive: doc misses this term
           (t, tl.tfs(i).toLong, tl.n.toLong)
         case None =>
           val tf = tfViaBlocks(t, docId)
@@ -364,128 +349,31 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * budget). 0 when the doc does not contain the term. */
   private def tfViaBlocks(term: String, docId: Int): Long = reader.tf(term, docId)
 
-  /** One bounded-heap leapfrog pass over docIds in `[fromDoc, untilDoc)` —
-    * the k-way max-pivot intersection of the reference
-    * (`query_processing.h:710-852`), lossy BM25, inline bounded heap:
-    * candidates are never materialized (hot single-term queries score
-    * every posting; an intermediate buffer would allocate df objects). */
-  private def scanRange(slots: IndexedSeq[TermList], idfs: Array[Double],
-                        lenBytes: Array[Int], k: Int, phrase: Boolean,
-                        fromDoc: Int, untilDoc: Int,
-                        exSlots: IndexedSeq[TermList] = IndexedSeq.empty,
-                        slop: Int = 0,
-                        afterScore: Double = Double.PositiveInfinity,
-                        afterDocId: Int = -1,
-                        phraseShifts: Option[Seq[Int]] = None): Seq[Oracle.Hit] = {
-    val shiftsArr: Array[Int] = phraseShifts.map(_.toArray).orNull
-    val nL = slots.size
-    val cursors = new Array[Int](nL)
-    // exclusion membership: one binary search per EXCLUSION LIST per aligned
-    // candidate — candidates are bounded by the smallest positive list, so
-    // a hot excluded term costs O(matched × log df), never a full merge
-    def excluded(docId: Int): Boolean = {
-      var e = 0
-      while (e < exSlots.size) {
-        val arr = exSlots(e).docIds
-        var lo = 0
-        var hi = arr.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (arr(mid) < docId) lo = mid + 1 else hi = mid
-        }
-        if (lo < arr.length && arr(lo) == docId) return true
-        e += 1
+  /** Runs `scan` over the docId domain `[0, end)` into a bounded heap of
+    * `k`. A heavy query — `work` postings at or over the threshold — splits
+    * the domain at equal-count boundaries of `pivot` (ascending docIds),
+    * one range per core on the shared pool, each into its own heap; the
+    * heaps merge once. Per-doc scores do not depend on the range and the
+    * heap keeps the top k by (score desc, docId asc) in any feed order, so
+    * the split never changes a bit of any result (asserted in EngineSpec).
+    * Cheap queries stay on the caller thread: below the threshold the split
+    * overhead exceeds the scan. Every range finishes before a failure
+    * propagates, so a caller may reset shared scratch afterwards. */
+  private def scanRanges(k: Int, work: Long, pivot: Array[Int], end: Int)
+                        (scan: (Int, Int, Kernel.TopK) => Unit): Seq[Oracle.Hit] = {
+    val w = LocalService.scanParallelism
+    val top = new Kernel.TopK(k)
+    if (work < math.max(scanThreshold.toLong, w.toLong) || w < 2) scan(0, end, top)
+    else {
+      val bounds = (1 until w).map(i => pivot((pivot.length.toLong * i / w).toInt))
+      val tasks = (0 +: bounds).zip(bounds :+ end).map { case (lo, hi) =>
+        LocalService.scanPool.submit(new java.util.concurrent.Callable[Kernel.TopK] {
+          def call(): Kernel.TopK = { val t = new Kernel.TopK(k); scan(lo, hi, t); t }
+        })
       }
-      false
+      tasks.map(t => scala.util.Try(t.get())).foreach(r => top.merge(r.get))
     }
-    var j0 = 0
-    while (j0 < nL) { // first posting with docId >= fromDoc, per list
-      val arr = slots(j0).docIds
-      var lo = 0
-      var hi = slots(j0).n
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (arr(mid) < fromDoc) lo = mid + 1 else hi = mid
-      }
-      cursors(j0) = lo
-      j0 += 1
-    }
-    val posBuf = new Array[Array[Int]](nL)      // reused per candidate doc
-    val posCursors = new Array[Int](nL)         // phraseAdjacent scratch
-    val heap = scala.collection.mutable.PriorityQueue.empty[Oracle.Hit](
-      Ordering.by[Oracle.Hit, (Double, Int)](h => (-h.score, h.docId))) // head = worst kept
-    var done = false
-    while (!done) {
-      var maxDoc = -1
-      var aligned = true
-      var i = 0
-      while (i < nL && !done) {
-        if (cursors(i) >= slots(i).n) done = true
-        else {
-          val d = slots(i).docIds(cursors(i))
-          if (maxDoc == -1) maxDoc = d
-          else if (d != maxDoc) { aligned = false; if (d > maxDoc) maxDoc = d }
-        }
-        i += 1
-      }
-      if (!done && maxDoc >= untilDoc) done = true // range end: no candidate below untilDoc remains
-      if (!done) {
-        if (aligned) {
-          val ok = !excluded(maxDoc) && (!phrase || {
-            var j = 0
-            while (j < nL) { posBuf(j) = slots(j).positions(cursors(j)); j += 1 }
-            if (shiftsArr != null)
-              LocalService.phraseAtShifts(posBuf, posCursors, shiftsArr)
-            else if (slop == 0) LocalService.phraseAdjacent(posBuf, posCursors)
-            else graft.core.Oracle.proximityMatch(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(posBuf), slop)
-          })
-          if (ok) {
-            val lb = lenBytes(maxDoc)
-            var s = 0.0
-            var j = 0
-            while (j < nL) {
-              s += idfs(j) * Bm25.tfNormLossy(slots(j).tfs(cursors(j)).toLong, lb, ix.lossyCache)
-              j += 1
-            }
-            // search_after cursor: only hits strictly after
-            // (afterScore, afterDocId) in (score desc, docId asc) order
-            // compete (default cursor admits everything)
-            val inPage = s < afterScore || (s == afterScore && maxDoc > afterDocId)
-            // bounded-heap insert with the deterministic tie rule
-            // (`query_processing.h:914-932`): candidates arrive in
-            // ascending docId, so equal-score boundary keeps lowest docId
-            if (inPage) {
-              if (heap.size < k) heap.enqueue(Oracle.Hit(maxDoc, s))
-              else {
-                val worst = heap.head
-                if (s > worst.score) { heap.dequeue(); heap.enqueue(Oracle.Hit(maxDoc, s)) }
-              }
-            }
-          }
-          var j = 0
-          while (j < nL) { cursors(j) += 1; j += 1 }
-        } else {
-          var j = 0
-          while (j < nL) {
-            // gallop forward to maxDoc
-            val arr = slots(j).docIds
-            var c = cursors(j)
-            var step = 1
-            while (c + step < slots(j).n && arr(c + step) < maxDoc) { c += step; step <<= 1 }
-            var hi = math.min(slots(j).n, c + step + 1)
-            var lo = c
-            while (lo < hi) {
-              val mid = (lo + hi) >>> 1
-              if (arr(mid) < maxDoc) lo = mid + 1 else hi = mid
-            }
-            cursors(j) = lo
-            j += 1
-          }
-        }
-      }
-    }
-    heap.toSeq.sortBy(h => (-h.score, h.docId))
+    LocalService.hitsOf(top)
   }
 
   /** Cached dictionary expansions — one metadata probe per cold
@@ -552,17 +440,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     new LocalService(Searcher.load(ix.spark, ix.indexDir),
       maxCachedPostings, maxFetchPostings, scanThreshold, maxResidentNorms)
 
-  private def isDeleted(docId: Int): Boolean = {
-    val arr = deletedDocs
-    if (arr.length == 0) return false
-    var lo = 0
-    var hi = arr.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (arr(mid) < docId) lo = mid + 1 else hi = mid
-    }
-    lo < arr.length && arr(lo) == docId
-  }
+  private def isDeleted(docId: Int): Boolean = Kernel.contains(deletedDocs, docId)
 
   /** Prefix BM25 top-k on the serving path: expand against the dictionary
     * ([[Searcher.expandPrefix]] — pushed StartsWith probe, deterministic
@@ -657,10 +535,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
 
   /** Dense-array disjunctive scoring: accumulate in expansion-term order
     * (the same FP sequence as [[Oracle.searchOr]]'s slot-outer loop), then
-    * a single ascending-docId scan feeds the bounded heap — identical tie
-    * rule to [[Oracle.topK]]. BM25 parts are strictly positive, so
-    * score > 0 ⇔ matched; the scan resets touched slots, leaving the
-    * thread-local buffer clean for the next call.
+    * a single ascending-docId scan feeds the kernel's bounded heap. BM25
+    * parts are strictly positive, so score > 0 ⇔ matched; the scan resets
+    * touched slots, leaving the thread-local buffer clean for the next call.
     *
     * Heavy expansions (Σdf over the threshold — a hot prefix like `ret*`
     * unions several full-corpus lists) split the docId domain at
@@ -672,29 +549,11 @@ final class LocalService(val ix: Searcher.LoadedIndex,
   private def scoreDense(lists: Seq[TermList], lenBytes: Array[Int],
                          k: Int): Seq[Oracle.Hit] = {
     val scores = scoreBuf.get()
-    val idfs = lists.map(tl => Bm25.idf(ix.nDocs, tl.n.toLong)).toArray
-    val w = LocalService.scanParallelism
-    val total = lists.foldLeft(0L)(_ + _.n)
+    val arr = lists.toArray
+    val idfs = arr.map(tl => Bm25.idf(ix.nDocs, tl.n.toLong))
     try {
-      if (total < math.max(scanThreshold.toLong, w.toLong) || w < 2)
-        denseRange(lists, idfs, lenBytes, scores, k, 0, scores.length)
-      else {
-        val big = lists.maxBy(_.n)
-        val bounds = (1 until w).map(i => big.docIds((big.n.toLong * i / w).toInt))
-        val ranges = (0 +: bounds).zip(bounds :+ scores.length)
-        val tasks = ranges.map { case (lo, hi) =>
-          LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-            def call(): Seq[Oracle.Hit] = denseRange(lists, idfs, lenBytes, scores, k, lo, hi)
-          })
-        }
-        // every task must FINISH (not just fail fast) before any cleanup:
-        // a worker still writing its segment during a reset would leave
-        // residue for the next query on this thread's buffer
-        val done = tasks.map(t => scala.util.Try(t.get()))
-        done.collectFirst { case scala.util.Failure(e) => e } match {
-          case Some(e) => throw e // outer catch resets the (quiescent) buffer
-          case None => done.flatMap(_.get).sortBy(h => (-h.score, h.docId)).take(k)
-        }
+      scanRanges(k, arr.foldLeft(0L)(_ + _.n), arr.maxBy(_.n).docIds, scores.length) {
+        (lo, hi, top) => denseRange(arr, idfs, lenBytes, scores, lo, hi, top)
       }
     } catch {
       case t: Throwable => java.util.Arrays.fill(scores, 0.0); throw t
@@ -704,22 +563,15 @@ final class LocalService(val ix: Searcher.LoadedIndex,
   /** One disjunctive accumulate+scan pass over docIds in `[fromDoc,
     * untilDoc)` — writes only that segment of `scores` and resets the
     * slots it touched. */
-  private def denseRange(lists: Seq[TermList], idfs: Array[Double],
-                         lenBytes: Array[Int], scores: Array[Double], k: Int,
-                         fromDoc: Int, untilDoc: Int): Seq[Oracle.Hit] = {
+  private def denseRange(lists: Array[TermList], idfs: Array[Double],
+                         lenBytes: Array[Int], scores: Array[Double],
+                         fromDoc: Int, untilDoc: Int, top: Kernel.TopK): Unit = {
     var li = 0
-    lists.foreach { tl =>
+    while (li < lists.length) {
+      val tl = lists(li)
       val idf = idfs(li)
       val arr = tl.docIds
-      var i = { // first posting with docId >= fromDoc
-        var lo = 0
-        var hi = tl.n
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (arr(mid) < fromDoc) lo = mid + 1 else hi = mid
-        }
-        lo
-      }
+      var i = Kernel.lowerBound(arr, 0, tl.n, fromDoc)
       while (i < tl.n && arr(i) < untilDoc) {
         val d = arr(i)
         scores(d) += idf * Bm25.tfNormLossy(tl.tfs(i).toLong, lenBytes(d), ix.lossyCache)
@@ -731,33 +583,21 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     // range before the emission scan (one walk over the deleted subrange —
     // the emission's `s > 0.0` check then skips them for free)
     val del = deletedDocs
-    if (del.length > 0) {
-      var lo = 0
-      var hi = del.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (del(mid) < fromDoc) lo = mid + 1 else hi = mid
-      }
-      while (lo < del.length && del(lo) < untilDoc) {
-        if (del(lo) < scores.length) scores(del(lo)) = 0.0
-        lo += 1
-      }
+    var x = Kernel.lowerBound(del, 0, del.length, fromDoc)
+    while (x < del.length && del(x) < untilDoc) {
+      if (del(x) < scores.length) scores(del(x)) = 0.0
+      x += 1
     }
-    val heap = scala.collection.mutable.PriorityQueue.empty[Oracle.Hit](
-      Ordering.by[Oracle.Hit, (Double, Int)](h => (-h.score, h.docId)))
     var d = fromDoc
     val end = math.min(untilDoc, scores.length)
     while (d < end) {
       val s = scores(d)
       if (s > 0.0) {
         scores(d) = 0.0
-        // ascending-docId feed: equal-score boundary keeps lowest docId
-        if (heap.size < k) heap.enqueue(Oracle.Hit(d, s))
-        else if (s > heap.head.score) { heap.dequeue(); heap.enqueue(Oracle.Hit(d, s)) }
+        top.offer(d, s)
       }
       d += 1
     }
-    heap.toSeq.sortBy(h => (-h.score, h.docId))
   }
 
   /** Boxed-map fallback for indexes too large for a per-thread dense
@@ -775,12 +615,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
         i += 1
       }
     }
-    // topK's boundary tie rule assumes candidates in ascending docId;
-    // tombstoned docs are dropped before ranking
-    Oracle.topK(acc.iterator
-      .filter { case (d, _) => !isDeleted(d) }
-      .map { case (d, s) => Oracle.Hit(d, s) }
-      .toSeq.sortBy(_.docId), k)
+    val top = new Kernel.TopK(k)
+    acc.foreach { case (d, s) => if (!isDeleted(d)) top.offer(d, s) }
+    LocalService.hitsOf(top)
   }
 
   // LRU over fetched doc bodies for the snippet path (bounded by total
@@ -855,47 +692,29 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val nNeg = negTerms.size
     val posDocs = posTerms.map(t => byTerm(t).docIds).toArray
     val posTfs = posTerms.map(t => byTerm(t).tfs).toArray
-    val posNs = posTerms.map(t => byTerm(t).n).toArray
     val negDocs = negTerms.map(t => byTerm(t).docIds).toArray
-    val negNs = negTerms.map(t => byTerm(t).n).toArray
     val posIdfs = posTerms.map(idfOf).toArray
     val negIdx = negTerms.zipWithIndex.toMap
     val posIdx = posTerms.zipWithIndex.toMap
 
-    /** Merged union scan over docIds in `[fromDoc, untilDoc)` — per-doc
-      * scoring is independent, so a range split never changes a bit of any
-      * score. The tree runs COMPILED ([[BoolQuery.compile]]): the recursive
-      * evaluator's per-doc Seq/tuple allocation and string hashing owned a
-      * ~20x serving tail on this loop. */
-    def scanRange(fromDoc: Int, untilDoc: Int): Seq[Oracle.Hit] = {
+    /** Merged union scan over docIds in `[fromDoc, untilDoc)`. The tree
+      * runs COMPILED ([[BoolQuery.compile]]): the recursive evaluator's
+      * per-doc Seq/tuple allocation and string hashing owned a ~20x serving
+      * tail on this loop. */
+    def scanRange(fromDoc: Int, untilDoc: Int, top: Kernel.TopK): Unit = {
       val prog = BoolQuery.compile(root, posIdx, negIdx) // per-range scratch
       val posAligned = new Array[Boolean](nP)
       val partials = new Array[Double](nP)
       val negPres = new Array[Boolean](nNeg)
-      val cursors = new Array[Int](nP)
-      val negCursors = new Array[Int](nNeg)
-      def seek(arr: Array[Int], n: Int, target: Int): Int = {
-        var lo = 0
-        var hi = n
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (arr(mid) < target) lo = mid + 1 else hi = mid
-        }
-        lo
-      }
-      var i = 0
-      while (i < nP) { cursors(i) = seek(posDocs(i), posNs(i), fromDoc); i += 1 }
-      var j = 0
-      while (j < nNeg) { negCursors(j) = seek(negDocs(j), negNs(j), fromDoc); j += 1 }
-      val heap = scala.collection.mutable.PriorityQueue.empty[Oracle.Hit](
-        Ordering.by[Oracle.Hit, (Double, Int)](h => (-h.score, h.docId)))
+      val cursors = posDocs.map(a => Kernel.lowerBound(a, 0, a.length, fromDoc))
+      val negCursors = negDocs.map(a => Kernel.lowerBound(a, 0, a.length, fromDoc))
       var done = false
       while (!done) {
         // merged union scan over the positive lists (ascending docId)
         var d = Int.MaxValue
-        i = 0
+        var i = 0
         while (i < nP) {
-          if (cursors(i) < posNs(i)) {
+          if (cursors(i) < posDocs(i).length) {
             val v = posDocs(i)(cursors(i))
             if (v < d) d = v
           }
@@ -907,66 +726,36 @@ final class LocalService(val ix: Searcher.LoadedIndex,
             val lb = lenBytes(d)
             i = 0
             while (i < nP) {
-              val al = cursors(i) < posNs(i) && posDocs(i)(cursors(i)) == d
+              val al = cursors(i) < posDocs(i).length && posDocs(i)(cursors(i)) == d
               posAligned(i) = al
               if (al) partials(i) = posIdfs(i) *
                 Bm25.tfNormLossy(posTfs(i)(cursors(i)).toLong, lb, ix.lossyCache)
               i += 1
             }
-            j = 0
-            while (j < nNeg) { // gallop the neg cursor to the first id >= d
+            var j = 0
+            while (j < nNeg) {
               val arr = negDocs(j)
-              val n = negNs(j)
-              var c = negCursors(j)
-              var step = 1
-              while (c + step < n && arr(c + step) < d) { c += step; step <<= 1 }
-              var hi = math.min(n, c + step + 1)
-              var lo = c
-              while (lo < hi) {
-                val mid = (lo + hi) >>> 1
-                if (arr(mid) < d) lo = mid + 1 else hi = mid
-              }
-              negCursors(j) = lo
-              negPres(j) = lo < n && arr(lo) == d
+              val c = Kernel.gallop(arr, negCursors(j), arr.length, d)
+              negCursors(j) = c
+              negPres(j) = c < arr.length && arr(c) == d
               j += 1
             }
-            if (prog.eval(posAligned, partials, negPres)) {
-              val score = prog.lastScore
-              if (heap.size < k) heap.enqueue(Oracle.Hit(d, score))
-              else if (score > heap.head.score) {
-                heap.dequeue(); heap.enqueue(Oracle.Hit(d, score))
-              }
-            }
+            if (prog.eval(posAligned, partials, negPres)) top.offer(d, prog.lastScore)
           }
           i = 0
           while (i < nP) { // advance every aligned cursor
-            if (cursors(i) < posNs(i) && posDocs(i)(cursors(i)) == d)
+            if (cursors(i) < posDocs(i).length && posDocs(i)(cursors(i)) == d)
               cursors(i) += 1
             i += 1
           }
         }
       }
-      heap.toSeq.sortBy(h => (-h.score, h.docId))
     }
 
-    // heavy unions split the docId domain at equal-count boundaries of the
-    // largest positive list, one disjoint range per core (same split rule
-    // as scoreDense; per-doc independence makes the merge exact)
-    val w = LocalService.scanParallelism
-    val total = posNs.foldLeft(0L)(_ + _.toLong)
-    if (total < math.max(scanThreshold.toLong, w.toLong) || w < 2)
-      scanRange(0, Int.MaxValue)
-    else {
-      val big = posNs.indices.maxBy(posNs)
-      val bounds = (1 until w).map(i => posDocs(big)((posNs(big).toLong * i / w).toInt))
-      val ranges = (0 +: bounds).zip(bounds :+ Int.MaxValue)
-      val tasks = ranges.map { case (lo, hi) =>
-        LocalService.scanPool.submit(new java.util.concurrent.Callable[Seq[Oracle.Hit]] {
-          def call(): Seq[Oracle.Hit] = scanRange(lo, hi)
-        })
-      }
-      tasks.flatMap(_.get()).sortBy(h => (-h.score, h.docId)).take(k)
-    }
+    // heavy unions split at equal-count boundaries of the largest positive
+    // list (same split rule as scoreDense)
+    scanRanges(k, posDocs.foldLeft(0L)(_ + _.length), posDocs.maxBy(_.length),
+      Int.MaxValue)(scanRange)
   }
 
   /** Search reply WITH highlighted snippets — the reference's serving shape
@@ -999,16 +788,11 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     }
   }
 
-  /** Per-doc lossy length bytes, resident (one int per doc — 4 MB per
-    * million docs; the reference keeps the same store in memory,
-    * `doc_length_store.h`). */
-  // (companion holds the static phrase kernel)
-  // Sized by the docId SPACE (max id + 1), not the doc count: after a
-  // delete + compaction the id range has holes (ids are stable, Lucene
-  // keeps maxDoc ≥ numDocs the same way), so nDocs underestimates the
-  // array bound.
   /** docId space (max id + 1), resolved by ONE aggregation job — never a
-    * row collect, so it is safe to evaluate at ANY index size. */
+    * row collect, so it is safe to evaluate at ANY index size. Per-doc
+    * arrays are sized by it, not by the doc count: after a delete +
+    * compaction the id range has holes (ids are stable, Lucene keeps
+    * maxDoc ≥ numDocs the same way), so nDocs underestimates the bound. */
   private lazy val idSpace: Int = {
     import org.apache.spark.sql.functions.{col, max}
     val r = ix.doclen.agg(max(col("docId").cast("int"))).collect()(0)
@@ -1029,6 +813,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * asserted never to flip on an over-budget index). */
   @volatile private[graft] var normsMaterialized: Boolean = false
 
+  /** Per-doc lossy length bytes, resident (one int per doc — 4 MB per
+    * million docs; the reference keeps the same store in memory,
+    * `doc_length_store.h`). */
   private lazy val docLenState: Array[Int] = {
     import ix.spark.implicits._
     require(normsResident,
@@ -1069,6 +856,11 @@ object LocalService {
 
   /** Ranges a heavy scan splits into — one per core, capped: past ~8 the
     * per-range heap-merge and task overhead outgrow the marginal core. */
+  private def hitsOf(top: Kernel.TopK): Seq[Oracle.Hit] = {
+    val (docs, scores) = top.sorted
+    docs.indices.map(i => Oracle.Hit(docs(i), scores(i)))
+  }
+
   val scanParallelism: Int =
     math.min(8, Runtime.getRuntime.availableProcessors())
 
@@ -1078,80 +870,4 @@ object LocalService {
   private[query] lazy val scanPool =
     java.util.concurrent.Executors.newWorkStealingPool(
       Runtime.getRuntime.availableProcessors())
-
-  /** Allocation-free adjusted-position adjacency: does a position p exist in
-    * slot 0 with p+i present in every slot i? Same semantics as
-    * `Oracle.phraseMatch` (shifted intersection non-empty,
-    * `query_processing.h:335-362`), but a merge-scan over the sorted
-    * position arrays — the hot phrase path evaluates this once per
-    * candidate doc, where a Set-based intersection would allocate. */
-  /** [[phraseAdjacent]] generalized to EXPLICIT per-slot shifts (the
-    * analyzed query's position gaps — Lucene match_phrase semantics):
-    * slot j must hold `p - shifts(0) + shifts(j)` for some p in slot 0.
-    * Same allocation-free merge-scan; `shifts = 0..k-1` degenerates to
-    * plain adjacency. */
-  private[query] def phraseAtShifts(lists: Array[Array[Int]],
-                                    cursors: Array[Int],
-                                    shifts: Array[Int]): Boolean = {
-    if (lists.isEmpty) return false
-    var e = 0
-    while (e < lists.length) {
-      if (lists(e).length == 0) return false
-      cursors(e) = 0
-      e += 1
-    }
-    if (lists.length == 1) return true
-    val first = lists(0)
-    var ci = 0
-    while (ci < first.length) {
-      val p = first(ci)
-      var j = 1
-      var ok = true
-      while (j < lists.length && ok) {
-        val target = p - shifts(0) + shifts(j)
-        val arr = lists(j)
-        var c = cursors(j)
-        while (c < arr.length && arr(c) < target) c += 1
-        cursors(j) = c
-        if (c >= arr.length) return false // later p only raises the target
-        ok = arr(c) == target
-        j += 1
-      }
-      if (ok) return true
-      ci += 1
-    }
-    false
-  }
-
-  private[query] def phraseAdjacent(lists: Array[Array[Int]],
-                                    cursors: Array[Int]): Boolean = {
-    if (lists.isEmpty) return false
-    var e = 0
-    while (e < lists.length) {
-      if (lists(e).length == 0) return false
-      cursors(e) = 0
-      e += 1
-    }
-    if (lists.length == 1) return true
-    val first = lists(0)
-    var ci = 0
-    while (ci < first.length) {
-      val p = first(ci)
-      var j = 1
-      var ok = true
-      while (j < lists.length && ok) {
-        val target = p + j
-        val arr = lists(j)
-        var c = cursors(j)
-        while (c < arr.length && arr(c) < target) c += 1
-        cursors(j) = c
-        if (c >= arr.length) return false // later p only raises the target
-        ok = arr(c) == target
-        j += 1
-      }
-      if (ok) return true
-      ci += 1
-    }
-    false
-  }
 }

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.{Bm25, LenByte}
+import graft.core.{Bm25, Kernel, LenByte}
 import graft.index.PostingCodec
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -715,7 +715,7 @@ object Searcher {
           case None => withPos0
         }
         val bcQTerms = spark.sparkContext.broadcast(queryTerms)
-        val bcShifts = spark.sparkContext.broadcast(phraseShifts)
+        val shifts = phraseShifts.map(_.toArray).orNull
         withPos.groupByKey(_._2)
           .flatMapGroups { (docId, rows) =>
             val byTerm = rows.toArray.groupBy(_._1)
@@ -724,13 +724,8 @@ object Searcher {
               // one position list per query SLOT (repeated terms reuse the
               // same list at different adjusted shifts — `query_processing.h`
               // leapfrogs per-slot, not per-unique-term)
-              val posLists = qts.map(t => byTerm(t).head._4)
-              val posOk = bcShifts.value match {
-                case Some(sh) => graft.core.Oracle.phraseMatchAt(posLists, sh)
-                case None if slop == 0 => graft.core.Oracle.phraseMatch(posLists)
-                case None => graft.core.Oracle.proximityMatch(posLists, slop)
-              }
-              if (posOk)
+              val posLists = qts.map(t => byTerm(t).head._4).toArray
+              if (Kernel.positional(posLists, shifts, slop, new Array[Int](posLists.length)))
                 byTerm.valuesIterator.map(_.head).map(r => (r._1, r._2, r._3, r._5))
               else Iterator.empty
             } else Iterator.empty
@@ -1568,9 +1563,9 @@ object Searcher {
     * its terms' block ranges; only the union of surviving blocks across the
     * batch is position-decoded; a (query, doc) group matches when every
     * distinct term is present and the slot-wise adjusted position lists
-    * intersect ([[graft.core.Oracle.phraseMatch]] — repeated terms reuse
-    * one list at different shifts; a per-query `slops` entry > 0 relaxes
-    * the check to ordered proximity, [[graft.core.Oracle.proximityMatch]]).
+    * intersect ([[Kernel.positional]] — repeated terms reuse one list at
+    * different shifts; a per-query `slops` entry > 0 relaxes the check to
+    * ordered proximity).
     * Matched docs score conjunctive BM25
     * with per-slot idf multiplicity, then a bounded per-query top-k heap.
     *
@@ -1664,9 +1659,8 @@ object Searcher {
         val qts = bcQ.value(qid)
         val slop = bcSlops.value.getOrElse(qid, 0)
         val posOk = qts.distinct.forall(byTerm.contains) && {
-          val posLists = qts.map(t => byTerm(t).head._5)
-          if (slop == 0) graft.core.Oracle.phraseMatch(posLists)
-          else graft.core.Oracle.proximityMatch(posLists, slop)
+          val posLists = qts.map(t => byTerm(t).head._5).toArray
+          Kernel.positional(posLists, null, slop, new Array[Int](posLists.length))
         }
         if (posOk) byTerm.valuesIterator.map(_.head).map(r => (qid, docId, r._3, r._4, r._6))
         else Iterator.empty

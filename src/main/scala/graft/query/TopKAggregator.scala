@@ -1,14 +1,15 @@
 package graft.query
 
+import graft.core.Kernel
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Bounded-heap top-k as a typed `Aggregator` — the reference's
   * `MinPointerHeap` (A5, `query_processing.h:520-562,914-932`) expressed in
   * Spark's partial/final aggregation shape: each partition folds its rows
-  * into a k-bounded heap (`reduce`), heaps merge pairwise (`merge`), and
-  * `finish` emits (score desc, docId asc) — the engine-wide deterministic
-  * tie rule (SURVEY.md §8.4).
+  * into the kernel's k-bounded heap ([[Kernel.TopK]], `reduce`), heaps
+  * merge pairwise (`merge`), and `finish` emits (score desc, docId asc) —
+  * the engine-wide deterministic tie rule (SURVEY.md §8.4).
   *
   * Spark's `TakeOrderedAndProject` (used by the main query path) is the
   * built-in equivalent; this Aggregator is the composable form — usable per
@@ -16,55 +17,20 @@ import org.apache.spark.sql.expressions.Aggregator
   * ORDER BY/LIMIT cannot express per-key top-k without a window sort.
   */
 class TopKAggregator(k: Int)
-    extends Aggregator[(Int, Double), TopKAggregator.Buf, Array[(Int, Double)]] {
-  import TopKAggregator._
+    extends Aggregator[(Int, Double), Kernel.TopK, Array[(Int, Double)]] {
 
-  override def zero: Buf = new Buf(new java.util.PriorityQueue[(Int, Double)](
-    math.max(1, k), WorstFirst))
+  override def zero: Kernel.TopK = new Kernel.TopK(k)
 
-  override def reduce(b: Buf, a: (Int, Double)): Buf = { b.offer(a, k); b }
+  override def reduce(b: Kernel.TopK, a: (Int, Double)): Kernel.TopK = { b.offer(a._1, a._2); b }
 
-  override def merge(b1: Buf, b2: Buf): Buf = {
-    val it = b2.heap.iterator()
-    while (it.hasNext) b1.offer(it.next(), k)
-    b1
+  override def merge(b1: Kernel.TopK, b2: Kernel.TopK): Kernel.TopK = b1.merge(b2)
+
+  override def finish(b: Kernel.TopK): Array[(Int, Double)] = {
+    val (docs, scores) = b.sorted
+    docs.zip(scores)
   }
 
-  override def finish(b: Buf): Array[(Int, Double)] = {
-    val arr = b.heap.toArray(Array.empty[(Int, Double)])
-    scala.util.Sorting.stableSort(arr,
-      (x: (Int, Double), y: (Int, Double)) =>
-        x._2 > y._2 || (x._2 == y._2 && x._1 < y._1))
-    arr
-  }
-
-  override def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
+  override def bufferEncoder: Encoder[Kernel.TopK] = Encoders.kryo[Kernel.TopK]
   override def outputEncoder: Encoder[Array[(Int, Double)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-}
-
-object TopKAggregator {
-
-  /** head = worst kept: lowest score, then highest docId among ties. */
-  val WorstFirst: java.util.Comparator[(Int, Double)] =
-    new java.util.Comparator[(Int, Double)] with Serializable {
-      override def compare(a: (Int, Double), b: (Int, Double)): Int = {
-        val c = java.lang.Double.compare(a._2, b._2)
-        if (c != 0) c else Integer.compare(b._1, a._1)
-      }
-    }
-
-  final class Buf(val heap: java.util.PriorityQueue[(Int, Double)]) extends Serializable {
-    def offer(a: (Int, Double), k: Int): Unit = {
-      if (heap.size < k) heap.offer(a)
-      else {
-        val worst = heap.peek()
-        // strictly-better replacement: higher score, or equal score with
-        // lower docId (`query_processing.h:921-931` + §8.4 tie rule)
-        if (a._2 > worst._2 || (a._2 == worst._2 && a._1 < worst._1)) {
-          heap.poll(); heap.offer(a)
-        }
-      }
-    }
-  }
 }

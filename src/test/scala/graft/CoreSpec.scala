@@ -136,24 +136,40 @@ class OracleSpec extends AnyFunSuite {
     assert(Oracle.search(ix, Seq("x"), 2).map(_.docId) == Seq(4, 3))
   }
 
+  /** The kernel's merge scan and the oracle's set intersection must agree
+    * on every table below; the shared answer is what the tests pin. */
+  private def phraseBoth(lists: Seq[Array[Int]]): Boolean = {
+    val k = Kernel.phraseAt(lists.toArray, null, new Array[Int](lists.size))
+    assert(k == Oracle.phraseMatch(lists), s"kernel $k != oracle on ${lists.map(_.toSeq)}")
+    k
+  }
+  private def startsBoth(lists: Seq[Array[Int]]): Seq[Int] = {
+    val k = Kernel.phraseStarts(lists.map(_.sorted).toArray).toSeq
+    assert(k == Oracle.phraseMatchStarts(lists).toSeq, s"kernel $k != oracle")
+    k
+  }
+  private def atBoth(lists: Seq[Array[Int]], shifts: Seq[Int]): Boolean = {
+    val k = Kernel.phraseAt(lists.toArray, shifts.toArray, new Array[Int](lists.size))
+    assert(k == Oracle.phraseMatchAt(lists, shifts), s"kernel $k != oracle")
+    k
+  }
+
   test("phrase position tables (tests_5.cc:56-115)") {
     // hello=[1,5,11,19], world=[2,8,20] => adjacent at 1 and 19
-    assert(Oracle.phraseMatch(Seq(Array(1, 5, 11, 19), Array(2, 8, 20))))
+    assert(phraseBoth(Seq(Array(1, 5, 11, 19), Array(2, 8, 20))))
     // "world again" with no adjacency => no match
-    assert(!Oracle.phraseMatch(Seq(Array(2, 8, 20), Array(0, 5, 10))))
+    assert(!phraseBoth(Seq(Array(2, 8, 20), Array(0, 5, 10))))
   }
 
   test("phrase match starts = reference position table (tests_6.cc:214)") {
     // the two adjacency sites, ascending — each start's slot-i appearance
     // is start+i, which is what FilterOffsetByPosition highlights
-    assert(Oracle.phraseMatchStarts(Seq(Array(1, 5, 11, 19), Array(2, 8, 20)))
-      .toSeq == Seq(1, 19))
-    assert(Oracle.phraseMatchStarts(Seq(Array(2, 8, 20), Array(0, 5, 10))).isEmpty)
+    assert(startsBoth(Seq(Array(1, 5, 11, 19), Array(2, 8, 20))) == Seq(1, 19))
+    assert(startsBoth(Seq(Array(2, 8, 20), Array(0, 5, 10))).isEmpty)
     // 3-term chain: a=[0,7], b=[1,4,8], c=[2,9] => starts 0 and 7
-    assert(Oracle.phraseMatchStarts(Seq(Array(0, 7), Array(1, 4, 8), Array(2, 9)))
-      .toSeq == Seq(0, 7))
+    assert(startsBoth(Seq(Array(0, 7), Array(1, 4, 8), Array(2, 9))) == Seq(0, 7))
     // single term: every appearance is a "match"
-    assert(Oracle.phraseMatchStarts(Seq(Array(9, 3))).toSeq == Seq(3, 9))
+    assert(startsBoth(Seq(Array(9, 3))) == Seq(3, 9))
   }
 
   test("missing term => empty (conjunctive guard)") {
@@ -211,7 +227,7 @@ class OracleSpec extends AnyFunSuite {
   }
 
   test("phraseMatchAt: explicit shifts (stopword gaps), base-invariant") {
-    import graft.core.Oracle.phraseMatchAt
+    val phraseMatchAt = atBoth _
     // doc positions: a@2, b@4 — query shifts (0,2) matches, adjacency not
     assert(phraseMatchAt(Seq(Array(2), Array(4)), Seq(0, 2)))
     assert(!phraseMatchAt(Seq(Array(2), Array(4)), Seq(0, 1)))

@@ -514,17 +514,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("proximity (slop) query: greedy matcher vs brute force, engine vs oracle, serving parity") {
-    // brute-force ordered-span enumerator — independent of the greedy
-    // minimal-chain algorithm in Oracle.proximityMatch
-    def brute(lists: Seq[Array[Int]], slop: Int): Boolean = {
-      val k = lists.size
-      if (k == 0 || lists.exists(_.isEmpty)) return false
-      def rec(i: Int, prev: Int, start: Int): Boolean =
-        if (i == k) prev - start <= (k - 1) + slop
-        else lists(i).exists(p => p > prev && rec(i + 1, p, if (i == 0) p else start))
-      if (k == 1) true else lists.head.exists(p => rec(1, p, p))
-    }
-    // 1. matcher vs brute force on real corpus position lists
+    // 1. the kernel's greedy minimal-chain matcher vs the oracle's
+    //    brute-force ordered-span enumerator, on real corpus position lists
     val rnd = new scala.util.Random(7)
     val vocab = oracle.postings.keys.toArray.sorted
     for (_ <- 1 to 200) {
@@ -533,7 +524,8 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val docs = ts.map(t => oracle.postings(t).map(_._1).toSet).reduce(_ intersect _)
       docs.take(5).foreach { d =>
         val lists = ts.map(t => oracle.postings(t).find(_._1 == d).get._3.sorted)
-        assert(graft.core.Oracle.proximityMatch(lists, slop) == brute(lists, slop),
+        assert(graft.core.Kernel.proximity(lists.toArray, slop, new Array[Int](lists.size)) ==
+            graft.core.Oracle.proximityMatch(lists, slop),
           s"greedy != brute for terms=$ts slop=$slop doc=$d lists=${lists.map(_.toSeq)}")
       }
     }
