@@ -5,6 +5,7 @@ import graft.corpus.CorpusGen
 import graft.index.IndexBuilder
 import graft.query.Searcher
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark entry (driver-run per round → BENCH_r{N}.json).
   *
@@ -140,7 +141,7 @@ object Bench {
     * because lazily-backed hosts serve a fast BURST from recently-freed
     * frames before collapsing to the ~10-25 MB/s materialization floor —
     * a single fast probe proves nothing. Returns (gbTouched, sec). */
-  private[graft] def pageWarm(targetGb: Long, maxSec: Int): (Double, Double) = {
+  private def pageWarm(targetGb: Long, maxSec: Int): (Double, Double) = {
     val t0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - t0) / 1e9
     val chunkBytes = 256 << 20
@@ -366,6 +367,16 @@ object Bench {
     var httpJson = """{"n_wire_queries":-1,"http_qps_16":-1,"http_p50_ms":-1,"http_p99_ms":-1}"""
     var streamingJson = """{"docs":-1,"docs_per_sec":-1,"compact_sec":-1}"""
     var matchRateV = -1.0
+    // a section that throws is named with its error in "sections_failed"
+    // and keeps its -1 numbers, as a failed graded query is named in
+    // "queries_failed"
+    val sectionsFailed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def section[T](name: String)(body: => T): Option[T] =
+      try Some(body)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] section $name failed: $e")
+        sectionsFailed(name) = e.toString
+        None }
     def indexingJson: String = {
       val secN = if (timesN.nonEmpty) timesN.min else -1.0
       val sec4N = if (times4N.nonEmpty) times4N.min else -1.0
@@ -394,9 +405,11 @@ object Bench {
       s""""warmed_gb":$warmedGb,"warm_sec":$warmSec},""" +
       s""""scaling_efficiency":$eff}"""
     }
+    def sectionsFailedJson: String = sectionsFailed.map { case (k, v) =>
+      Verify.jsonString(k) + ":" + Verify.jsonString(v) }.mkString("{", ",", "}")
     def artifact(partial: String): String = {
       val p = if (partial == null) "" else s""""partial":"$partial","""
-      s"""{$p"metric":"total","value":$queriesTotal,"unit":"sec","queries":$queriesJson,"queries_failed":$queriesFailedJson,"sf":"$sfDir","indexing":$indexingJson,"search":$searchJson,"streaming":$streamingJson,"match_rate":$matchRateV}"""
+      s"""{$p"metric":"total","value":$queriesTotal,"unit":"sec","queries":$queriesJson,"queries_failed":$queriesFailedJson,"sections_failed":$sectionsFailedJson,"sf":"$sfDir","indexing":$indexingJson,"search":$searchJson,"streaming":$streamingJson,"match_rate":$matchRateV}"""
     }
     writeBenchFile("BENCH_partial.json", artifact("warmup_done"))
     // under-supported override: a level whose minimum has <2 supporting
@@ -448,13 +461,13 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // a query that throws is a failure, not a time: it is named in
     // "queries_failed" and its seconds stay out of the total
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.graded.sortBy(_.name).map { g =>
       val (ok, sec) = timed {
-        try { fn(spark, sfDir).count(); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"query $name failed: $e"); false }
+        try { g.spark(spark, sfDir).count(); true }
+        catch { case NonFatal(e) =>
+          System.err.println(s"query ${g.name} failed: $e"); false }
       }
-      (name, ok, sec)
+      (g.name, ok, sec)
     }
     val (passed, failed) = results.partition(_._2)
     queriesJson = passed.map { case (k, _, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -486,7 +499,7 @@ object Bench {
     // the engine run and the lean oracle below score the same expansion
     // (expansion determinism is itself oracle-gated by `p4_prefix_expand`)
     val queryMix = graft.query.QueryLog.resolve(ix, codeMix)
-    val (svcText, textOracle) = try {
+    val textChain = section("text_index") {
       val tdf0 = spark.read.parquet(s"$tmpRoot/corpus")
         .select("repo", "path", "commit", "lang", "sha256", "content")
         .orderBy("repo", "path").limit(20000)
@@ -500,8 +513,10 @@ object Bench {
       val orc = new Oracle.Index(
         textRows.toIndexedSeq.zipWithIndex.map { case (r, i) =>
           Oracle.Doc(i, r.getString(5)) }, textAnalyzer = true)
-      (Some(svc), Some(orc))
-    } catch { case _: Throwable => (None, None) }
+      (svc, orc)
+    }
+    val svcText = textChain.map(_._1)
+    val textOracle = textChain.map(_._2)
     val textLive = if (svcText.isDefined) textMix else Nil
     val serveAll = queryMix ++ textLive
     import spark.implicits._
@@ -514,7 +529,7 @@ object Bench {
     // then measure steady-state qps — the reference-engine-parity number
     // (its working set is memory-resident too)
     var familiesJson = "{}"
-    val (servedQps, servedQps16, servedP50Ms, servedP99Ms, cacheHits, cacheMisses, cacheEvicts) = try {
+    val (servedQps, servedQps16, servedP50Ms, servedP99Ms, cacheHits, cacheMisses, cacheEvicts) = section("serving") {
       val svc = new graft.query.LocalService(ix)
       // prefix queries go through the service's own dictionary-expansion
       // entry point (resident expansion cache), the rest through search
@@ -595,7 +610,7 @@ object Bench {
       // bench (gRPC framing unavailable in this env). Only the /search-
       // expressible subset of the mix (term/phrase/NOT/slop) goes over the
       // wire; fewer reps since each request pays TCP+HTTP framing.
-      httpJson = try {
+      httpJson = section("http") {
         val httpSrv = new graft.query.HttpService(svc, port = 0, nThreads = nClients)
         var httpText: Option[graft.query.HttpService] = None
         try {
@@ -661,8 +676,7 @@ object Bench {
             else hs(math.min(hs.length - 1, (p * hs.length).toInt)) / 1e6
           s"""{"n_wire_queries":${urls.size},"http_qps_16":${nClients.toLong * urls.size * httpReps / hsec},"http_p50_ms":${hpct(0.50)},"http_p99_ms":${hpct(0.99)}}"""
         } finally { httpSrv.stop(); httpText.foreach(_.stop()) }
-      } catch { case _: Throwable =>
-        """{"n_wire_queries":-1,"http_qps_16":-1,"http_p50_ms":-1,"http_p99_ms":-1}""" }
+      }.getOrElse(httpJson)
       familiesJson = {
         import scala.jdk.CollectionConverters._
         famLats.asScala.toSeq.sortBy(_._1).map { case (fam, q) =>
@@ -674,7 +688,7 @@ object Bench {
       }
       (serveAll.size * reps / sec, nClients.toLong * serveAll.size * reps / sec16,
         pct(0.50), pct(0.99), h, m, e)
-    } catch { case _: Throwable => (-1.0, -1.0, -1.0, -1.0, -1L, -1L, -1L) }
+    }.getOrElse((-1.0, -1.0, -1.0, -1.0, -1L, -1L, -1L))
     // cache_hit_rate: term-granular over the whole replay (warmup + both
     // measured phases) — the FAST'20 cache-behavior number; the workload's
     // repeat fraction (qlog_repeat) upper-bounds the cold-start term rate
@@ -692,8 +706,8 @@ object Bench {
     // the resumability checkpoint), then compacted into one segment.
     // Streamed-vs-batch query parity and crash-window safety are asserted
     // in StreamingSpec; here we measure docs/sec and the compaction cost
-    // at bench scale. Defensive: the bench line must be emitted regardless.
-    val (streamDocs, streamDocsPerSec, compactSec) = try {
+    // at bench scale. A failure is named in sections_failed.
+    val (streamDocs, streamDocsPerSec, compactSec) = section("streaming") {
       import org.apache.spark.sql.functions.{col, hash, lit, pmod}
       val nBatches = 8
       val streamN = math.min(benchDocs, 160000L).toInt
@@ -715,13 +729,13 @@ object Bench {
         "streamed doc watermark mismatch")
       slice.unpersist(false)
       (streamN, streamN / ingestSec, cSec)
-    } catch { case _: Throwable => (0, -1.0, -1.0) }
+    }.getOrElse((0, -1.0, -1.0))
     streamingJson = s"""{"docs":$streamDocs,"docs_per_sec":$streamDocsPerSec,"compact_sec":$compactSec}"""
     writeBenchFile("BENCH_partial.json", artifact("streaming_done"))
 
     // oracle match rate (top-10 rank-identical, score tol 0.001).
-    // Defensive: the bench line must be emitted even if this phase dies.
-    matchRateV = try {
+    // A failure is named in sections_failed; the line is still emitted.
+    matchRateV = section("match_rate") {
       val (rate, mismatches) = matchRateDetail(queryMix, batch, benchDocs)
       mismatches.foreach(m => System.err.println(s"[bench] match mismatch: $m"))
       // text-chain queries: engine (text LocalService) vs the in-JVM
@@ -749,7 +763,7 @@ object Bench {
           (rate * queryMix.size + ok) / (queryMix.size + textLive.size)
         case None => rate
       }
-    } catch { case _: Throwable => -1.0 }
+    }.getOrElse(-1.0)
 
     val line = artifact(null)
     println(line)
@@ -765,9 +779,9 @@ object Bench {
     * query and the first diverging rank so a <1.0 rate in the artifact is
     * diagnosable rather than a bare number.
     * `batch` rows are (queryId, rank, docId, score) from [[QueryLog.run]]. */
-  def matchRateDetail(queryMix: Seq[graft.query.QueryLog.LogQuery],
-                      batch: Array[(Int, Int, Int, Double)],
-                      benchDocs: Long): (Double, Seq[String]) = {
+  private def matchRateDetail(queryMix: Seq[graft.query.QueryLog.LogQuery],
+                              batch: Array[(Int, Int, Int, Double)],
+                              benchDocs: Long): (Double, Seq[String]) = {
     val qTerms = queryMix.flatMap(q => q.terms ++ q.exclude).distinct
     val qIdx = qTerms.zipWithIndex.toMap
     // positions are tracked only for terms used by phrase queries

@@ -58,9 +58,15 @@ object MetaStore {
   }
   def lastFetchDiag: FetchDiag = diagTL.get()
 
+  /** A term with more fine meta rows than this is not fine-cached. */
+  private val CacheRowsPerTerm = 2048
+  /** Cap on the overlap intervals a two-level fine fetch filters by;
+    * more are coarsened (widened) down to it. */
+  private val MaxFetchIntervals = 512
+
+  /** A test-seam conf (`directRows`, `superSpan`); a malformed value throws. */
   private def confLong(ix: Searcher.LoadedIndex, key: String, dflt: Long): Long =
-    try ix.spark.conf.get(key, dflt.toString).toLong
-    catch { case _: NumberFormatException => dflt }
+    ix.spark.conf.get(key, dflt.toString).toLong
 
   /** Merge possibly-overlapping intervals into disjoint ascending ones. */
   def mergeIntervals(iv: Array[(Int, Int)]): Array[(Int, Int)] = {
@@ -196,12 +202,11 @@ object MetaStore {
         else blocksAll.filter(col("term").isin(missing: _*))
           .select("term", "firstDocId", "lastDocId", "n", "maxTf", "minLenByte")
           .as[FineRow].collect()
-      val perTermCap = confLong(ix, "spark.graft.meta.cacheRowsPerTerm", 2048L)
       if (ix.metaCacheEpochIs(epoch)) { // never cache across an invalidation
         val byTerm = fetched.groupBy(_._1)
         missing.foreach { t =>
           val rs = byTerm.getOrElse(t, Array.empty[FineRow])
-          if (rs.length <= perTermCap) ix.fineMetaCache.put(t, rs)
+          if (rs.length <= CacheRowsPerTerm) ix.fineMetaCache.put(t, rs)
         }
       }
       diagTL.set(FetchDiag(est, twoLevel = false, hit.size, 0L, fetched.length.toLong))
@@ -213,8 +218,7 @@ object MetaStore {
         diagTL.set(FetchDiag(est, twoLevel = true, 0, coarseRows, 0L))
         Array.empty
       } else {
-        val maxIv = confLong(ix, "spark.graft.meta.maxFetchIntervals", 512L).toInt
-        val rows = blocksAll.filter(overlapPred(coarsenTo(cov, math.max(maxIv, 1))))
+        val rows = blocksAll.filter(overlapPred(coarsenTo(cov, MaxFetchIntervals)))
           .select("term", "firstDocId", "lastDocId", "n", "maxTf", "minLenByte")
           .as[FineRow].collect()
         diagTL.set(FetchDiag(est, twoLevel = true, 0, coarseRows, rows.length.toLong))
@@ -246,7 +250,7 @@ object MetaStore {
     * one of its blocks, so any exclusion block overlapping `candidates`
     * also overlaps coverage ∩ candidates and survives the fetch predicate
     * (coarsening only widens). The interval cap honors the same
-    * `maxFetchIntervals` conf as the fine fetch. */
+    * [[MaxFetchIntervals]] cap as the fine fetch. */
   def boundedRangeMeta(ix: Searcher.LoadedIndex, terms: Seq[String],
                        candidates: Array[(Int, Int)],
                        dfs: Map[String, Long] = Map.empty)
@@ -254,7 +258,6 @@ object MetaStore {
     val spark = ix.spark
     import spark.implicits._
     if (terms.isEmpty || candidates.isEmpty) return Array.empty
-    val maxIv = confLong(ix, "spark.graft.meta.maxFetchIntervals", 512L).toInt
     val cand = mergeIntervals(candidates)
     val distinct = terms.distinct
     val directCap = confLong(ix, "spark.graft.meta.directRows", 16384L)
@@ -266,7 +269,7 @@ object MetaStore {
     def fetch(bound: Array[(Int, Int)]): Array[(String, Int, Int)] =
       ix.postings.filter(col("term").isin(distinct: _*))
         .select("term", "firstDocId", "lastDocId")
-        .filter(overlapPred(coarsenTo(bound, math.max(1, maxIv))))
+        .filter(overlapPred(coarsenTo(bound, MaxFetchIntervals)))
         .as[(String, Int, Int)].collect()
     if (est < directCap) {
       val rows = fetch(cand)

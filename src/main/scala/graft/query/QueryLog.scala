@@ -195,15 +195,19 @@ object QueryLog {
     * skip-pruned exclusion anti-join), phrase/proximity queries through the
     * batched positional [[Searcher.searchAllPhrase]] path, and nested
     * boolean queries through [[BoolQuery.searchAll]]. No per-query driver
-    * round trips. Returns (queryId, rank, docId, score). */
+    * round trips. Returns (queryId, rank, docId, score).
+    *
+    * A `text:` query throws `IllegalArgumentException`: it targets a
+    * textAnalyzer index and carries gap-aware phraseShifts the batched
+    * phrase path does not model, so serve it from [[LocalService]] over
+    * the text index, as the bench does. */
   def run(ix: Searcher.LoadedIndex, queries: Seq[LogQuery], k: Int): DataFrame = {
     import ix.spark.implicits._
-    // `text:` queries target a textAnalyzer index and carry gap-aware
-    // phraseShifts the batched phrase path does not model — they are
-    // EXCLUDED here (serve them via LocalService/searchAllPhrase against
-    // the text index, as the bench does), not silently mis-run against a
-    // code-analyzer index
-    val resolved = resolve(ix, queries.filterNot(_.analyzeText))
+    queries.find(_.analyzeText).foreach { q =>
+      throw new IllegalArgumentException(
+        s"QueryLog.run cannot run the text: query '${q.rawText}'; serve it from a text-analyzer index")
+    }
+    val resolved = resolve(ix, queries)
     val boolQs = resolved.collect { case q if q.bool.nonEmpty => (q.id, q.bool.get) }
     val flat = resolved.filter(_.bool.isEmpty)
     val termQs = flat.filter(q => !q.phrase && q.terms.nonEmpty)

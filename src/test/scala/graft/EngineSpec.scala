@@ -1241,6 +1241,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.deleteIfExists(log)
   }
 
+  test("query log: a text: query passed to the batched run throws, naming it") {
+    val q = graft.query.QueryLog.parseLine("text:values indexes", 7).get
+    val e = intercept[IllegalArgumentException] {
+      graft.query.QueryLog.run(ix, Seq(q), 10)
+    }
+    assert(e.getMessage.contains("values indexes"), e.getMessage)
+  }
+
   test("LocalService cache stats: warm hits, cold misses, budget evictions") {
     built
     val svc = new graft.query.LocalService(ix)

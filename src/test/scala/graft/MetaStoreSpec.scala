@@ -250,4 +250,16 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!MetaStore.lastExclDiag.twoLevel, s"a known rare df should go direct: ${MetaStore.lastExclDiag}")
     assert(unknown.toSeq.sorted == known.toSeq.sorted && known.nonEmpty)
   }
+
+  test("a malformed meta conf throws instead of falling back to its default") {
+    eng
+    val ix = Searcher.load(spark, tmp)
+    spark.conf.set("spark.graft.meta.directRows", "abc")
+    try {
+      val e = intercept[NumberFormatException] {
+        MetaStore.boundedRangeMeta(ix, Seq("rare"), Array((0, 4095)))
+      }
+      assert(e.getMessage.contains("abc"))
+    } finally spark.conf.unset("spark.graft.meta.directRows")
+  }
 }

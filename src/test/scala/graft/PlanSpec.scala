@@ -5,10 +5,9 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Plan-shape regression guards for the graded queries — promoted from the
-  * `tools.ExplainAudit` dev probe into the suite so a future change cannot
-  * silently reintroduce the two scale anti-patterns the round-1/2 audits
-  * fixed:
+/** The graded table's shape, and plan-shape regression guards for the
+  * graded queries, so a future change cannot silently reintroduce the two
+  * scale anti-patterns the round-1/2 plan audits fixed:
   *
   *  - an UNPARTITIONED Window (`WindowExec: No Partition Defined` — the
   *    whole relation collapses to one task; the top-k paths must plan as
@@ -29,13 +28,24 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  private def plan(n: String) =
+    SparkEntry.graded.find(_.name == n).get.spark(spark, sfDir).queryExecution.optimizedPlan
+
+  test("graded table: 136 uniquely named queries, each with oracle SQL") {
+    val names = SparkEntry.graded.map(_.name)
+    assert(names.size == 136)
+    assert(names.distinct.size == names.size,
+      s"duplicate names: ${names.diff(names.distinct)}")
+    val noSql = SparkEntry.graded.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(noSql.isEmpty, s"empty oracle SQL: $noSql")
+  }
+
   test("graded a5/ann/topk plans: no unpartitioned Window, no interpreted HOF dot kernel") {
     assume(new java.io.File(sfDir).exists(), s"$sfDir not present")
     val names = Seq("a5_bm25_topk", "a5_bm25_topk3", "o2_topk_window",
       "ann_cosine_topk", "ann_knn1", "ann_neardup", "ann_ivf_topk")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val lp = df.queryExecution.optimizedPlan
+      val lp = plan(n)
       val unpartitioned = lp.collect { case w: Window if w.partitionSpec.isEmpty => w }
       assert(unpartitioned.isEmpty,
         s"$n plans an unpartitioned Window (single-task sort at scale):\n$lp")
@@ -47,8 +57,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup LSH/minhash plans keep their windows partitioned") {
     assume(new java.io.File(sfDir).exists(), s"$sfDir not present")
     Seq("dedup_minhash_pairs", "dedup_simhash").foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val lp = df.queryExecution.optimizedPlan
+      val lp = plan(n)
       val unpartitioned = lp.collect { case w: Window if w.partitionSpec.isEmpty => w }
       assert(unpartitioned.isEmpty, s"$n plans an unpartitioned Window:\n$lp")
     }
@@ -60,9 +69,10 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // building each DataFrame may run the query's eager setup (memo fills,
     // k-means training) at sf0.001 — cheap, and exactly what the bench does
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (n, fn) =>
+    SparkEntry.graded.sortBy(_.name).foreach { g =>
+      val n = g.name
       try {
-        val lp = fn(spark, sfDir).queryExecution.optimizedPlan
+        val lp = g.spark(spark, sfDir).queryExecution.optimizedPlan
         if (lp.collect { case w: Window if w.partitionSpec.isEmpty => w }.nonEmpty)
           failures += s"$n: unpartitioned Window"
         if (lp.toString.contains("aggregate(zip_with"))
