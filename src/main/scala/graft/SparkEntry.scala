@@ -2123,12 +2123,7 @@ object SparkEntry {
       val cols = (0 until 8).map(i => element_at(sig, i + 1).as(s"mh$i"))
       withHs.select((col("doc_id") +: cols): _*).orderBy("doc_id")
     }, {
-      val comps = (0 until 8).map { i =>
-        val rot = 4 * i
-        if (rot == 0) s"list_min(hs) mh$i"
-        else s"list_min(list_transform(hs, h -> substr(h, ${rot + 1}) || substr(h, 1, $rot))) mh$i"
-      }.mkString(", ")
-      s"""SELECT doc_id, $comps FROM
+      s"""SELECT doc_id, ${MinhashSql.sigCols} FROM
          | (SELECT doc_id, list_transform($SHING, s -> md5(s)) hs FROM documents)
          |ORDER BY doc_id""".stripMargin
     }),
@@ -2139,17 +2134,9 @@ object SparkEntry {
     // sub-bucket splitting for pathological skew is Dedup.minhashCandidates)
     GradedQuery("dedup_minhash_pairs", (s, dir) =>
       minhashPairs(s, dir).orderBy("id_a", "id_b"), {
-      val comps = (0 until 8).map { i =>
-        val rot = 4 * i
-        if (rot == 0) s"list_min(hs) mh$i"
-        else s"list_min(list_transform(hs, h -> substr(h, ${rot + 1}) || substr(h, 1, $rot))) mh$i"
-      }.mkString(", ")
-      val bandRows = (0 until 4).map(b =>
-        s"SELECT doc_id, ${b}::BIGINT band, md5(mh${b * 2} || '|' || mh${b * 2 + 1}) bkey FROM sig")
-        .mkString(" UNION ALL ")
-      s"""WITH sig AS (SELECT doc_id, $comps FROM
+      s"""WITH sig AS (SELECT doc_id, ${MinhashSql.sigCols} FROM
          |   (SELECT doc_id, list_transform($SHING, s -> md5(s)) hs FROM documents)),
-         | bands AS ($bandRows)
+         | bands AS (${MinhashSql.bands})
          |SELECT DISTINCT a.doc_id id_a, b.doc_id id_b
          |FROM bands a JOIN bands b USING (band, bkey)
          |WHERE a.doc_id < b.doc_id ORDER BY id_a, id_b""".stripMargin
@@ -2163,17 +2150,9 @@ object SparkEntry {
       // connected components over the LSH candidate graph: comp = min doc_id
       // reachable in the pair graph (recursive transitive closure — exact,
       // engine-independent ground truth for the iterative Spark propagation)
-      val comps = (0 until 8).map { i =>
-        val rot = 4 * i
-        if (rot == 0) s"list_min(hs) mh$i"
-        else s"list_min(list_transform(hs, h -> substr(h, ${rot + 1}) || substr(h, 1, $rot))) mh$i"
-      }.mkString(", ")
-      val bandRows = (0 until 4).map(b =>
-        s"SELECT doc_id, ${b}::BIGINT band, md5(mh${b * 2} || '|' || mh${b * 2 + 1}) bkey FROM sig")
-        .mkString(" UNION ALL ")
-      s"""WITH RECURSIVE sig AS (SELECT doc_id, $comps FROM
+      s"""WITH RECURSIVE sig AS (SELECT doc_id, ${MinhashSql.sigCols} FROM
          |   (SELECT doc_id, list_transform($SHING, s -> md5(s)) hs FROM documents)),
-         | bands AS ($bandRows),
+         | bands AS (${MinhashSql.bands}),
          | pairs AS (SELECT DISTINCT a.doc_id id_a, b.doc_id id_b
          |   FROM bands a JOIN bands b USING (band, bkey) WHERE a.doc_id < b.doc_id),
          | edges AS (SELECT id_a s, id_b d FROM pairs UNION SELECT id_b, id_a FROM pairs),
@@ -2253,19 +2232,11 @@ object SparkEntry {
           TextOps.microRatio(col("n_hit"), col("n_true")).as("recall_micro"),
           TextOps.microRatio(col("n_hit"), col("n_cand")).as("precision_lb_micro"))
     }, {
-      val comps = (0 until 8).map { i =>
-        val rot = 4 * i
-        if (rot == 0) s"list_min(hs) mh$i"
-        else s"list_min(list_transform(hs, h -> substr(h, ${rot + 1}) || substr(h, 1, $rot))) mh$i"
-      }.mkString(", ")
-      val bandRows = (0 until 4).map(b =>
-        s"SELECT doc_id, ${b}::BIGINT band, md5(mh${b * 2} || '|' || mh${b * 2 + 1}) bkey FROM sig")
-        .mkString(" UNION ALL ")
       s"""WITH aug AS (SELECT doc_id, text FROM documents
          |   UNION ALL SELECT doc_id + 10000000, text FROM documents WHERE doc_id % 5 = 0),
-         | sig AS (SELECT doc_id, $comps FROM
+         | sig AS (SELECT doc_id, ${MinhashSql.sigCols} FROM
          |   (SELECT doc_id, list_transform($SHING, s -> md5(s)) hs FROM aug)),
-         | bands AS ($bandRows),
+         | bands AS (${MinhashSql.bands}),
          | cand AS (SELECT DISTINCT a.doc_id id_a, b.doc_id id_b
          |   FROM bands a JOIN bands b USING (band, bkey)
          |   WHERE a.doc_id < b.doc_id),
@@ -3849,6 +3820,21 @@ object SparkEntry {
 
   private val SHING =
     s"(CASE WHEN len($T) < 3 THEN []::VARCHAR[] ELSE list_transform(range(1, len($T) - 1), i -> array_to_string(($T)[i:i+2], ' ')) END)"
+  /** The minhash oracles' SQL generators: `sigCols`, the 8 signature
+    * columns mh0..mh7 over a doc's shingle-md5 list `hs` (component i =
+    * min of the hashes rotated by 4·i hex digits), and `bands`, the 4 LSH
+    * bands of 2 components read from a `sig` CTE as (doc_id, band, bkey)
+    * rows. */
+  private object MinhashSql {
+    val sigCols: String = (0 until 8).map { i =>
+      val rot = 4 * i
+      if (rot == 0) s"list_min(hs) mh$i"
+      else s"list_min(list_transform(hs, h -> substr(h, ${rot + 1}) || substr(h, 1, $rot))) mh$i"
+    }.mkString(", ")
+    val bands: String = (0 until 4).map(b =>
+      s"SELECT doc_id, ${b}::BIGINT band, md5(mh${b * 2} || '|' || mh${b * 2 + 1}) bkey FROM sig")
+      .mkString(" UNION ALL ")
+  }
   private val QUANT = "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1e6))"
 
   /** Exact integer squared L2 between two quantized list columns (SQL). */

@@ -280,7 +280,8 @@ object IndexBuilder {
     * default salt threshold (df 8192) still draws ~256 sampled docs. */
   val HotSampleMod = 32
 
-  /** Full build: writes docstore/, doclen/, postings/, termstats/ under
+  /** Full build: writes docstore/ (doc lengths inline), postings/,
+    * superblocks/, termstats/ under
     * `indexDir`, with a manifest per stage + a snapshot manifest.
     * Resumable: committed stages are skipped on re-run.
     *

@@ -36,15 +36,9 @@ object Integrity {
     def add(name: String, violations: Long, detail: String = ""): Unit =
       results += CheckResult(name, violations == 0L, violations, detail)
 
-    val hasInline = ix.hasInlineLen
-    val blocks =
-      if (hasInline)
-        ix.postings.select("term", "prevDocId", "firstDocId", "lastDocId",
-          "n", "maxTf", "minLenByte", "docIds", "tfs", "lenBytes")
-      else
-        ix.postings.select(col("term"), col("prevDocId"), col("firstDocId"),
-          col("lastDocId"), col("n"), col("maxTf"), col("minLenByte"),
-          col("docIds"), col("tfs"), lit(null).cast("binary").as("lenBytes"))
+    ix.requireNormStream
+    val blocks = ix.postings.select("term", "prevDocId", "firstDocId", "lastDocId",
+      "n", "maxTf", "minLenByte", "docIds", "tfs", "lenBytes")
 
     // block_decode: structural per-block invariants
     val blockViolations = blocks
@@ -60,11 +54,9 @@ object Integrity {
           i += 1
         }
         if (dt.exists(_._2 > maxTf)) bad += 1 // WAND ceiling must bound tf
-        if (lbs != null) {
-          val lb = PostingCodec.decodeLenBytes(n, lbs)
-          if (lb.length != n) bad += 1
-          if (lb.exists(_ < minLb)) bad += 1 // WAND norm bound must hold
-        }
+        val lb = PostingCodec.decodeLenBytes(n, lbs)
+        if (lb.length != n) bad += 1
+        if (lb.exists(_ < minLb)) bad += 1 // WAND norm bound must hold
         bad
       }
       .toDF("bad")

@@ -47,6 +47,13 @@ final case class PostingBlock(
 
 object PostingCodec {
 
+  /** A postings file without the `lenBytes` stream: it was written before
+    * the inline norm stream existed, and no query or compaction path reads
+    * that layout. The index must be rebuilt. */
+  final class LegacyPostingsException(path: String) extends IllegalStateException(
+    s"postings file $path has no lenBytes column: it predates the inline norm " +
+      "stream; rebuild the index")
+
   /** Postings per block — the reference's vacuum pack/skip interval
     * (`packed_value.h:13`, PACK_ITEM_CNT=128). */
   val BlockSize = 128

@@ -1,7 +1,6 @@
 package graft.query
 
 import graft.core.{Bm25, Tokenizer}
-import graft.index.PostingCodec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -20,21 +19,22 @@ import org.apache.spark.sql.functions._
   * leaf folds to FALSE, exactly Lucene's rule for MUST_NOT-only boolean
   * queries.
   *
-  * Evaluation shape (one Spark job):
+  * Evaluation shape (one Spark job; [[search]] is the one-query batch of
+  * [[searchAll]]):
   *  1. constant-fold absent terms (P2 analog: absent Term → FALSE) and
   *     prune pure-negative clauses;
   *  2. docId-range coverage of the folded tree by interval algebra — AND
   *     intersects its positive children's coverage, OR unions — bounding
   *     which blocks decode (a rare clause prunes its AND-siblings' hot
   *     lists, same J3 skip analog as [[Searcher.search]]);
-  *  3. decode every leaf term's surviving blocks once; per doc, aggregate a
-  *     presence BITMASK (each (term, doc) posting is unique, so a sum of
-  *     2^leafBit is an exact mask) plus one pivoted partial-score column
-  *     per positive leaf (boolean queries are narrow — ≤ 62 leaves by
-  *     construction — so the pivot stays cheap, unlike a 64-slot batch);
-  *  4. predicate AND score both compile to pure codegen Columns over the
-  *     mask and the pivot: the score expression adds in fixed tree order,
-  *     bitwise-deterministic and mirrored term-for-term by the SQL oracle.
+  *  3. decode every leaf term's surviving blocks once; per (query, doc),
+  *     aggregate a presence BITMASK (each (term, doc) posting is unique,
+  *     so a sum of 2^leafBit is an exact mask) plus the positive leaves'
+  *     partial scores;
+  *  4. the tree's [[compile]]d program — the evaluator
+  *     [[LocalService.searchBool]] runs too — decides the predicate and
+  *     adds the score in fixed tree order, bitwise-deterministic and
+  *     mirrored term-for-term by the SQL oracle.
   */
 object BoolQuery {
 
@@ -147,12 +147,12 @@ object BoolQuery {
     if (root == False || root == True || !hasPositive(root)) None else Some(root)
   }
 
-  /** Shared recursive evaluator: (matched, clause-aware score). `partial`
-    * returns a positive leaf's BM25 partial for the CURRENT doc (only
-    * consulted for present positive leaves). Additions happen in tree
-    * order via foldLeft(0.0) — bitwise-identical to the Column form's
-    * left-assoc sum (x + 0.0 == x for every non-negative partial), so the
-    * distributed, batched, and resident paths all produce the same bits. */
+  /** Reference recursive evaluator: (matched, clause-aware score).
+    * `partial` returns a positive leaf's BM25 partial for the CURRENT doc
+    * (only consulted for present positive leaves). Additions happen in
+    * tree order via foldLeft(0.0). No engine path runs it: it is the
+    * specification [[compile]] is checked against (CoreSpec's compile law,
+    * the bench's served-log check). */
   private[graft] def evalAndScore(n: Node, present: String => Boolean,
                                   partial: String => Double): (Boolean, Double) = n match {
     case Term(t) =>
@@ -171,10 +171,11 @@ object BoolQuery {
     case _     => (false, 0.0)
   }
 
-  /** [[evalAndScore]] compiled to int-indexed postorder arrays for the
-    * resident serving hot loop ([[LocalService.searchBool]] runs the
-    * evaluator once per candidate doc — the merged union of the positive
-    * lists, which for a hot leaf is most of the corpus). The recursive
+  /** [[evalAndScore]] compiled to int-indexed postorder arrays — the
+    * evaluator of both engines: [[LocalService.searchBool]] runs it once
+    * per candidate doc (the merged union of the positive lists, which for
+    * a hot leaf is most of the corpus), the distributed [[scored]] once
+    * per aggregated (query, doc) row. The recursive
     * form allocates a Seq + tuple per inner node and hashes term STRINGS
     * per leaf per doc; compiled evaluation is two flat array passes with
     * zero allocation. Node order is postorder (children before parents,
@@ -300,209 +301,118 @@ object BoolQuery {
       case _      => Array.empty
     }
 
-  /** Compile the folded predicate to a codegen Column over the presence
-    * bitmask (leaf bit positions from `bitOf`). */
-  private def predicate(n: Node, mask: org.apache.spark.sql.Column,
-                        bitOf: Map[String, Int]): org.apache.spark.sql.Column = n match {
-    case Term(t) => mask.bitwiseAND(lit(1L << bitOf(t))) =!= 0L
-    case Not(c)  => !predicate(c, mask, bitOf)
-    case And(cs) => cs.map(predicate(_, mask, bitOf)).reduceLeft(_ && _)
-    case Or(cs)  => cs.map(predicate(_, mask, bitOf)).reduceLeft(_ || _)
-    case True    => lit(true)
-    case _       => lit(false)
-  }
-
-  /** Clause-aware Lucene scoring as a codegen Column over the presence
-    * mask and the per-leaf partial-score pivot (`_p<slot>`): a node
-    * contributes only when it MATCHES — a matched AND adds all children, a
-    * matched OR its matching children, NOT nothing. Additions happen in
-    * fixed tree order (bitwise-deterministic; the SQL oracle mirrors the
-    * same CASE tree term for term). */
-  private def scoreExpr(n: Node, mask: org.apache.spark.sql.Column,
-                        bitOf: Map[String, Int],
-                        slotOf: Map[String, Int]): org.apache.spark.sql.Column = n match {
-    case Term(t) =>
-      slotOf.get(t).map(i => coalesce(col(s"_p$i"), lit(0.0))).getOrElse(lit(0.0))
-    case Not(_) => lit(0.0)
-    case And(cs) =>
-      when(predicate(n, mask, bitOf),
-        cs.map(scoreExpr(_, mask, bitOf, slotOf)).reduceLeft(_ + _)).otherwise(lit(0.0))
-    case Or(cs) =>
-      when(predicate(n, mask, bitOf),
-        cs.map(scoreExpr(_, mask, bitOf, slotOf)).reduceLeft(_ + _)).otherwise(lit(0.0))
-    case _ => lit(0.0)
-  }
-
   /** Batched boolean search: every boolean query of a log in ONE Spark job
     * (the [[Searcher.searchAll]] analog). Same semantics as [[search]] per
-    * query; the per-(query, doc) (mask, slot partials) aggregate feeds the
-    * SHARED recursive evaluator ([[evalAndScore]]) executor-side with the
-    * broadcast folded trees — scores bitwise-identical to the single-query
-    * Column form. Returns (queryId, rank, docId, score). */
+    * query. Returns (queryId, rank, docId, score). */
   def searchAll(ix: Searcher.LoadedIndex, queries: Seq[(Int, Node)],
-                k: Int): DataFrame = {
-    val spark = ix.spark
-    import spark.implicits._
-    def empty =
-      Seq.empty[(Int, Int, Int, Double)].toDF("queryId", "rank", "docId", "score")
-    if (queries.isEmpty || k <= 0) return empty
-    val all0 = queries.flatMap { case (_, n) =>
-      val (p, ng) = leafTerms(n); p ++ ng
-    }.distinct
-    if (all0.isEmpty) return empty
-    val dfs: Map[String, Long] = ix.dfs(all0)
-    val live: Seq[(Int, Node)] = queries.flatMap { case (qid, n) =>
-      foldForEval(n, dfs.contains).map(qid -> _)
-    }
-    if (live.isEmpty) return empty
-    // per-query leaf tables: (queryId, term, bit, slot, idf) — bit/slot
-    // spaces are PER QUERY (each query's own mask and partial array)
-    final case class QInfo(qid: Int, root: Node, posTerms: Seq[String],
-                           bitOf: Map[String, Int])
-    val infos = live.map { case (qid, root) =>
-      val (pos, neg) = leafTerms(root)
-      require(pos.size + neg.size <= 62, s"boolean query $qid exceeds 62 distinct terms")
-      QInfo(qid, root, pos, (pos ++ neg).zipWithIndex.toMap)
-    }
-    val leafRows = infos.flatMap { qi =>
-      qi.bitOf.toSeq.map { case (t, bit) =>
-        (qi.qid, t, 1L << bit, qi.posTerms.indexOf(t),
-          Bm25.idf(ix.nDocs, dfs.getOrElse(t, 0L)))
-      }
-    }
-    val leafDf = broadcast(leafRows.toDF("queryId", "term", "bit", "slot", "idf"))
-    val allTerms = live.flatMap { case (_, n) =>
-      val (p, ng) = leafTerms(n); p ++ ng
-    }.distinct
-    // coverage per query; union of surviving blocks decoded once (extra
-    // blocks decoded for one query only add rows another query's own
-    // predicate discards — same exactness argument as Searcher.searchAll)
-    val blocks = ix.postings.filter($"term".isin(allTerms: _*))
-    // [[MetaStore]]-bounded fetch: the per-tree coverage walk is monotone
-    // in each term's intervals, so running it over COARSE coverage yields
-    // a sound superset to restrict the fine fetch to
-    val metaRaw = MetaStore.fineMetaBy(ix, blocks, allTerms, dfs)(covMap =>
-      MetaStore.unionIv(infos.map(qi => coverage(qi.root, covMap))))
-    val ranges: Map[String, Array[(Int, Int)]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) => t -> rs.sortBy(_._2).map(r => (r._2, r._3)) }
-    val keys: Set[(String, Int)] = infos.iterator.flatMap { qi =>
-      val cov = coverage(qi.root, ranges)
-      qi.bitOf.keysIterator.flatMap { t =>
-        val m = ranges.getOrElse(t, Array.empty[(Int, Int)])
-          .map(r => BlockMax.BlockMeta(r._1, r._2, 0, 0.0))
-        BlockMax.overlapping(m, cov).iterator.map(i => (t, m(i).first))
-      }
-    }.toSet
-    if (keys.isEmpty) return empty
-    val cacheLit = array(ix.lossyCache.map(lit).toSeq: _*)
-    val partScore = $"idf" *
-      ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
-    val decoded = Searcher.decodedScoreRows(ix, blocks
-      .join(broadcast(keys.toSeq.toDF("term", "firstDocId")),
-        Seq("term", "firstDocId"), "left_semi"))
-    val bcTrees = spark.sparkContext.broadcast(
-      infos.map(qi => qi.qid -> ((qi.root, qi.bitOf, qi.posTerms))).toMap)
-    val scored = decoded
-      .join(leafDf, "term")
-      .withColumn("partScore", partScore)
-      .groupBy($"queryId", $"docId")
-      .agg(sum($"bit").as("mask"),
-        collect_list(when($"slot" >= 0, struct($"slot", $"partScore"))).as("sps"))
-      .select($"queryId", $"docId".cast("int").as("docId"), $"mask",
-        $"sps".cast("array<struct<slot:int,partScore:double>>"))
-      .as[(Int, Int, Long, Seq[(Int, Double)])]
-      .flatMap { case (qid, docId, mask, sps) =>
-        val (root, bitOf, posTerms) = bcTrees.value(qid)
-        val parts = new Array[Double](posTerms.size)
-        sps.foreach { case (slot, p) => parts(slot) = p }
-        val slotIdx = posTerms.zipWithIndex.toMap
-        val (matched, score) = evalAndScore(root,
-          t => (mask & (1L << bitOf(t))) != 0L,
-          // total: a present NEGATIVE leaf's partial is requested but
-          // discarded by its Not parent — 0.0, never a lookup failure
-          t => slotIdx.get(t).map(parts).getOrElse(0.0))
-        if (matched) Iterator.single((qid, docId, score)) else Iterator.empty
-      }
-      .toDF("queryId", "docId", "score")
-    val withDel = ix.tombstones
-      .map(d => scored.join(d, Seq("docId"), "left_anti")).getOrElse(scored)
-    withDel
-      .as[(Int, Int, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(new TopKAggregator(k).toColumn)
-      .flatMap { case (qid, top) =>
-        top.iterator.zipWithIndex.map { case ((d, s), i) => (qid, i + 1, d, s) }
-      }
-      .toDF("queryId", "rank", "docId", "score")
-  }
+                k: Int): DataFrame =
+    (if (k <= 0) None else scored(ix, queries))
+      .fold(Searcher.noRanks(ix.spark))(Searcher.rankedTopK(_, k))
 
-  /** Boolean BM25 top-k over the index (see object doc for the contract).
-    * Accepts a query string (parsed) or a pre-built [[Node]]. */
+  /** Boolean BM25 top-k over the index (see object doc for the contract):
+    * the one-query case of [[searchAll]]'s scoring, ending in
+    * orderBy(score desc, docId asc) limit k. Accepts a query string
+    * (parsed) or a pre-built [[Node]]. */
   def search(ix: Searcher.LoadedIndex, query: String, k: Int): Dataset[Searcher.Hit] =
     search(ix, parse(query), k)
 
   def search(ix: Searcher.LoadedIndex, root0: Node, k: Int): Dataset[Searcher.Hit] = {
     val spark = ix.spark
     import spark.implicits._
-    if (k <= 0) return spark.emptyDataset[Searcher.Hit]
-    val (pos0, neg0) = leafTerms(root0)
-    val all0 = (pos0 ++ neg0).distinct
-    if (all0.isEmpty) return spark.emptyDataset[Searcher.Hit]
+    (if (k <= 0) None else scored(ix, Seq(0 -> root0)))
+      .fold(spark.emptyDataset[Searcher.Hit])(rows =>
+        Searcher.topHits(rows.select("docId", "score"), k))
+  }
+
+  /** (queryId, docId, score) of every doc matching its query's folded
+    * tree, delete tombstones applied; None when no query can match. Each
+    * query's leaves get per-query slots — positive leaves first (bit =
+    * scoring slot), then negative-only leaves — and each leaf decodes only
+    * the blocks overlapping its query's coverage, so presence flags are
+    * complete for every candidate doc. The union of surviving blocks
+    * decodes once (extra blocks decoded for one query only add rows
+    * another query's own predicate discards). Per (query, doc) one hash
+    * aggregation builds the presence bitmask (each (term, doc) posting is
+    * unique, so a sum of 2^bit is exact) and the positive leaves' partial
+    * scores, and [[compile]]'s program — one per query per partition, it
+    * holds per-doc scratch — evaluates the predicate and the clause-aware
+    * score. */
+  private def scored(ix: Searcher.LoadedIndex, queries: Seq[(Int, Node)]): Option[DataFrame] = {
+    val spark = ix.spark
+    import spark.implicits._
+    val all0 = queries.flatMap { case (_, n) =>
+      val (p, ng) = leafTerms(n); p ++ ng
+    }.distinct
+    if (all0.isEmpty) return None
     val dfs: Map[String, Long] = ix.dfs(all0)
-    val root = fold(root0, dfs.contains)
-    if (root == False || root == True || !hasPositive(root))
-      return spark.emptyDataset[Searcher.Hit]
-    val (posTerms, negTerms) = leafTerms(root)
-    val allTerms = (posTerms ++ negTerms).distinct
-    val blocks = ix.postings.filter($"term".isin(allTerms: _*))
-    val metaRaw = MetaStore.fineMetaBy(ix, blocks, allTerms, dfs)(covMap =>
-      coverage(root, covMap))
-    val ranges: Map[String, Array[(Int, Int)]] = metaRaw.groupBy(_._1)
-      .map { case (t, rs) => t -> rs.sortBy(_._2).map(r => (r._2, r._3)) }
-    val cov = coverage(root, ranges)
-    if (cov.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    // every leaf (positive AND negative) decodes only blocks overlapping the
-    // tree's coverage: presence flags are complete for all candidate docs
-    val keys: Set[(String, Int)] = allTerms.iterator.flatMap { t =>
-      val m = ranges.getOrElse(t, Array.empty[(Int, Int)])
-        .map(r => BlockMax.BlockMeta(r._1, r._2, 0, 0.0))
-      BlockMax.overlapping(m, cov).iterator.map(i => (t, m(i).first))
-    }.toSet
-    if (keys.isEmpty) return spark.emptyDataset[Searcher.Hit]
-    val bitOf: Map[String, Int] = allTerms.zipWithIndex.toMap
-    require(allTerms.size <= 62, "boolean query exceeds 62 distinct terms")
-    val slotOf: Map[String, Int] = posTerms.zipWithIndex.toMap
-    val idfs = dfs.map { case (t, d) => t -> Bm25.idf(ix.nDocs, d) }
-    val leafDf = broadcast(allTerms.map { t =>
-      (t, 1L << bitOf(t), slotOf.getOrElse(t, -1), idfs.getOrElse(t, 0.0))
-    }.toDF("term", "bit", "slot", "idf"))
-    val cacheLit = array(ix.lossyCache.map(lit).toSeq: _*)
-    val partScore = $"idf" *
-      ($"tf" * lit(Bm25.K1 + 1.0) / ($"tf" + element_at(cacheLit, $"lenByte" + 1)))
-    val decoded = Searcher.decodedScoreRows(ix, blocks
-      .join(broadcast(keys.toSeq.toDF("term", "firstDocId")),
-        Seq("term", "firstDocId"), "left_semi"))
-    // each (term, doc) posting is unique → the bit sum is an exact mask and
-    // each positive leaf's max(when(...)) pivot holds its single partial
-    val pivots = posTerms.zipWithIndex.map { case (t, i) =>
-      max(when($"term" === t, $"partScore")).as(s"_p$i")
+    val live = queries.flatMap { case (qid, n) =>
+      foldForEval(n, dfs.contains).map { root =>
+        val (pos, neg) = leafTerms(root)
+        require(pos.size + neg.size <= 62, s"boolean query $qid exceeds 62 distinct terms")
+        (qid, root, pos, neg)
+      }
     }
-    val agg = decoded
+    if (live.isEmpty) return None
+    val allTerms = live.flatMap(q => q._3 ++ q._4).distinct
+    // [[MetaStore]]-bounded fetch: the per-tree coverage walk is monotone
+    // in each term's intervals, so running it over COARSE coverage yields
+    // a sound superset to restrict the fine fetch to
+    val meta = BlockMax.metaByTerm(
+      MetaStore.fineMetaBy(ix, ix.postings.filter($"term".isin(allTerms: _*)), allTerms, dfs)(
+        covMap => MetaStore.unionIv(live.map(q => coverage(q._2, covMap)))),
+      Map.empty, ix.lossyCache)
+    val ranges = meta.map { case (t, m) => t -> BlockMax.ranges(m) }
+    val keys = live.iterator.flatMap { case (_, root, pos, neg) =>
+      val cov = coverage(root, ranges)
+      BlockMax.keysOf(meta, (pos ++ neg).filter(meta.contains)
+        .map(t => t -> BlockMax.overlapping(meta(t), cov)).toMap)
+    }.toSet
+    if (keys.isEmpty) return None
+    val leafDf = broadcast(live.flatMap { case (qid, _, pos, neg) =>
+      (pos ++ neg).zipWithIndex.map { case (t, bit) =>
+        (qid, t, 1L << bit, if (bit < pos.size) bit else -1, Bm25.idf(ix.nDocs, dfs(t)))
+      }
+    }.toDF("queryId", "term", "bit", "slot", "idf"))
+    val bcTrees = spark.sparkContext.broadcast(
+      live.map { case (qid, root, pos, neg) => qid -> ((root, pos, neg)) }.toMap)
+    val rows = Searcher.decodedScoreRows(ix, Searcher.blocksOf(ix, keys))
       .join(leafDf, "term")
-      .withColumn("partScore", partScore)
-      .groupBy($"docId")
-      .agg(sum($"bit").as("mask"), pivots: _*)
-      .withColumn("score", scoreExpr(root, $"mask", bitOf, slotOf))
-      .filter(predicate(root, $"mask", bitOf))
-    val withDel = ix.tombstones
-      .map(d => agg.join(d, Seq("docId"), "left_anti")).getOrElse(agg)
-    val hits = withDel
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
-      .select($"docId".cast("int"), $"score")
-      .as[(Int, Double)].collect()
-      .zipWithIndex.map { case ((d, s), i) => Searcher.Hit(d, s, i + 1) }
-    hits.toSeq.toDS()
+      .withColumn("partScore", Searcher.partScore(ix, $"idf", $"tf"))
+      .groupBy($"queryId", $"docId")
+      .agg(sum($"bit").as("mask"),
+        collect_list(when($"slot" >= 0, struct($"slot", $"partScore"))).as("sps"))
+      .select($"queryId", $"docId", $"mask",
+        $"sps".cast("array<struct<slot:int,partScore:double>>"))
+      .as[(Int, Int, Long, Seq[(Int, Double)])]
+      .mapPartitions { it =>
+        val progs = scala.collection.mutable.HashMap.empty[Int, CompiledQuery]
+        it.flatMap { case (qid, docId, mask, sps) =>
+          val q = progs.getOrElseUpdate(qid, {
+            val (root, pos, neg) = bcTrees.value(qid)
+            new CompiledQuery(compile(root, pos.zipWithIndex.toMap, neg.zipWithIndex.toMap),
+              pos.size, neg.size)
+          })
+          q.eval(mask, sps).map(s => (qid, docId, s))
+        }
+      }
+      .toDF("queryId", "docId", "score")
+    Some(ix.tombstones.fold(rows)(d => rows.join(d, Seq("docId"), "left_anti")))
+  }
+
+  /** A query's [[Compiled]] program with its per-doc input buffers, fed
+    * from an aggregated (presence mask, positive-slot partials) row. */
+  private final class CompiledQuery(prog: Compiled, nPos: Int, nNeg: Int) {
+    private val posPresent = new Array[Boolean](nPos)
+    private val partials = new Array[Double](nPos)
+    private val negPresent = new Array[Boolean](nNeg)
+    /** The clause-aware score if the doc matches. */
+    def eval(mask: Long, sps: Seq[(Int, Double)]): Option[Double] = {
+      var i = 0
+      while (i < nPos) { posPresent(i) = (mask & (1L << i)) != 0L; partials(i) = 0.0; i += 1 }
+      i = 0
+      while (i < nNeg) { negPresent(i) = (mask & (1L << (nPos + i))) != 0L; i += 1 }
+      sps.foreach { case (slot, p) => partials(slot) = p }
+      if (prog.eval(posPresent, partials, negPresent)) Some(prog.lastScore) else None
+    }
   }
 }

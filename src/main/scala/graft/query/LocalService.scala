@@ -386,9 +386,8 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * and sorts the full candidate set on EVERY call — under 16 concurrent
     * clients that allocation storm was a multi-second p99 tail. The dense
     * array is only used when it is small (≤ [[LocalService.maxDenseDocs]]
-    * docs, ≈128 MB/thread worst case); larger indexes keep the boxed path
-    * — but at that scale the df gate routes hot prefixes to the
-    * distributed engine anyway. */
+    * docs, ≈128 MB/thread worst case); a larger index serves expansions
+    * from the distributed engine. */
   private val scoreBuf = new ThreadLocal[Array[Double]]() {
     override def initialValue(): Array[Double] = new Array[Double](idSpace)
   }
@@ -518,19 +517,18 @@ final class LocalService(val ix: Searcher.LoadedIndex,
   }
 
   /** Disjunctive scoring of a resolved dictionary expansion over resident
-    * lists, df-gated like every serving entry point. */
+    * lists, df-gated like every serving entry point. A docId space too
+    * large for the per-thread dense buffer routes to the distributed
+    * engine, as over-budget norms do. */
   private def serveExpansion(terms: Seq[String], k: Int): Seq[Oracle.Hit] = {
     if (terms.isEmpty) return Nil
     val dfs = dfOf(terms)
-    if (!normsResident || deletesOverBudget ||
+    if (!normsResident || deletesOverBudget || idSpace > LocalService.maxDenseDocs ||
         dfs.valuesIterator.exists(_ > maxFetchPostings))
       return distributed(terms, k, phrase = false, conjunctive = false)
     val lists = resolveLists(terms, phrase = false)
     if (lists == null) return distributed(terms, k, phrase = false, conjunctive = false)
-
-    val lenBytes = docLenBytes
-    if (idSpace <= LocalService.maxDenseDocs) scoreDense(lists, lenBytes, k)
-    else scoreBoxed(lists, lenBytes, k)
+    scoreDense(lists, docLenBytes, k)
   }
 
   /** Dense-array disjunctive scoring: accumulate in expansion-term order
@@ -598,26 +596,6 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       }
       d += 1
     }
-  }
-
-  /** Boxed-map fallback for indexes too large for a per-thread dense
-    * buffer; candidate set is still df-gated by the caller. */
-  private def scoreBoxed(lists: Seq[TermList], lenBytes: Array[Int],
-                         k: Int): Seq[Oracle.Hit] = {
-    val acc = scala.collection.mutable.HashMap.empty[Int, Double]
-    lists.foreach { tl =>
-      val idf = Bm25.idf(ix.nDocs, tl.n.toLong)
-      var i = 0
-      while (i < tl.n) {
-        val d = tl.docIds(i)
-        val part = idf * Bm25.tfNormLossy(tl.tfs(i).toLong, lenBytes(d), ix.lossyCache)
-        acc.update(d, acc.getOrElse(d, 0.0) + part)
-        i += 1
-      }
-    }
-    val top = new Kernel.TopK(k)
-    acc.foreach { case (d, s) => if (!isDeleted(d)) top.offer(d, s) }
-    LocalService.hitsOf(top)
   }
 
   // LRU over fetched doc bodies for the snippet path (bounded by total

@@ -69,21 +69,7 @@ object MetaStore {
     ix.spark.conf.get(key, dflt.toString).toLong
 
   /** Merge possibly-overlapping intervals into disjoint ascending ones. */
-  def mergeIntervals(iv: Array[(Int, Int)]): Array[(Int, Int)] = {
-    if (iv.length <= 1) return iv
-    val s = iv.sortBy(_._1)
-    val out = scala.collection.mutable.ArrayBuffer(s(0))
-    var i = 1
-    while (i < s.length) {
-      val (lo, hi) = s(i)
-      val (plo, phi) = out.last
-      if (lo.toLong <= phi.toLong + 1L) {
-        if (hi > phi) out(out.length - 1) = (plo, hi)
-      } else out += ((lo, hi))
-      i += 1
-    }
-    out.toArray
-  }
+  def mergeIntervals(iv: Array[(Int, Int)]): Array[(Int, Int)] = BlockMax.union(iv.iterator)
 
   /** Coarsen disjoint ascending intervals to at most `max` by keeping only
     * the `max - 1` WIDEST gaps as separators. Coarsening only ADDS
@@ -115,17 +101,13 @@ object MetaStore {
       col("lastDocId") >= lo && col("firstDocId") <= hi
     }.reduce(_ || _)
 
-  private def asMeta(iv: Array[(Int, Int)]): Array[BlockMax.BlockMeta] =
-    iv.map(r => BlockMax.BlockMeta(r._1, r._2, 0, 0.0))
-
   /** Intersection of two disjoint ascending interval sets. */
   def intersectIv(a: Array[(Int, Int)], b: Array[(Int, Int)]): Array[(Int, Int)] =
-    if (a.isEmpty || b.isEmpty) Array.empty
-    else BlockMax.intersectCoverage(Seq(asMeta(a), asMeta(b)))
+    BlockMax.intersect(a, b)
 
   /** Merged union of interval sets. */
   def unionIv(ivs: Seq[Array[(Int, Int)]]): Array[(Int, Int)] =
-    BlockMax.unionCoverage(ivs.map(asMeta))
+    BlockMax.union(ivs.iterator.flatten)
 
   /** Per-term coarse coverage (merged ascending intervals) via the loaded
     * index's cache; returns the map plus rows fetched for diagnostics.
@@ -238,9 +220,8 @@ object MetaStore {
   }
   def lastExclDiag: ExclDiag = exclDiagTL.get()
 
-  /** (term, firstDocId, lastDocId) rows of `terms` whose blocks overlap
-    * `candidates` — the exclusion-term fetch shared by search /
-    * matchingDocs / searchAll, under the same two-level discipline as
+  /** Fine meta rows of `terms` whose blocks overlap `candidates` — the
+    * exclusion-term fetch of the distributed query paths, under the same two-level discipline as
     * [[fineMetaBy]]: past the direct cap, each excluded term's COARSE
     * coverage (cached per term in the shared LRU) is intersected with the
     * positive candidates first, and fine rows are fetched only inside
@@ -253,8 +234,7 @@ object MetaStore {
     * [[MaxFetchIntervals]] cap as the fine fetch. */
   def boundedRangeMeta(ix: Searcher.LoadedIndex, terms: Seq[String],
                        candidates: Array[(Int, Int)],
-                       dfs: Map[String, Long] = Map.empty)
-      : Array[(String, Int, Int)] = {
+                       dfs: Map[String, Long] = Map.empty): Array[FineRow] = {
     val spark = ix.spark
     import spark.implicits._
     if (terms.isEmpty || candidates.isEmpty) return Array.empty
@@ -266,11 +246,11 @@ object MetaStore {
     // direct path needs an estimate strictly below the cap)
     val est = distinct.iterator
       .map(t => dfs.get(t).map(_ / 128L + 1L).getOrElse(directCap)).sum
-    def fetch(bound: Array[(Int, Int)]): Array[(String, Int, Int)] =
+    def fetch(bound: Array[(Int, Int)]): Array[FineRow] =
       ix.postings.filter(col("term").isin(distinct: _*))
-        .select("term", "firstDocId", "lastDocId")
         .filter(overlapPred(coarsenTo(bound, MaxFetchIntervals)))
-        .as[(String, Int, Int)].collect()
+        .select("term", "firstDocId", "lastDocId", "n", "maxTf", "minLenByte")
+        .as[FineRow].collect()
     if (est < directCap) {
       val rows = fetch(cand)
       exclDiagTL.set(ExclDiag(est, twoLevel = false, 0L, cand.length, rows.length.toLong))

@@ -132,7 +132,9 @@ object StreamingIndexer {
   /** Compact all committed segments into one (the Lucene merge analog):
     * decode every segment's postings per term, merge by docId (segments
     * carry absolute, disjoint docId ranges), re-encode into fresh blocks,
-    * and rewrite doclen/termstats/docstore into a single new segment.
+    * and rewrite termstats/docstore into a single new segment. A segment
+    * whose postings predate the inline norm stream throws
+    * [[PostingCodec.LegacyPostingsException]]: the index must be rebuilt.
     *
     * Crash-safe commit order: the compacted segment is fully written under
     * `seg=<maxSeg+1>` FIRST; the single atomic commit point is the rename
@@ -168,38 +170,26 @@ object StreamingIndexer {
     val src = spark.read.option("basePath", s"$indexDir/postings")
       .parquet(segs.map(s => s"$indexDir/postings/seg=$s"): _*)
     // per-posting norms come from the source blocks' inline lenBytes
-    // stream (no docstore join in the merge); segments written before the
-    // stream existed fall back to the (docId, lenByte) join below
-    val inlineLen = src.columns.contains("lenBytes")
-    val flat = (
-      if (inlineLen)
-        src.select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes", "positions", "offsets")
-          .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-          .flatMap { case (t, prev, n, ids, tfs, lbs, pos, off) =>
-            val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-            val lb = PostingCodec.decodeLenBytes(n, lbs)
-            val ps = PostingCodec.decodePositions(n, pos)
-            val os = PostingCodec.decodeOffsets(n, off)
-            dt.iterator.zipWithIndex.map { case ((d, tf), i) =>
-              (t, d, tf, PostingCodec.encodePositionsBlob(ps(i)),
-                PostingCodec.encodeOffsetsBlob(os(i).map(_._1), os(i).map(_._2)), lb(i))
-            }
-          }
-      else
-        src.select("term", "prevDocId", "n", "docIds", "tfs", "positions", "offsets")
-          .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
-          .flatMap { case (t, prev, n, ids, tfs, pos, off) =>
-            val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
-            val ps = PostingCodec.decodePositions(n, pos)
-            val os = PostingCodec.decodeOffsets(n, off)
-            dt.iterator.zipWithIndex.map { case ((d, tf), i) =>
-              (t, d, tf, PostingCodec.encodePositionsBlob(ps(i)),
-                PostingCodec.encodeOffsetsBlob(os(i).map(_._1), os(i).map(_._2)), -1)
-            }
-          }
-    ).toDF("term", "docId", "tf", "posBlob", "offBlob", "lb")
-    // the docstore is read for its own segment rewrite (and as the legacy
-    // norm source when the postings predate the inline lenBytes stream)
+    // stream (no docstore join in the merge); a segment written before the
+    // stream existed cannot be merged — the index must be rebuilt
+    val srcFiles = new graft.query.SnapshotReader.StageFiles(
+      src.inputFiles.toSeq.map(f => new java.net.URI(f).getPath))
+    srcFiles.paths.find(!srcFiles.hasColumn(_, "lenBytes"))
+      .foreach(p => throw new PostingCodec.LegacyPostingsException(p))
+    val flat = src
+      .select("term", "prevDocId", "n", "docIds", "tfs", "lenBytes", "positions", "offsets")
+      .as[(String, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
+      .flatMap { case (t, prev, n, ids, tfs, lbs, pos, off) =>
+        val dt = PostingCodec.decodeDocIdTf(prev, n, ids, tfs)
+        val lb = PostingCodec.decodeLenBytes(n, lbs)
+        val ps = PostingCodec.decodePositions(n, pos)
+        val os = PostingCodec.decodeOffsets(n, off)
+        dt.iterator.zipWithIndex.map { case ((d, tf), i) =>
+          IndexBuilder.FlatPosting(t, d, tf, PostingCodec.encodePositionsBlob(ps(i)),
+            PostingCodec.encodeOffsetsBlob(os(i).map(_._1), os(i).map(_._2)), lb(i))
+        }
+      }
+    // the docstore is read for its own segment rewrite
     val srcStoreAll = spark.read.option("basePath", s"$indexDir/docstore")
       .parquet(segs.map(s => s"$indexDir/docstore/seg=$s"): _*)
     // delete tombstones are PHYSICALLY applied here (the Lucene merge
@@ -211,20 +201,12 @@ object StreamingIndexer {
     // renumbered), so external references and the docsAfter watermark hold.
     val srcStore = tomb.map(t => srcStoreAll.join(t, Seq("docId"), "left_anti"))
       .getOrElse(srcStoreAll)
-    val flatLive = tomb.map(t => flat.join(t, Seq("docId"), "left_anti"))
-      .getOrElse(flat)
+    val flatLive = tomb.fold(flat)(t =>
+      flat.join(t, Seq("docId"), "left_anti").as[IndexBuilder.FlatPosting])
     val mergedDocs = tomb.fold(segs.flatMap(info.get).map(_._1).sum)(_ =>
       srcStore.count())
-    val flatTyped = (
-        if (inlineLen) flatLive
-        else flatLive.drop("lb")
-          .join(srcStore.select($"docId", $"lenByte".as("lb")), "docId")
-      )
-      .select($"term", $"docId", $"tf", $"posBlob", $"offBlob", $"lb")
-      .as[(String, Int, Int, Array[Byte], Array[Byte], Int)]
-      .map(r => IndexBuilder.FlatPosting(r._1, r._2, r._3, r._4, r._5, r._6))
 
-    IndexBuilder.buildBlocks(spark, flatTyped, total, partitions)
+    IndexBuilder.buildBlocks(spark, flatLive, total, partitions)
       .write.mode("overwrite").option("compression", "zstd")
       .parquet(s"$indexDir/postings/seg=$newSeg")
     IndexBuilder.superBlockRows(
@@ -308,8 +290,7 @@ object StreamingIndexer {
       graft.index.Tombstones.retireCovered(spark, indexDir,
         srcStoreAll.select("docId"))
     segs.foreach { s =>
-      // "doclen" covers legacy segments written before lengths moved inline
-      Seq("postings", "doclen", "termstats", "docstore", "bloom", "trigrams",
+      Seq("postings", "termstats", "docstore", "bloom", "trigrams",
           "superblocks", "fuzzy").foreach { st =>
         org.apache.commons.io.FileUtils.deleteQuietly(
           new java.io.File(s"$indexDir/$st/seg=$s"))

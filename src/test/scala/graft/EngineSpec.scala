@@ -1490,10 +1490,9 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits.map(_.docId) == Oracle.search(oracle, Seq("if", "return"), 10).map(_.docId))
   }
 
-  test("legacy index without the inline norm stream: fallback join is rank-identical") {
+  test("legacy index without the inline norm stream: every scoring path fails with a rebuild error") {
     // indexes written before the lenBytes stream existed lack the column;
-    // every scoring path must fall back to the (docId, lenByte) docstore
-    // join with identical results. Simulate one by stripping the column.
+    // no path reads that layout any more. Simulate one by stripping it.
     built
     val legacyDir = java.nio.file.Files.createTempDirectory("graft_ix_legacy").toString
     try {
@@ -1502,27 +1501,17 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.parquet(s"$tmp/postings").drop("lenBytes")
         .write.mode("overwrite").parquet(s"$legacyDir/postings")
       val legacy = Searcher.load(spark, legacyDir)
-      assert(ix.hasInlineLen, "current builds must carry the inline norm stream")
-      assert(!legacy.hasInlineLen)
-      // per-query path: conjunctive, disjunctive, and phrase
-      Seq(Seq("if", "return"), Seq("hash", "seed", "mask")).foreach { q =>
-        val a = Searcher.search(ix, q, 10).collect().sortBy(_.rank)
-        val b = Searcher.search(legacy, q, 10).collect().sortBy(_.rank)
-        assert(a.map(h => (h.docId, h.score)).toSeq == b.map(h => (h.docId, h.score)).toSeq,
-          s"legacy fallback diverges for $q")
+      ix.requireNormStream // current builds carry the inline norm stream
+      def rejects(what: String)(body: => Any): Unit = {
+        val e = intercept[PostingCodec.LegacyPostingsException](body)
+        assert(e.getMessage.contains("rebuild the index"), s"$what: ${e.getMessage}")
       }
-      val po = Searcher.search(ix, Seq("if", "return"), 10, phrase = true)
-        .collect().sortBy(_.rank)
-      val pl = Searcher.search(legacy, Seq("if", "return"), 10, phrase = true)
-        .collect().sortBy(_.rank)
-      assert(po.map(h => (h.docId, h.score)).toSeq == pl.map(h => (h.docId, h.score)).toSeq)
-      // batched path
+      rejects("term")(Searcher.search(legacy, Seq("if", "return"), 10).collect())
+      rejects("phrase")(Searcher.search(legacy, Seq("if", "return"), 10, phrase = true).collect())
       val qs = TestQueries.mix.zipWithIndex.map { case (q, i) => (i, q) }
-      val ba = Searcher.searchAll(ix, qs, 10).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
-      val bb = Searcher.searchAll(legacy, qs, 10).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).sortBy(x => (x._1, x._2))
-      assert(ba.toSeq == bb.toSeq, "legacy fallback diverges on the batched path")
+      rejects("batch")(Searcher.searchAll(legacy, qs, 10).collect())
+      rejects("bool")(graft.query.BoolQuery.search(legacy, "if AND return", 10).collect())
+      rejects("fsck")(graft.index.Integrity.check(spark, legacyDir).collect())
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacyDir))
     }
@@ -1546,17 +1535,79 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.map(_.docId) == Oracle.search(oracle, terms, 10, phrase = phrase).map(_.docId))
     }
     assert(warm.postings eq warm.postings, "an unchanged snapshot must reuse its relation")
+    // the batch paths and the boolean path plan from the same warm caches:
+    // a metadata collect creeping back in would show as a second execution
+    val others: Seq[(String, () => Seq[Any])] = Seq(
+      "searchAll" -> (() => Searcher.searchAll(warm,
+        Seq(0 -> Seq("hash", "seed"), 1 -> Seq("if", "return")), 10, disjunctive = Set(1))
+        .collect().toSeq),
+      "searchAllPhrase" -> (() => Searcher.searchAllPhrase(warm,
+        Seq(0 -> Seq("if", "return"), 1 -> Seq("return", "val")), 10, Map(1 -> 2))
+        .collect().toSeq),
+      "BoolQuery.search" -> (() => graft.query.BoolQuery.search(warm,
+        "(hash AND seed) OR (if AND return)", 10).collect().toSeq))
+    others.foreach { case (name, call) =>
+      val want = call()
+      val (execs, got) = SparkJobs.executionsDuring(spark)(call())
+      assert(execs.nonEmpty && !execs.contains(null),
+        s"$name: a job ran outside any SQL execution: $execs")
+      assert(execs.distinct.size == 1, s"$name: jobs of several queries ran: $execs")
+      assert(got == want && got.nonEmpty, name)
+    }
   }
 
-  test("hasInlineLen: a missing postings stage reads false, an unreadable footer throws") {
+  test("norm-stream check: a missing postings stage passes, an unreadable footer throws") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ix_inline").toString
     try {
       def fresh = Searcher.LoadedIndex(spark, dir, 0L, 0.0, Array.empty)
-      assert(!fresh.hasInlineLen)
+      fresh.requireNormStream // no postings stage: nothing to check
       val part = java.nio.file.Paths.get(dir, "postings", "part-00000.parquet")
       java.nio.file.Files.createDirectories(part.getParent)
       java.nio.file.Files.write(part, "not a parquet file".getBytes("UTF-8"))
-      intercept[RuntimeException](fresh.hasInlineLen)
+      val e = intercept[RuntimeException](fresh.requireNormStream)
+      assert(!e.isInstanceOf[PostingCodec.LegacyPostingsException], e.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("one-query batch: cursors, shifted phrases, NOT and boosts on phrases, bloom factors vs oracle") {
+    // search runs the batch pipeline; its per-query options are checked
+    // here against the oracle on an index with a bloom store and one
+    // tombstone (the top phrase hit), with the WAND θ-prune forced on
+    built
+    val dir = java.nio.file.Files.createTempDirectory("graft_ix_batch1").toString
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(tmp), new java.io.File(dir))
+      graft.index.Bloom.buildStage(spark, dir)
+      val deleted = Oracle.search(oracle, Seq("if", "return"), 1, phrase = true).head.docId
+      graft.index.Tombstones.delete(spark, dir, Seq(deleted))
+      val dix = Searcher.load(spark, dir)
+      def after(h: Oracle.Hit, cur: Option[(Double, Int)]): Boolean =
+        cur.forall { case (s0, d0) => h.score < s0 || (h.score == s0 && h.docId > d0) }
+      // (terms, phrase, NOT terms, boosts, shifts, cursor at this full-ranking rank)
+      val cases = Seq(
+        (Seq("if", "return"), false, Nil, Map.empty[String, Double], None, Some(3)),
+        (Seq("if", "if", "return"), false, Seq("val"), Map("return" -> 1.5), None, None),
+        (Seq("if", "return"), true, Seq("val"), Map("if" -> 2.0), None, None),
+        (Seq("return", "val"), true, Nil, Map.empty[String, Double], None, Some(2)),
+        (Seq("if", "return"), true, Nil, Map("return" -> 0.5), Some(Seq(3, 4)), None),
+        (Seq("if", "return"), true, Seq("hash"), Map.empty[String, Double], Some(Seq(0, 2)), None))
+      var nonEmpty = 0
+      cases.foreach { case (terms, phrase, ex, boosts, shifts, cursorRank) =>
+        val full = Oracle.search(oracle, terms, NDocs.toInt, phrase, ex, 0, boosts, shifts)
+          .filter(_.docId != deleted)
+        val cursor = cursorRank.flatMap(r => full.lift(r - 1)).map(h => (h.score, h.docId))
+        val want = full.filter(after(_, cursor)).take(10)
+        if (want.nonEmpty) nonEmpty += 1
+        for (factor <- Seq(Searcher.BloomNeverUse, 1, 4)) {
+          val got = Searcher.search(dix, terms, 10, phrase = phrase, bloomFactor = factor,
+            wandMinPostings = 0L, excludeTerms = ex, after = cursor, boosts = boosts,
+            phraseShifts = shifts).collect().sortBy(_.rank)
+          val what = s"$terms phrase=$phrase -$ex $boosts shifts=$shifts after=$cursor factor=$factor"
+          assert(got.map(_.docId).toSeq == want.map(_.docId), what)
+          got.zip(want).foreach { case (g, w) => assert(math.abs(g.score - w.score) < 1e-9, what) }
+        }
+      }
+      assert(nonEmpty >= 4, s"only $nonEmpty of ${cases.size} cases have hits")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 

@@ -232,6 +232,28 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gotP.map(_.docId).toSeq == wantP.map(_.docId))
   }
 
+  test("compaction rejects a segment written before the inline norm stream") {
+    import spark.implicits._
+    def df(lo: Int, hi: Int) = (lo until hi).map { i =>
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha beta$i")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_seg").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 20), dir, segId = 0, partitions = 2)
+      StreamingIndexer.appendSegment(spark, df(20, 40), dir, segId = 1, partitions = 2)
+      // segment 1's postings as a writer before the lenBytes stream left them
+      val seg1 = new java.io.File(s"$dir/postings/seg=1")
+      val stripped = new java.io.File(s"$dir/stripped")
+      spark.read.parquet(seg1.getPath).drop("lenBytes").write.parquet(stripped.getPath)
+      org.apache.commons.io.FileUtils.deleteDirectory(seg1)
+      org.apache.commons.io.FileUtils.moveDirectory(stripped, seg1)
+      val e = intercept[graft.index.PostingCodec.LegacyPostingsException](
+        StreamingIndexer.compact(spark, dir, partitions = 2))
+      assert(e.getMessage.contains("seg=1") && e.getMessage.contains("rebuild the index"))
+      assert(StreamingIndexer.committedSegments(dir) == Seq(0L, 1L), "nothing was committed")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("tiered compaction merges only small segments, keeps settled ones") {
     import spark.implicits._
     val ixDir = s"$root/ix"
