@@ -1490,7 +1490,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hits.map(_.docId) == Oracle.search(oracle, Seq("if", "return"), 10).map(_.docId))
   }
 
-  test("legacy index without the inline norm stream: every scoring path fails with a rebuild error") {
+  test("rebuild error on every scoring path of an index without the inline norm stream") {
     // indexes written before the lenBytes stream existed lack the column;
     // no path reads that layout any more. Simulate one by stripping it.
     built
