@@ -378,9 +378,9 @@ object IndexBuilder {
 
     timed("superblocks") { if (!Manifest.isCommitted(indexDir, "superblocks")) {
       // persisted COARSE block metadata ([[graft.query.MetaStore]]'s
-      // two-level fetch): one (term, lo, hi) row per docId super-bucket of
-      // ~128 blocks, so a cold hot-term plan reads O(df/16384) precomputed
-      // rows instead of aggregating O(df/128) block rows per query.
+      // two-level read): one (term, lo, hi) row per docId super-bucket of
+      // ~128 blocks, so a cold hot-term plan reads O(df/16384) coarse rows
+      // before it reads block rows only where its coverage survives.
       // Written term-sorted for row-group pruning on the probe's
       // `term IN (...)`. The same pass carries per-bucket df/cf PARTIALS
       // (pruned by the probe's column selection, ~2 ints/row on disk):
@@ -417,8 +417,8 @@ object IndexBuilder {
   }
 
   /** docId span per coarse super-bucket — one bucket ≈ 128 dense-term
-    * blocks. Must match `spark.graft.meta.superSpan`'s default; a session
-    * overriding that conf falls back to the per-query aggregation. */
+    * blocks: the granularity of the coverage [[graft.query.MetaStore]]'s
+    * two-level read bounds its block rows by. */
   val SuperSpan: Long = 1L << 14
 
   /** Row-group size of the termstats stage, ~1 MB (tens of thousands of

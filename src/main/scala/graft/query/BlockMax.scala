@@ -16,10 +16,11 @@ import graft.core.Bm25
   * Every distributed planner — [[Searcher]]'s one pipeline, its synonym
   * and match-set queries, [[BoolQuery]] — turns [[MetaStore]] rows into
   * [[BlockMeta]] with [[metaByTerm]] and plans with these sweeps; the
-  * [[MetaStore]] interval algebra is the same [[intersect]] / [[union]].
+  * coverage algebra of [[MetaStore]] and [[BoolQuery]] is the same
+  * [[intersect]] / [[union]].
   *
   * Planning is O(total blocks · nTerms) driver work on df/128-sized arrays
-  * (a 10^8-df term is ~800k meta rows — collected once per query; beyond
+  * (a 10^8-df term is ~800k meta rows — read once per query; beyond
   * that the same sweep distributes as a sort-merge join on range keys).
   */
 object BlockMax {

@@ -294,9 +294,9 @@ object BoolQuery {
       case And(cs) =>
         cs.filter(hasPositive).map(coverage(_, ranges)) match {
           case Seq()       => Array.empty
-          case head +: tail => tail.foldLeft(head)(MetaStore.intersectIv)
+          case head +: tail => tail.foldLeft(head)(BlockMax.intersect)
         }
-      case Or(cs) => MetaStore.unionIv(cs.map(coverage(_, ranges)))
+      case Or(cs) => BlockMax.union(cs.iterator.flatMap(coverage(_, ranges)))
       case Not(_) => Array.empty // only reachable for pure-negative trees
       case _      => Array.empty
     }
@@ -358,8 +358,8 @@ object BoolQuery {
     // in each term's intervals, so running it over COARSE coverage yields
     // a sound superset to restrict the fine fetch to
     val meta = BlockMax.metaByTerm(
-      MetaStore.fineMetaBy(ix, ix.postings.filter($"term".isin(allTerms: _*)), allTerms, dfs)(
-        covMap => MetaStore.unionIv(live.map(q => coverage(q._2, covMap)))),
+      MetaStore.fineMetaBy(ix, allTerms, dfs)(
+        covMap => BlockMax.union(live.iterator.flatMap(q => coverage(q._2, covMap)))),
       Map.empty, ix.lossyCache)
     val ranges = meta.map { case (t, m) => t -> BlockMax.ranges(m) }
     val keys = live.iterator.flatMap { case (_, root, pos, neg) =>

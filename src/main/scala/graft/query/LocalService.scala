@@ -34,9 +34,15 @@ import graft.core.{Bm25, Kernel, Oracle}
   * delete-tombstones support in-place reload ([[reloadTombstones]] —
   * deletes don't change any resident statistic, they only mask docs).
   * Cache misses read the index files that were committed when the service
-  * was constructed, never a segment appended later. Once compaction has
-  * retired one of those files, a miss that needs it throws
-  * [[LocalService.SnapshotRetiredException]]: serve from [[reopened]].
+  * was constructed, never a segment appended later. Queries routed to the
+  * distributed [[Searcher]] see the same segments: they run on the loaded
+  * index pinned once, at construction. N/avgdl are [[ix]]'s, computed
+  * when it was loaded, so a segment appended between `Searcher.load` and
+  * construction is read but not counted in them; load and construct
+  * together (as [[reopened]] does) to avoid that. Once compaction has
+  * retired one of those files, a miss that needs it, and every
+  * distributed query, throws [[LocalService.SnapshotRetiredException]]:
+  * serve from [[reopened]].
   */
 final class LocalService(val ix: Searcher.LoadedIndex,
                          maxCachedPostings: Long = 50000000L,
@@ -46,10 +52,30 @@ final class LocalService(val ix: Searcher.LoadedIndex,
 
   import LocalService.TermList
 
+  /** The index the distributed route runs on: [[ix]] with the segment set
+    * it sees at construction fixed ([[Searcher.LoadedIndex.pinned]]; a
+    * batch index is [[ix]] itself), so a later append stays invisible to
+    * it, as to cache misses, and it keeps [[ix]]'s N/avgdl. On a segmented
+    * index it is a copy with relation and metadata caches of its own: the
+    * first distributed query resolves them again. */
+  private val pinnedIx = ix.pinned
+
   /** The snapshot's posting/termstats files, pinned here at construction:
-    * the loaded index's snapshot that was current then, whose footer cache
-    * this service shares while the index still sees it. */
-  private val reader = new SnapshotReader(ix)
+    * [[pinnedIx]]'s snapshot, whose footer cache the distributed route's
+    * metadata reads share while that snapshot lasts. */
+  private val reader = new SnapshotReader(pinnedIx)
+  private val pinnedPostings = pinnedIx.parquetFiles("postings").paths
+
+  /** [[pinnedIx]], once it still sees every postings file of construction
+    * time. A compaction retires them, and the pinned index would then see
+    * no segment at all: that throws [[LocalService.SnapshotRetiredException]]
+    * instead of answering from an empty index. */
+  private def distributedIx(): Searcher.LoadedIndex = {
+    val now = pinnedIx.parquetFiles("postings").paths.toSet
+    pinnedPostings.find(!now(_))
+      .foreach(p => throw new LocalService.SnapshotRetiredException(p, null))
+    pinnedIx
+  }
 
   // LRU over decoded term lists. Access-order mutates on get, so every
   // cache touch is under this monitor — but only map bookkeeping is: the
@@ -132,7 +158,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
                           after: Option[(Double, Int)] = None,
                           boosts: Map[String, Double] = Map.empty,
                           phraseShifts: Option[Seq[Int]] = None): Seq[Oracle.Hit] =
-    Searcher.search(ix, queryTerms, k, phrase, conjunctive = conjunctive,
+    Searcher.search(distributedIx(), queryTerms, k, phrase, conjunctive = conjunctive,
         excludeTerms = excludeTerms, slop = slop, after = after, boosts = boosts,
         phraseShifts = phraseShifts)
       .collect().sortBy(_.rank).map(h => Oracle.Hit(h.docId, h.score)).toSeq
@@ -654,7 +680,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val (posTerms, negTerms) = BoolQuery.leafTerms(root)
     val allTerms = (posTerms ++ negTerms).distinct
     def viaDistributed(): Seq[Oracle.Hit] =
-      BoolQuery.search(ix, root, k).collect().sortBy(_.rank)
+      BoolQuery.search(distributedIx(), root, k).collect().sortBy(_.rank)
         .map(h => Oracle.Hit(h.docId, h.score)).toSeq
     if (!normsResident || deletesOverBudget ||
         allTerms.exists(t => dfs(t) > maxFetchPostings))
@@ -815,9 +841,9 @@ object LocalService {
     def hasPositions: Boolean = positions != null
   }
 
-  /** A cache miss needed an index file of the service's pinned snapshot
-    * that compaction has since retired. The service cannot serve that
-    * miss; swap in [[LocalService.reopened]]. */
+  /** A cache miss or a distributed query needed an index file of the
+    * service's pinned snapshot that compaction has since retired. The
+    * service cannot serve it; swap in [[LocalService.reopened]]. */
   final class SnapshotRetiredException(path: String, cause: Throwable)
     extends IllegalStateException(
       s"index file $path of this service's snapshot was retired by compaction; " +

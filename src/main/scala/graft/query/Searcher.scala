@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions._
   * [[LoadedIndex]] memoizes it under the stage's file listing, so
   * `spark.read`'s schema inference is not paid per query), the query
   * terms' dfs (P2) are read from the termstats footers and column chunks
-  * ([[LoadedIndex.dfs]]), and block metadata comes from [[MetaStore]]'s
-  * caches. The jobs a query launches are then the scoring plan's own.
+  * ([[LoadedIndex.dfs]]), and block metadata is read the same way, from
+  * the snapshot's postings and superblocks column chunks, by [[MetaStore]]
+  * (cached per snapshot). The jobs a query launches are then the scoring
+  * plan's own.
   *
   * Plan shape (all Catalyst-planned):
   *   1. term lookup (P1): `postings.filter(term IN queryTerms)` — pushed to
@@ -63,55 +65,6 @@ object Searcher {
   final case class LoadedIndex(spark: SparkSession, indexDir: String, nDocs: Long,
                                avgLen: Double, lossyCache: Array[Double],
                                asOfSeg: Option[Long] = None) {
-    /** Driver-side per-term block-meta caches ([[MetaStore]]); LRU-bounded,
-      * invalidated by [[ensureMetaCachesFresh]] when the live segment set
-      * changes. Read each entry with ONE `get` — containsKey-then-get
-      * races concurrent eviction. */
-    private[query] val fineMetaCache: java.util.Map[String, Array[MetaStore.FineRow]] =
-      MetaStore.lruMap(512)
-    private[query] val coarseCovCache: java.util.Map[String, Array[(Int, Int)]] =
-      MetaStore.lruMap(4096)
-    /** [[postings]] re-resolves the manifest-committed LIVE segment set per
-      * call, so a long-lived LoadedIndex over a streaming index SEES new
-      * appends — the meta caches must not pin a term's old block set.
-      * [[MetaStore]] calls this before every cache use: when the committed
-      * segment set changed, both caches drop (a manifest listing, no
-      * Spark job — each stage accessor pays the same listing for its
-      * snapshot key).
-      * Returns a monotonic invalidation epoch captured BEFORE the segment
-      * listing; writers re-check it with [[metaCacheEpochIs]] before
-      * caching. The epoch bumps on every clear, so a fetch whose view may
-      * predate ANY later invalidation can never re-populate the cleared
-      * cache — a stale thread's listing can race the install of a newer
-      * stamp string, but it cannot rewind the epoch, so its puts are
-      * rejected (one uncached query after a change, never stale meta). */
-    private val metaCacheStamp =
-      new java.util.concurrent.atomic.AtomicReference[String](null)
-    private val metaCacheEpoch =
-      new java.util.concurrent.atomic.AtomicLong(0L)
-    private[query] def ensureMetaCachesFresh(): Long = {
-      val epoch = metaCacheEpoch.get() // BEFORE the listing, deliberately
-      val stamp =
-        if (!hasSegments) ""
-        else liveSegments.mkString(",")
-      if (metaCacheStamp.get() != stamp) synchronized {
-        val cur = metaCacheStamp.get()
-        if (cur != stamp) {
-          metaCacheStamp.set(stamp)
-          // first install (cur == null): the caches are still empty, so no
-          // invalidation happened — don't bump, or the very first query's
-          // puts would be rejected and the warm path would start cold twice
-          if (cur != null) {
-            fineMetaCache.clear()
-            coarseCovCache.clear()
-            metaCacheEpoch.incrementAndGet()
-          }
-        }
-      }
-      epoch
-    }
-    private[query] def metaCacheEpochIs(epoch: Long): Boolean =
-      metaCacheEpoch.get() == epoch
     private def hasSegments: Boolean = {
       val d = java.nio.file.Paths.get(indexDir, "termstats")
       java.nio.file.Files.exists(d) && {
@@ -201,6 +154,32 @@ object Searcher {
     private[graft] def parquetFiles(stage: String): SnapshotReader.StageFiles = {
       val key = stageKey(stage)
       memoized(s"$stage.files", key)(new SnapshotReader.StageFiles(key.files.map(_._1)))
+    }
+    /** The visible snapshot's block metadata for [[MetaStore]]: its
+      * postings files, its superblocks files when the stage covers every
+      * visible segment (a batch index: the stage is committed), and the
+      * caches over them. Resolved once per snapshot (keyed by the postings
+      * reader, itself one per snapshot), so a new snapshot starts with
+      * empty caches. Listed on the driver, no Spark job. */
+    private[query] def blockMeta: MetaStore.Snapshot = {
+      val postings = parquetFiles("postings")
+      val sb = stageKey("superblocks")
+      val covered = sb.segs match {
+        case None => graft.index.Manifest.isCommitted(indexDir, "superblocks")
+        case Some(live) => live.nonEmpty && live.forall(s =>
+          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(indexDir, "superblocks", s"seg=$s")))
+      }
+      memoized("meta", (postings, sb, covered))(new MetaStore.Snapshot(postings,
+        if (covered) Some(new SnapshotReader.StageFiles(sb.files.map(_._1))) else None))
+    }
+    /** This index with its segment set fixed as it is now: a segmented
+      * index it does not already pin gets [[asOfSeg]] = its newest visible
+      * segment, so later appends stay invisible; any other index is
+      * returned as is. A compaction still retires the pinned segments —
+      * the pinned index then sees none of them. */
+    private[query] def pinned: LoadedIndex = visibleSegments match {
+      case Some(segs) if asOfSeg.isEmpty => copy(asOfSeg = Some(segs.maxOption.getOrElse(-1L)))
+      case _ => this
     }
 
     def postings: DataFrame = stageRelation("postings")()
@@ -330,32 +309,6 @@ object Searcher {
               .parquet(live.map(s => s"$indexDir/fuzzy/seg=$s"): _*),
               dists.min, true))
           }
-      }
-    }
-    /** Persisted coarse super-block metadata (term, lo, hi) for
-      * [[MetaStore]]'s two-level fetch. A batch index serves its
-      * `superblocks/` stage; a SEGMENTED index serves the union of
-      * per-segment stages when every live segment carries one (rows from
-      * different segments are just more intervals — [[MetaStore]] merges
-      * them); otherwise the per-query aggregation over postings remains
-      * the fallback. A `def` for the same append-staleness reason as
-      * [[fuzzy]]. */
-    def superBlocks: Option[DataFrame] = {
-      val key = stageKey("superblocks")
-      val committed = key.segs.isEmpty &&
-        graft.index.Manifest.isCommitted(indexDir, "superblocks")
-      memoized("superblocks", (key, committed)) {
-        key.segs match {
-          case None =>
-            if (!committed) None
-            else Some(spark.read.parquet(s"$indexDir/superblocks"))
-          case Some(live) =>
-            val p = java.nio.file.Paths.get(indexDir, "superblocks")
-            if (live.isEmpty ||
-                !live.forall(s => java.nio.file.Files.exists(p.resolve(s"seg=$s")))) None
-            else Some(spark.read.option("basePath", s"$indexDir/superblocks")
-              .parquet(live.map(s => s"$indexDir/superblocks/seg=$s"): _*))
-        }
       }
     }
   }
@@ -507,9 +460,9 @@ object Searcher {
 
   /** The distributed query pipeline: [[search]] runs it with a one-query
     * batch, [[searchAll]] and [[searchAllPhrase]] with many. Planning runs
-    * on the driver ([[BlockMax]] over [[MetaStore]] rows, no Spark job once
-    * warm); the returned rows are one Catalyst plan, plus one pilot job
-    * when the WAND θ-prune engages.
+    * on the driver ([[BlockMax]] over [[MetaStore]] rows, no Spark job);
+    * the returned rows are one Catalyst plan, plus one pilot job when the
+    * WAND θ-prune engages.
     *
     *  1. P2 guard per query, then one metadata fetch for the batch and one
     *     [[BlockMax.plan]] per query: AND intersects its terms' block
@@ -560,11 +513,10 @@ object Searcher {
     if (live.isEmpty) return None
     val idfs = dfs.map { case (t, df) => t -> Bm25.idf(ix.nDocs, df) }
     val liveTerms = live.flatMap(_.terms).distinct
-    // one [[MetaStore]] fetch for the batch (per-term LRU cache when warm,
+    // one [[MetaStore]] read for the batch (per-term LRU cache when warm,
     // two-level coarse→fine past the direct cap): coverage = union over
     // queries of each query's AND/OR shape
-    val metaRaw = MetaStore.fineMeta(ix, ix.postings.filter($"term".isin(liveTerms: _*)),
-      liveTerms, dfs,
+    val metaRaw = MetaStore.fineMeta(ix, liveTerms, dfs,
       live.map(q => if (q.disj) Seq(q.terms.distinct) else q.terms.distinct.map(Seq(_))))
     val meta = BlockMax.metaByTerm(metaRaw, idfs, ix.lossyCache)
     val plans: Seq[(BatchQuery, BlockMax.Plan)] = live.flatMap { q =>
@@ -685,7 +637,7 @@ object Searcher {
     if (allEx.isEmpty) return None
     // meta bounded by the union of the queries' candidate coverage
     val meta = BlockMax.metaByTerm(
-      MetaStore.boundedRangeMeta(ix, allEx, MetaStore.unionIv(excl.map(_._3)), dfs),
+      MetaStore.boundedRangeMeta(ix, allEx, BlockMax.union(excl.iterator.flatMap(_._3)), dfs),
       Map.empty, ix.lossyCache)
     val keys = excl.iterator.flatMap { case (_, ts, cand) =>
       BlockMax.keysOf(meta, ts.filter(meta.contains)
@@ -951,9 +903,8 @@ object Searcher {
     val liveGroups = grps.map(_.filter(dfs.contains))
     if (liveGroups.exists(_.isEmpty)) return spark.emptyDataset[Hit] // P2 analog
     val liveTerms = liveGroups.flatten
-    val blocks = ix.postings.filter($"term".isin(liveTerms: _*))
     val meta = BlockMax.metaByTerm(
-      MetaStore.fineMeta(ix, blocks, liveTerms, dfs, Seq(liveGroups)), Map.empty, ix.lossyCache)
+      MetaStore.fineMeta(ix, liveTerms, dfs, Seq(liveGroups)), Map.empty, ix.lossyCache)
     // conjunctive-over-groups coverage: ∩_g (∪_{m∈g} ranges(m))
     val candidates = liveGroups.map(g => BlockMax.unionCoverage(
       g.map(t => meta.getOrElse(t, Array.empty[BlockMax.BlockMeta])))).reduceLeft(BlockMax.intersect)
@@ -970,7 +921,7 @@ object Searcher {
         // GLOBAL union-df per group: decode every block of the live terms
         // (no key semi-join — the full stat needs them all, and skipping
         // the driver-side key set keeps meta access coverage-bounded)
-        decodedIds(blocks).join(groupDf, "term")
+        decodedIds(ix.postings.filter($"term".isin(liveTerms: _*))).join(groupDf, "term")
           .select("gid", "docId").distinct()
           .groupBy("gid").agg(count(lit(1)).as("df"))
           .as[(Int, Long)].collect().toMap
@@ -1129,9 +1080,8 @@ object Searcher {
     val ex = excludeTerms.distinct
     val dfs: Map[String, Long] = ix.dfs(terms ++ ex)
     if (terms.exists(t => !dfs.contains(t))) return empty
-    val meta = BlockMax.metaByTerm(MetaStore.fineMeta(ix,
-      ix.postings.filter($"term".isin(terms: _*)), terms, dfs, Seq(terms.map(Seq(_)))),
-      Map.empty, ix.lossyCache)
+    val meta = BlockMax.metaByTerm(
+      MetaStore.fineMeta(ix, terms, dfs, Seq(terms.map(Seq(_)))), Map.empty, ix.lossyCache)
     val plan = BlockMax.plan(meta, terms, Map.empty, disj = false).getOrElse(return empty)
     // terms are distinct and each (term, docId) posting is unique across
     // blocks (salted shards partition the docId space), so a plain count

@@ -63,9 +63,9 @@ object StreamingIndexer {
       .write.mode("overwrite").option("compression", "zstd").parquet(s"$indexDir/postings/seg=$segId")
 
     // per-segment coarse super-block rows first (absolute docIds: the
-    // reader merges rows across segments — [[Searcher.superBlocks]] serves
-    // MetaStore's two-level fetch on streamed indexes once every live
-    // segment carries the stage), then term stats summed from the
+    // reader merges rows across segments — MetaStore's two-level read
+    // uses them on streamed indexes once every visible segment carries
+    // the stage), then term stats summed from the
     // ~16x-smaller coarse stage — the same one-metadata-scan chain as the
     // batch build
     IndexBuilder.superBlockRows(

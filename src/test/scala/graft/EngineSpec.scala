@@ -3,7 +3,7 @@ package graft
 import graft.core.Oracle
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, PostingCodec}
-import graft.query.Searcher
+import graft.query.{MetaStore, Searcher}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -1756,5 +1756,25 @@ object SnapshotReads {
         assert(plain(t).docIds.toSeq == got.docIds.toSeq && !plain(t).hasPositions)
       }
     }
+    // block metadata read on the driver, on the direct and the two-level
+    // path: a disjunctive shape's coverage and an all-docs candidate range
+    // keep every block, so each read holds every Spark row
+    val want = ix.postings.filter($"term".isin(terms: _*))
+      .select("term", "firstDocId", "lastDocId", "n", "maxTf", "minLenByte")
+      .as[MetaStore.FineRow].collect().toSeq.sorted
+    val present = ix.dfs(terms)
+    val dfs = terms.map(t => t -> present.getOrElse(t, 0L)).toMap // known: no unknown-df escape
+    val all = Array((0, Int.MaxValue))
+    def reads(): Seq[Seq[MetaStore.FineRow]] = Seq(
+      MetaStore.fineMeta(ix, terms, dfs, Seq(Seq(terms))).toSeq.sorted,
+      MetaStore.boundedRangeMeta(ix, terms, all, dfs).toSeq.sorted)
+    assert(want.nonEmpty)
+    assert(reads() == Seq(want, want), s"direct meta rows differ for $terms")
+    assert(!MetaStore.lastFetchDiag.twoLevel && !MetaStore.lastExclDiag.twoLevel)
+    spark.conf.set("spark.graft.meta.directRows", "0")
+    try {
+      assert(reads() == Seq(want, want), s"two-level meta rows differ for $terms")
+      assert(MetaStore.lastFetchDiag.twoLevel && MetaStore.lastExclDiag.twoLevel)
+    } finally spark.conf.unset("spark.graft.meta.directRows")
   }
 }

@@ -1,13 +1,13 @@
 package graft
 
-import graft.query.MetaStore
+import graft.query.BlockMax
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.propBoolean
 
-/** ScalaCheck laws for the MetaStore interval algebra the two-level
-  * metadata fetch is built on: membership-exact merge/intersect/union
-  * against brute-force point sets, and coarsening as a strict superset —
-  * the soundness the coverage-bounded fine fetch depends on. */
+/** ScalaCheck laws for the interval algebra ([[BlockMax.union]],
+  * [[BlockMax.intersect]]) the two-level metadata read is built on:
+  * membership-exact merge/intersect/union against brute-force point sets —
+  * the soundness the coverage-bounded fine read depends on. */
 object MetaStoreProperties extends Properties("metastore") {
 
   private val ivGen: Gen[Array[(Int, Int)]] =
@@ -28,44 +28,23 @@ object MetaStoreProperties extends Properties("metastore") {
 
   property("mergeIntervals: same point set, disjoint ascending output") =
     Prop.forAll(ivGen) { iv =>
-      val m = MetaStore.mergeIntervals(iv)
+      val m = BlockMax.union(iv.iterator)
       points(m) == points(iv) && disjointAscending(m)
     }
 
   property("intersectIv = point-set intersection") =
     Prop.forAll(ivGen, ivGen) { (a, b) =>
-      val ma = MetaStore.mergeIntervals(a)
-      val mb = MetaStore.mergeIntervals(b)
-      points(MetaStore.intersectIv(ma, mb)) == points(a).intersect(points(b))
+      val ma = BlockMax.union(a.iterator)
+      val mb = BlockMax.union(b.iterator)
+      points(BlockMax.intersect(ma, mb)) == points(a).intersect(points(b))
     }
 
   property("unionIv superset-covers both inputs, exact up to gap joins") =
     Prop.forAll(ivGen, ivGen) { (a, b) =>
-      val u = points(MetaStore.unionIv(Seq(
-        MetaStore.mergeIntervals(a), MetaStore.mergeIntervals(b))))
+      val u = points(BlockMax.union(
+        BlockMax.union(a.iterator).iterator ++ BlockMax.union(b.iterator).iterator))
       // adjacency-coalescing may ADD only single-gap bridge points —
       // sound for coverage (never loses a point)
       points(a).union(points(b)).subsetOf(u)
-    }
-
-  property("coarsenTo: superset of the input, at most max intervals") =
-    Prop.forAll(ivGen, Gen.chooseNum(1, 8)) { (iv, max) =>
-      val m = MetaStore.mergeIntervals(iv)
-      val c = MetaStore.coarsenTo(m, max)
-      c.length <= math.max(max, 1) &&
-        points(m).subsetOf(points(c)) && disjointAscending(c)
-    }
-
-  property("coarsenTo keeps the widest gaps (minimal added coverage)") =
-    Prop.forAll(ivGen) { iv =>
-      val m = MetaStore.mergeIntervals(iv)
-      (m.length >= 3) ==> {
-        val c = MetaStore.coarsenTo(m, m.length - 1)
-        // merging exactly one gap: the added points are the SMALLEST gap
-        val gaps = m.sliding(2).collect {
-          case Array(x, y) => y._1 - x._2 - 1
-        }.toSeq
-        (points(c).size - points(m).size) == gaps.min
-      }
     }
 }

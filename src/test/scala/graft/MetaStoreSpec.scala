@@ -1,14 +1,17 @@
 package graft
 
-import graft.query.{MetaStore, Searcher}
+import graft.query.{BlockMax, MetaStore, Searcher}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The two-level block-metadata bound: a hot∧rare conjunction must ship
-  * the driver only the meta near the rare term's ranges — O(surviving
-  * coverage), not O(Σ df/128) — and warm re-plans must come from the
-  * per-(index, term) cache with no collect at all. */
+/** The two-level block-metadata bound: a hot∧rare conjunction must hand
+  * the planner only the meta near the rare term's ranges — O(surviving
+  * coverage) rows, not O(Σ df/128), though the driver decodes every
+  * block's docId range to find them —, warm re-plans must come from the
+  * per-(snapshot, term) cache with no read at all, and no metadata read
+  * launches a Spark job. */
 class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -36,20 +39,12 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     Engine.build(spark, corpus, tmp, partitions = 4, withBloom = false)
   }
 
-  test("mergeIntervals and coarsenTo are sound interval algebra") {
+  test("interval union coalesces overlapping and adjacent intervals") {
     // overlapping and ADJACENT intervals coalesce (coarsening is sound)
-    assert(MetaStore.mergeIntervals(Array((5, 9), (0, 3), (8, 12), (4, 4))).toSeq ==
+    assert(BlockMax.union(Iterator((5, 9), (0, 3), (8, 12), (4, 4))).toSeq ==
       Seq((0, 12)))
-    assert(MetaStore.mergeIntervals(Array((20, 30), (0, 3), (5, 9))).toSeq ==
+    assert(BlockMax.union(Iterator((20, 30), (0, 3), (5, 9))).toSeq ==
       Seq((0, 3), (5, 9), (20, 30)))
-    val iv = Array((0, 10), (20, 30), (100, 110), (120, 130))
-    val c = MetaStore.coarsenTo(iv, 2)
-    assert(c.toSeq == Seq((0, 30), (100, 130))) // widest gap kept as separator
-    assert(MetaStore.coarsenTo(iv, 1).toSeq == Seq((0, 130)))
-    assert(MetaStore.coarsenTo(iv, 4).toSeq == iv.toSeq)
-    // coarsening only adds coverage
-    for (m <- 1 to 4; (lo, hi) <- iv)
-      assert(MetaStore.coarsenTo(iv, m).exists(r => r._1 <= lo && hi <= r._2))
   }
 
   test("hot∧rare two-level fetch collects O(coverage), not O(df/128) meta") {
@@ -63,7 +58,6 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // force the two-level path on a fresh load (fresh caches)
     spark.conf.set("spark.graft.meta.directRows", "0")
-    spark.conf.set("spark.graft.meta.superSpan", "128")
     try {
       val eng2 = Engine.load(spark, tmp)
       val hits2 = eng2.search(Engine.SearchQuery(Seq("hot", "rare"), nResults = 5))
@@ -76,13 +70,16 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(diag.fineRows > 0 && diag.fineRows <= 8,
         s"two-level fetched ${diag.fineRows} fine rows (hot term alone has >=32)")
       assert(diag.coarseRows > 0)
+      // the bound filters after the key columns are decoded: every block
+      // of both terms is scanned
+      val blocks = eng2.ix.postings.filter(col("term").isin("hot", "rare")).count()
+      assert(diag.scannedRows == blocks, s"scanned ${diag.scannedRows} of $blocks blocks")
       // identical results to the direct path
       val base = eng.search(Engine.SearchQuery(Seq("hot", "rare"), nResults = 5))
         .entries.map(h => (h.docId, h.score))
       assert(hits2 == base)
     } finally {
       spark.conf.unset("spark.graft.meta.directRows")
-      spark.conf.unset("spark.graft.meta.superSpan")
     }
   }
 
@@ -101,10 +98,11 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("persisted superblocks stage serves the coarse fetch") {
     val ixb = Engine.load(spark, tmp).ix
-    assert(ixb.superBlocks.isDefined, "batch build must commit superblocks/")
+    assert(graft.index.Manifest.isCommitted(tmp, "superblocks"),
+      "batch build must commit superblocks/")
     import spark.implicits._
     // stage rows are a sound coarse cover of the fine block set
-    val sb = ixb.superBlocks.get.select("term", "lo", "hi")
+    val sb = spark.read.parquet(s"$tmp/superblocks").select("term", "lo", "hi")
       .as[(String, Int, Int)].collect().groupBy(_._1)
     val fine = ixb.postings.select("term", "firstDocId", "lastDocId")
       .as[(String, Int, Int)].collect().groupBy(_._1)
@@ -117,20 +115,15 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
           (c._1 <= lo && lo <= c._2)), s"block [$lo,$hi] of $t uncovered")
       }
     }
-    // two-level results identical whether the stage or the agg serves the
-    // coarse pass (a non-default span forces the aggregation fallback)
+    // the stage serves the two-level coarse pass
     spark.conf.set("spark.graft.meta.directRows", "0")
     try {
-      val viaStage = Engine.load(spark, tmp)
+      Engine.load(spark, tmp)
         .search(Engine.SearchQuery(Seq("hot", "rare"), nResults = 5)).entries
-      spark.conf.set("spark.graft.meta.superSpan", "1024") // != build span
-      val viaAgg = Engine.load(spark, tmp)
-        .search(Engine.SearchQuery(Seq("hot", "rare"), nResults = 5)).entries
-      assert(viaStage.map(e => (e.docId, e.score)) ==
-        viaAgg.map(e => (e.docId, e.score)))
+      val diag = MetaStore.lastFetchDiag
+      assert(diag.twoLevel && diag.coarseRows > 0, s"stage not read: $diag")
     } finally {
       spark.conf.unset("spark.graft.meta.directRows")
-      spark.conf.unset("spark.graft.meta.superSpan")
     }
   }
 
@@ -159,7 +152,6 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("repo", "path", "commit", "lang", "content")
     val dir = java.nio.file.Files.createTempDirectory("graft_meta_ex").toString
     spark.conf.set("spark.graft.meta.directRows", "0")
-    spark.conf.set("spark.graft.meta.superSpan", "128")
     try {
       Engine.build(spark, corpus, dir, partitions = 4, withBloom = false)
       val ix = Searcher.load(spark, dir)
@@ -175,6 +167,8 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(d.fineRows > 0 && d.fineRows <= 3,
         s"exclusion meta not overlap-bounded: $d")
       assert(d.coarseRows > 0)
+      assert(d.scannedRows == ix.postings.filter(col("term") === "exl").count(),
+        s"every exl block's key columns are decoded: $d")
       // disjoint coverages: no fine fetch at all, NOT degenerates to a no-op
       val hits2 = Searcher.search(ix, Seq("filler17"), 5,
         excludeTerms = Seq("exl")).collect()
@@ -184,7 +178,6 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"disjoint exclusion should skip the fine fetch: $d2")
     } finally {
       spark.conf.unset("spark.graft.meta.directRows")
-      spark.conf.unset("spark.graft.meta.superSpan")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
@@ -203,10 +196,9 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.streaming.StreamingIndexer.appendSegment(spark, df(2048, 4096), dir,
         segId = 1, partitions = 4, withBloom = false)
       val ix = Searcher.load(spark, dir)
-      assert(ix.superBlocks.isDefined,
-        "streamed appends must serve the per-segment superblocks stage")
       // stage rows soundly cover the union of both segments' fine blocks
-      val sb = ix.superBlocks.get.select("term", "lo", "hi")
+      val sb = spark.read.parquet(s"$dir/superblocks/seg=0", s"$dir/superblocks/seg=1")
+        .select("term", "lo", "hi")
         .as[(String, Int, Int)].collect().groupBy(_._1)
       val fine = ix.postings.select("term", "firstDocId", "lastDocId")
         .as[(String, Int, Int)].collect().groupBy(_._1)
@@ -229,14 +221,50 @@ class MetaStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       val diag = MetaStore.lastFetchDiag
       assert(diag.twoLevel && diag.coarseRows > 0)
       assert(got == base)
-      // a segment missing the stage gates the union off (fallback agg)
+      // a segment missing the stage gates the two-level read off: the
+      // query reads its block rows directly, with the same hits
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"$dir/superblocks/seg=1"))
-      assert(Searcher.load(spark, dir).superBlocks.isEmpty)
+      val direct = Searcher.search(Searcher.load(spark, dir), Seq("hot", "rare"), 5).collect()
+        .map(h => (h.docId, h.score)).toSeq
+      val d2 = MetaStore.lastFetchDiag
+      assert(!d2.twoLevel && d2.coarseRows == 0 && d2.fineRows > 0, s"expected the direct path: $d2")
+      assert(direct == base)
     } finally {
       spark.conf.unset("spark.graft.meta.directRows")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+  }
+
+  test("cold block-metadata reads launch no Spark job, on either path") {
+    eng
+    def noJobs[A](what: String)(body: => A): A = {
+      val (jobs, out) = SparkJobs.during(spark)(body)
+      assert(jobs == 0, s"$what launched $jobs Spark jobs")
+      out
+    }
+    val terms = Seq("hot", "rare")
+    val conj = Seq(terms.map(Seq(_)))
+    val all = Array((0, 4095))
+    // a fresh load per read: every cache is cold
+    def fresh() = { val ix = Searcher.load(spark, tmp); (ix, ix.dfs(terms)) }
+    val (ix1, dfs1) = fresh()
+    val direct = noJobs("direct fineMeta")(MetaStore.fineMeta(ix1, terms, dfs1, conj))
+    assert(!MetaStore.lastFetchDiag.twoLevel && direct.nonEmpty)
+    val (ix2, dfs2) = fresh()
+    val exDirect = noJobs("direct boundedRangeMeta")(
+      MetaStore.boundedRangeMeta(ix2, Seq("hot"), all, dfs2))
+    assert(!MetaStore.lastExclDiag.twoLevel && exDirect.nonEmpty)
+    spark.conf.set("spark.graft.meta.directRows", "0")
+    try {
+      val (ix3, dfs3) = fresh()
+      val two = noJobs("two-level fineMeta")(MetaStore.fineMeta(ix3, terms, dfs3, conj))
+      assert(MetaStore.lastFetchDiag.twoLevel && two.nonEmpty && two.length < direct.length)
+      val (ix4, dfs4) = fresh()
+      val exTwo = noJobs("two-level boundedRangeMeta")(
+        MetaStore.boundedRangeMeta(ix4, Seq("hot"), Array((1024, 1039)), dfs4))
+      assert(MetaStore.lastExclDiag.twoLevel && exTwo.nonEmpty)
+    } finally spark.conf.unset("spark.graft.meta.directRows")
   }
 
   test("exclusion meta: one unknown-df term takes the two-level path") {

@@ -644,6 +644,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
+  test("LocalService over-cap queries run on the construction-time snapshot") {
+    val s = spark
+    import s.implicits._
+    // "shared" is in every even doc of both segments
+    def df(lo: Int, hi: Int) = (lo until hi).map { i =>
+      val shared = if (i % 2 == 0) " shared" else ""
+      ("r0", f"p$i%04d", "c0", "txt", s"alpha common$i$shared")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_pinned_dist").toString
+    try {
+      StreamingIndexer.appendSegment(spark, df(0, 60), dir, segId = 0, partitions = 2)
+      // every term is over the fetch cap: each query routes distributed
+      val svc = new graft.query.LocalService(Searcher.load(spark, dir), maxFetchPostings = 1)
+      StreamingIndexer.appendSegment(spark, df(60, 80), dir, segId = 1, partitions = 2)
+      val asOf = Searcher.load(spark, dir, asOfSeg = Some(0L))
+      val want = Searcher.search(asOf, Seq("shared"), 50).collect().sortBy(_.rank)
+        .map(h => (h.docId, h.score)).toSeq
+      assert(want.size == 30)
+      assert(svc.search(Seq("shared"), 50).map(h => (h.docId, h.score)) == want)
+      val bool = "shared AND alpha"
+      val wantBool = graft.query.BoolQuery.search(asOf, bool, 50).collect().sortBy(_.rank)
+        .map(h => (h.docId, h.score)).toSeq
+      assert(wantBool.size == 30)
+      assert(svc.searchBool(bool, 50).map(h => (h.docId, h.score)) == wantBool)
+      // compaction retires the pinned segment: the typed error, not an
+      // answer from no segment at all
+      StreamingIndexer.compact(spark, dir, partitions = 2)
+      intercept[graft.query.LocalService.SnapshotRetiredException](svc.search(Seq("shared"), 50))
+      intercept[graft.query.LocalService.SnapshotRetiredException](svc.searchBool(bool, 50))
+      assert(svc.reopened().search(Seq("shared"), 50).size == 40)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("SnapshotReader: driver reads equal Spark reads on a segmented index") {
     val s = spark
     import s.implicits._
