@@ -504,6 +504,10 @@ object Bench {
         .select("repo", "path", "commit", "lang", "sha256", "content")
         .orderBy("repo", "path").limit(20000)
       val textRows = tdf0.collect()
+      // the oracle numbers docs in this order and the engine ranks on the
+      // same key, so the two agree on docIds only if the key is unique
+      val dups = textRows.length - textRows.map(r => (r.getString(0), r.getString(1))).distinct.length
+      require(dups == 0, s"(repo, path) is not unique on the text slice: $dups duplicate rows")
       val tdf = spark.createDataFrame(
         java.util.Arrays.asList(textRows: _*), tdf0.schema)
       val textIxDir = s"$tmpRoot/ixText"

@@ -166,15 +166,17 @@ object Kernel {
     * `ProcessMultipleTerms` (`query_processing.h:710-852`) with the lossy
     * BM25 doc score (`scoring.h:124-145`).
     *
-    * Slot j is `(docIds(j), tfs(j))` with weight `idfs(j)` (idf·boost); a
-    * repeated query term is several slots over the same arrays. With
-    * `positions` non-null every aligned doc must also pass [[positional]]
-    * (`positions(j)(i)` = posting i's positions). A doc in any `excluded`
-    * list (ascending docIds: NOT terms, delete tombstones) never scores.
+    * Slot j is `(docIds(j), tfs(j), norms(j))` with weight `idfs(j)`
+    * (idf·boost); `norms(j)(i)` is posting i's lossy length byte, the one
+    * stored inline in its block. A repeated query term is several slots
+    * over the same arrays. With `positions` non-null every aligned doc
+    * must also pass [[positional]] (`positions(j)(i)` = posting i's
+    * positions). A doc in any `excluded` list (ascending docIds: NOT
+    * terms, delete tombstones) never scores.
     * The score is the slot-ordered sum of `idfs(j) · tfNormLossy`, the same
     * double on every path. */
   final class Conjunction(docIds: Array[Array[Int]], tfs: Array[Array[Int]],
-                          idfs: Array[Double],
+                          norms: Array[Array[Byte]], idfs: Array[Double],
                           positions: Array[Array[Array[Int]]] = null,
                           shifts: Array[Int] = null, slop: Int = 0,
                           excluded: Array[Array[Int]] = Array.empty) {
@@ -183,8 +185,9 @@ object Kernel {
     /** Offers every match with docId in `[fromDoc, untilDoc)` to `top`,
       * but only those strictly after the `(afterScore, afterDocId)` cursor
       * in (score desc, docId asc) order (search_after; the default cursor
-      * admits everything). `lenBytes(docId)` is the doc's length byte. */
-    def scan(lenBytes: Array[Int], lossyCache: Array[Double],
+      * admits everything). The doc's length byte is read from slot 0, as
+      * every aligned slot holds the same one. */
+    def scan(lossyCache: Array[Double],
              fromDoc: Int, untilDoc: Int, top: TopK,
              afterScore: Double = Double.PositiveInfinity,
              afterDocId: Int = -1): Unit = {
@@ -216,7 +219,7 @@ object Kernel {
                   while (j < nL) { posBuf(j) = positions(j)(cursors(j)); j += 1 }
                   positional(posBuf, shifts, slop, posCursors)
                 })) {
-              val lb = lenBytes(maxDoc)
+              val lb = norms(0)(cursors(0))
               var s = 0.0
               j = 0
               while (j < nL) {

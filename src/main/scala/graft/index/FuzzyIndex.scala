@@ -121,22 +121,21 @@ object FuzzyIndex {
   }
 
   /** Build distance of a persisted stage (from its `_maxdist` marker).
-    * An unreadable marker fails DOWN to 0 — that disables the stage (the
+    * A missing marker reads as 0 — that disables the stage (the
     * probe-distance guard never passes) and callers take the exact
     * dictionary-scan fallback; assuming a distance the table may not
-    * cover would silently drop candidates. */
-  def stageMaxDist(indexDir: String): Int = {
-    val p = java.nio.file.Paths.get(indexDir, "fuzzy", "_maxdist")
-    try java.nio.file.Files.readString(p).trim.toInt
-    catch { case _: Throwable => 0 }
-  }
+    * cover would silently drop candidates. A marker that exists but
+    * cannot be read or parsed throws. */
+  def stageMaxDist(indexDir: String): Int =
+    markerDist(java.nio.file.Paths.get(indexDir, "fuzzy", "_maxdist"))
 
-  /** Build distance of one segment's table; same fail-DOWN-to-0 contract
-    * as [[stageMaxDist]] — a segment without a readable marker disables
-    * the segmented probe path entirely (all-or-nothing gate). */
-  def segMaxDist(indexDir: String, segId: Long): Int = {
-    val p = java.nio.file.Paths.get(indexDir, "fuzzy", s"seg=$segId", "_maxdist")
+  /** Build distance of one segment's table; same missing-is-0 contract
+    * as [[stageMaxDist]] — a segment without a marker disables the
+    * segmented probe path entirely (all-or-nothing gate). */
+  def segMaxDist(indexDir: String, segId: Long): Int =
+    markerDist(java.nio.file.Paths.get(indexDir, "fuzzy", s"seg=$segId", "_maxdist"))
+
+  private def markerDist(p: java.nio.file.Path): Int =
     try java.nio.file.Files.readString(p).trim.toInt
-    catch { case _: Throwable => 0 }
-  }
+    catch { case _: java.nio.file.NoSuchFileException => 0 }
 }

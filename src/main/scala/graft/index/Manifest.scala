@@ -53,22 +53,23 @@ object Manifest {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Row count from the parquet footer (driver-side, no job). */
+  /** Row count from the parquet footer (driver-side, no job). A footer
+    * that cannot be read throws, failing the commit. */
   def parquetRowCount(
       f: java.nio.file.Path,
       conf: org.apache.hadoop.conf.Configuration = new org.apache.hadoop.conf.Configuration()): Long = {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.hadoop.fs.{Path => HPath}
     import scala.jdk.CollectionConverters._
-    try {
-      val in = HadoopInputFile.fromPath(new HPath(f.toString), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    } catch { case _: Throwable => -1L }
+    val in = HadoopInputFile.fromPath(new HPath(f.toString), conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+    finally r.close()
   }
 
-  /** Total committed rows of a stage, from its manifest (no job). */
+  /** Total committed rows of a stage, from its manifest (no job). None
+    * when a file's count is unknown: manifests written before footer read
+    * errors failed the commit recorded such a file as `-1`. */
   def stageRows(indexDir: String, stage: String): Option[Long] = {
     if (!isCommitted(indexDir, stage)) None
     else {
@@ -91,7 +92,9 @@ object Manifest {
     * and the source-manifest deletion must see the new segment only, never
     * both, or every merged posting double-counts. The union is taken over
     * ALL manifest files present (a source that was itself a compaction
-    * keeps its own sources retired transitively). */
+    * keeps its own sources retired transitively). A manifest that cannot
+    * be read throws: reading it as empty would drop its `compactedFrom`
+    * list and count the sources it retired beside it. */
   def committedSegments(indexDir: String): Seq[Long] = {
     val dir = Paths.get(indexDir)
     if (!Files.exists(dir)) return Nil
@@ -105,7 +108,7 @@ object Manifest {
     } finally s.close()
     val entries = names.map { n =>
       val seg = n.stripPrefix("_manifest_segment_").stripSuffix(".json").toLong
-      val json = try Files.readString(dir.resolve(n)) catch { case _: Throwable => "" }
+      val json = Files.readString(dir.resolve(n))
       val sources = """"compactedFrom":\[([0-9,\s]*)\]""".r.findFirstMatchIn(json)
         .map(_.group(1).split(",").iterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq)
         .getOrElse(Nil)

@@ -23,11 +23,16 @@ import graft.core.{Bm25, Kernel, Oracle}
   * serving story for a hot query mix. Cache is LRU-bounded by total cached
   * postings.
   *
+  * Scoring needs no per-doc state: each posting block stores its docs'
+  * lossy length bytes (`lenBytes`, the same byte the docstore holds), and
+  * a decoded list keeps one per posting, next to its tf.
+  *
   * '''Snapshot semantics''' (the Lucene point-in-time searcher contract):
-  * every resident structure — decoded postings, dfs, expansion/suggest
-  * caches, norms, and the corpus stats N/avgdl that weight every score —
-  * is pinned at CONSTRUCTION time. A streamed append or compaction is
-  * therefore visible only to a NEW service: call [[reopened]] and swap
+  * every resident structure — decoded postings with their norms, dfs,
+  * expansion/suggest caches, and the corpus stats N/avgdl that weight
+  * every score — comes from the snapshot pinned at CONSTRUCTION time. A
+  * streamed append or compaction is therefore visible only to a NEW
+  * service: call [[reopened]] and swap
   * the instance (a volatile reference in the serving tier), exactly the
   * ES refresh / Lucene SearcherManager-reopen cycle. Serving from a stale
   * instance stays internally CONSISTENT on warm paths; only
@@ -47,8 +52,7 @@ import graft.core.{Bm25, Kernel, Oracle}
 final class LocalService(val ix: Searcher.LoadedIndex,
                          maxCachedPostings: Long = 50000000L,
                          maxFetchPostings: Long = 10000000L,
-                         scanThreshold: Int = 1 << 16,
-                         maxResidentNorms: Long = 1L << 28) {
+                         scanThreshold: Int = 1 << 16) {
 
   import LocalService.TermList
 
@@ -134,6 +138,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * `maxFetchPostings`). */
   private def fetchLists(terms: Seq[String],
                          withPositions: Boolean): Map[String, TermList] = {
+    pinnedIx.requireNormStream
     val lists = reader.lists(terms, withPositions)
     terms.foreach { t =>
       lists.get(t).foreach { tl =>
@@ -252,8 +257,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val dfs = dfOf(uniq)
     if (dfs.valuesIterator.exists(_ == 0L)) return Nil // P2 guard, zero jobs on a warm dfCache
     val exPresent = { val ed = dfOf(exUniq); exUniq.filter(t => ed(t) > 0L) }
-    if (!normsResident || deletesOverBudget ||
-        dfs.valuesIterator.exists(_ > maxFetchPostings) ||
+    if (deletesOverBudget || dfs.valuesIterator.exists(_ > maxFetchPostings) ||
         exPresent.exists(t => dfCache.get(t).longValue() > maxFetchPostings))
       return distributed(queryTerms, k, phrase, excludeTerms = exPresent,
         slop = slop, after = after, boosts = boosts, phraseShifts = phraseShifts)
@@ -285,10 +289,9 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val idfs = queryTerms.map { t =>
       Bm25.idf(ix.nDocs, byTerm(t).n.toLong) * boosts.getOrElse(t, 1.0)
     }.toArray
-    val query = new Kernel.Conjunction(slots.map(_.docIds), slots.map(_.tfs), idfs,
-      positions = if (phrase) slots.map(_.positions) else null,
+    val query = new Kernel.Conjunction(slots.map(_.docIds), slots.map(_.tfs),
+      slots.map(_.norms), idfs, positions = if (phrase) slots.map(_.positions) else null,
       shifts = phraseShifts.map(_.toArray).orNull, slop = slop, excluded = excluded)
-    val lenBytes = docLenBytes
     val (aScore, aDoc) = after.getOrElse((Double.PositiveInfinity, -1))
     // the leapfrog cost is bounded by the SMALLEST list (every candidate
     // aligns on it), so a heavy query — a hot∧hot conjunction or a
@@ -296,7 +299,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     // splits the docId domain at equal-count boundaries of that list
     val small = slots.minBy(_.n)
     scanRanges(k, small.n.toLong, small.docIds, Int.MaxValue) { (lo, hi, top) =>
-      query.scan(lenBytes, ix.lossyCache, lo, hi, top, aScore, aDoc)
+      query.scan(ix.lossyCache, lo, hi, top, aScore, aDoc)
     }
   }
 
@@ -325,55 +328,40 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * Scale: cache-resident terms answer with a binary search; a term over
     * the fetch budget never materializes its list — tf comes from a
     * block-range-pruned driver-side decode (the [[Searcher]] J3 skip
-    * analog), df from termstats. */
+    * analog), df from termstats. The doc's length byte is the one stored
+    * with any of its postings: a resident list's, or a decoded block's. */
   def explain(queryTerms: Seq[String], docId: Int,
               boosts: Map[String, Double] = Map.empty): Seq[LocalService.Explanation] = {
     val uniq = queryTerms.distinct
     if (uniq.isEmpty || docId < 0 || isDeleted(docId)) return Nil
     val dfs = dfOf(uniq)
     if (dfs.valuesIterator.exists(_ == 0L)) return Nil
-    if (docId >= idSpace) return Nil
-    val lb =
-      if (normsResident) docLenBytes(docId)
-      else {
-        // over-budget index: point-probe the one doc's norm (row-group
-        // pruned on docId) instead of materializing the corpus array
-        import org.apache.spark.sql.functions.col
-        val r = ix.doclen.filter(col("docId") === docId)
-          .select("lenByte").collect()
-        if (r.isEmpty) return Nil
-        r(0).getInt(0)
-      }
     // resident lists for budget-fitting terms (one coalesced fetch); heavy
     // terms resolve per-doc tf via pruned block decode instead
     val light = uniq.filter(t => dfs(t) <= maxFetchPostings)
     val lists = if (light.isEmpty) Seq.empty else resolveLists(light, phrase = false)
     if (light.nonEmpty && lists == null) return Nil
     val byTerm = light.zip(lists).toMap
+    // (term, tf, df, lenByte): every term's posting carries the doc's byte
     val rows = uniq.map { t =>
       byTerm.get(t) match {
         case Some(tl) =>
           val i = Kernel.lowerBound(tl.docIds, 0, tl.n, docId)
           if (i == tl.n || tl.docIds(i) != docId) return Nil // conjunctive: doc misses this term
-          (t, tl.tfs(i).toLong, tl.n.toLong)
+          (t, tl.tfs(i).toLong, tl.n.toLong, tl.norms(i) & 0xff)
         case None =>
-          val tf = tfViaBlocks(t, docId)
-          if (tf == 0L) return Nil
-          (t, tf, dfs(t))
+          pinnedIx.requireNormStream
+          val (tf, lb) = reader.tf(t, docId).getOrElse(return Nil)
+          (t, tf, dfs(t), lb)
       }
     }
-    rows.map { case (t, tf, df) =>
+    val lb = rows.head._4
+    rows.map { case (t, tf, df, _) =>
       val idf = Bm25.idf(ix.nDocs, df) * boosts.getOrElse(t, 1.0)
       val tfn = Bm25.tfNormLossy(tf, lb, ix.lossyCache)
       LocalService.Explanation(t, tf, df, idf, tfn, idf * tfn)
     }
   }
-
-  /** tf of (term, docId) by decoding ONLY the blocks whose docId range
-    * covers the doc — the J3 skip-pointer analog as a point lookup; never
-    * materializes the term's full list (safe for hot terms over the fetch
-    * budget). 0 when the doc does not contain the term. */
-  private def tfViaBlocks(term: String, docId: Int): Long = reader.tf(term, docId)
 
   /** Runs `scan` over the docId domain `[0, end)` into a bounded heap of
     * `k`. A heavy query — `work` postings at or over the threshold — splits
@@ -408,14 +396,14 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[String]]()
 
   /** Per-thread dense score accumulator for the disjunctive serving path
-    * (one double per doc). A HashMap accumulator here boxes ~Σdf entries
+    * (one double per docId). A HashMap accumulator here boxes ~Σdf entries
     * and sorts the full candidate set on EVERY call — under 16 concurrent
-    * clients that allocation storm was a multi-second p99 tail. The dense
-    * array is only used when it is small (≤ [[LocalService.maxDenseDocs]]
-    * docs, ≈128 MB/thread worst case); a larger index serves expansions
-    * from the distributed engine. */
+    * clients that allocation storm was a multi-second p99 tail. It grows on
+    * demand to the largest docId + 1 of the lists a query scores, at most
+    * [[LocalService.maxDenseDocs]] (≈128 MB/thread worst case); an
+    * expansion reaching past that is served by the distributed engine. */
   private val scoreBuf = new ThreadLocal[Array[Double]]() {
-    override def initialValue(): Array[Double] = new Array[Double](idSpace)
+    override def initialValue(): Array[Double] = Array.emptyDoubleArray
   }
 
   // ---- delete tombstones (graft.index.Tombstones), resident ----
@@ -463,7 +451,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     // committed state" (the SearcherManager contract) — a service that
     // wants to stay time-travel-pinned simply keeps the old instance
     new LocalService(Searcher.load(ix.spark, ix.indexDir),
-      maxCachedPostings, maxFetchPostings, scanThreshold, maxResidentNorms)
+      maxCachedPostings, maxFetchPostings, scanThreshold)
 
   private def isDeleted(docId: Int): Boolean = Kernel.contains(deletedDocs, docId)
 
@@ -543,21 +531,22 @@ final class LocalService(val ix: Searcher.LoadedIndex,
   }
 
   /** Disjunctive scoring of a resolved dictionary expansion over resident
-    * lists, df-gated like every serving entry point. A docId space too
-    * large for the per-thread dense buffer routes to the distributed
-    * engine, as over-budget norms do. */
+    * lists, df-gated like every serving entry point. Lists whose docIds
+    * reach past the dense buffer's bound route to the distributed engine. */
   private def serveExpansion(terms: Seq[String], k: Int): Seq[Oracle.Hit] = {
     if (terms.isEmpty) return Nil
     val dfs = dfOf(terms)
-    if (!normsResident || deletesOverBudget || idSpace > LocalService.maxDenseDocs ||
-        dfs.valuesIterator.exists(_ > maxFetchPostings))
+    if (deletesOverBudget || dfs.valuesIterator.exists(_ > maxFetchPostings))
       return distributed(terms, k, phrase = false, conjunctive = false)
     val lists = resolveLists(terms, phrase = false)
-    if (lists == null) return distributed(terms, k, phrase = false, conjunctive = false)
-    scoreDense(lists, docLenBytes, k)
+    val end = if (lists == null) 0L else lists.map(_.docIds.last + 1L).max
+    if (lists == null || end > LocalService.maxDenseDocs)
+      return distributed(terms, k, phrase = false, conjunctive = false)
+    scoreDense(lists, end.toInt, k)
   }
 
-  /** Dense-array disjunctive scoring: accumulate in expansion-term order
+  /** Dense-array disjunctive scoring over docIds `[0, end)`, `end` past
+    * every list's last docId: accumulate in expansion-term order
     * (the same FP sequence as [[Oracle.searchOr]]'s slot-outer loop), then
     * a single ascending-docId scan feeds the kernel's bounded heap. BM25
     * parts are strictly positive, so score > 0 ⇔ matched; the scan resets
@@ -570,14 +559,14 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     * core (no two workers touch the same doc slot — race-free without
     * locks), keeping the per-doc list-order FP sequence of the sequential
     * loop, so the split never changes a bit of any score. */
-  private def scoreDense(lists: Seq[TermList], lenBytes: Array[Int],
-                         k: Int): Seq[Oracle.Hit] = {
-    val scores = scoreBuf.get()
+  private def scoreDense(lists: Seq[TermList], end: Int, k: Int): Seq[Oracle.Hit] = {
+    var scores = scoreBuf.get()
+    if (scores.length < end) { scores = new Array[Double](end); scoreBuf.set(scores) }
     val arr = lists.toArray
     val idfs = arr.map(tl => Bm25.idf(ix.nDocs, tl.n.toLong))
     try {
-      scanRanges(k, arr.foldLeft(0L)(_ + _.n), arr.maxBy(_.n).docIds, scores.length) {
-        (lo, hi, top) => denseRange(arr, idfs, lenBytes, scores, lo, hi, top)
+      scanRanges(k, arr.foldLeft(0L)(_ + _.n), arr.maxBy(_.n).docIds, end) {
+        (lo, hi, top) => denseRange(arr, idfs, scores, lo, hi, top)
       }
     } catch {
       case t: Throwable => java.util.Arrays.fill(scores, 0.0); throw t
@@ -587,8 +576,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
   /** One disjunctive accumulate+scan pass over docIds in `[fromDoc,
     * untilDoc)` — writes only that segment of `scores` and resets the
     * slots it touched. */
-  private def denseRange(lists: Array[TermList], idfs: Array[Double],
-                         lenBytes: Array[Int], scores: Array[Double],
+  private def denseRange(lists: Array[TermList], idfs: Array[Double], scores: Array[Double],
                          fromDoc: Int, untilDoc: Int, top: Kernel.TopK): Unit = {
     var li = 0
     while (li < lists.length) {
@@ -598,7 +586,7 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       var i = Kernel.lowerBound(arr, 0, tl.n, fromDoc)
       while (i < tl.n && arr(i) < untilDoc) {
         val d = arr(i)
-        scores(d) += idf * Bm25.tfNormLossy(tl.tfs(i).toLong, lenBytes(d), ix.lossyCache)
+        scores(d) += idf * Bm25.tfNormLossy(tl.tfs(i).toLong, tl.norms(i), ix.lossyCache)
         i += 1
       }
       li += 1
@@ -609,12 +597,11 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     val del = deletedDocs
     var x = Kernel.lowerBound(del, 0, del.length, fromDoc)
     while (x < del.length && del(x) < untilDoc) {
-      if (del(x) < scores.length) scores(del(x)) = 0.0
+      scores(del(x)) = 0.0
       x += 1
     }
     var d = fromDoc
-    val end = math.min(untilDoc, scores.length)
-    while (d < end) {
+    while (d < untilDoc) {
       val s = scores(d)
       if (s > 0.0) {
         scores(d) = 0.0
@@ -682,20 +669,19 @@ final class LocalService(val ix: Searcher.LoadedIndex,
     def viaDistributed(): Seq[Oracle.Hit] =
       BoolQuery.search(distributedIx(), root, k).collect().sortBy(_.rank)
         .map(h => Oracle.Hit(h.docId, h.score)).toSeq
-    if (!normsResident || deletesOverBudget ||
-        allTerms.exists(t => dfs(t) > maxFetchPostings))
+    if (deletesOverBudget || allTerms.exists(t => dfs(t) > maxFetchPostings))
       return viaDistributed()
     val lists = resolveLists(allTerms, phrase = false)
     if (lists == null) return viaDistributed()
     val byTerm = allTerms.zip(lists).toMap
     val idfOf = allTerms.map(t => t -> Bm25.idf(ix.nDocs, byTerm(t).n.toLong)).toMap
-    val lenBytes = docLenBytes
     // lists hoisted to primitive arrays (an IndexedSeq apply per posting is
     // a virtual call in the hottest loop of the serving path)
     val nP = posTerms.size
     val nNeg = negTerms.size
     val posDocs = posTerms.map(t => byTerm(t).docIds).toArray
     val posTfs = posTerms.map(t => byTerm(t).tfs).toArray
+    val posNorms = posTerms.map(t => byTerm(t).norms).toArray
     val negDocs = negTerms.map(t => byTerm(t).docIds).toArray
     val posIdfs = posTerms.map(idfOf).toArray
     val negIdx = negTerms.zipWithIndex.toMap
@@ -727,13 +713,18 @@ final class LocalService(val ix: Searcher.LoadedIndex,
         if (d == Int.MaxValue || d >= untilDoc) done = true
         else {
           if (!isDeleted(d)) {
-            val lb = lenBytes(d)
+            // d's length byte, from the first positive slot aligned on it
+            // (the union scan stopped at d, so one is)
+            var lb = -1
             i = 0
             while (i < nP) {
               val al = cursors(i) < posDocs(i).length && posDocs(i)(cursors(i)) == d
               posAligned(i) = al
-              if (al) partials(i) = posIdfs(i) *
-                Bm25.tfNormLossy(posTfs(i)(cursors(i)).toLong, lb, ix.lossyCache)
+              if (al) {
+                if (lb < 0) lb = posNorms(i)(cursors(i)) & 0xff
+                partials(i) = posIdfs(i) *
+                  Bm25.tfNormLossy(posTfs(i)(cursors(i)).toLong, lb, ix.lossyCache)
+              }
               i += 1
             }
             var j = 0
@@ -791,51 +782,14 @@ final class LocalService(val ix: Searcher.LoadedIndex,
       }.getOrElse("")
     }
   }
-
-  /** docId space (max id + 1), resolved by ONE aggregation job — never a
-    * row collect, so it is safe to evaluate at ANY index size. Per-doc
-    * arrays are sized by it, not by the doc count: after a delete +
-    * compaction the id range has holes (ids are stable, Lucene keeps
-    * maxDoc ≥ numDocs the same way), so nDocs underestimates the bound. */
-  private lazy val idSpace: Int = {
-    import org.apache.spark.sql.functions.{col, max}
-    val r = ix.doclen.agg(max(col("docId").cast("int"))).collect()(0)
-    (if (r.isNullAt(0)) -1 else r.getInt(0)) + 1
-  }
-
-  /** The construction-time norms gate (round-3 verdict, "what's wrong" #2):
-    * the resident norm array is materialized ONLY when the docId space fits
-    * `maxResidentNorms` — at 10^10 docs the old unconditional collect tried
-    * a 40 GB driver materialization before any per-query gate could route
-    * to the distributed engine. Over budget, every scoring entry point
-    * routes distributed ([[Searcher]] streams the inline per-posting norms
-    * with the blocks, needing no per-doc state at all), and [[explain]]
-    * point-probes the single doc's norm. */
-  private lazy val normsResident: Boolean = idSpace.toLong <= maxResidentNorms
-
-  /** Whether the resident norm array has been materialized (diagnostic —
-    * asserted never to flip on an over-budget index). */
-  @volatile private[graft] var normsMaterialized: Boolean = false
-
-  /** Per-doc lossy length bytes, resident (one int per doc — 4 MB per
-    * million docs; the reference keeps the same store in memory,
-    * `doc_length_store.h`). */
-  private lazy val docLenState: Array[Int] = {
-    import ix.spark.implicits._
-    require(normsResident,
-      s"norm array for docId space $idSpace exceeds budget $maxResidentNorms")
-    val arr = new Array[Int](idSpace)
-    ix.doclen.select("docId", "lenByte").as[(Int, Int)].collect()
-      .foreach { case (d, lb) => if (d >= 0) arr(d) = lb }
-    normsMaterialized = true
-    arr
-  }
-  private def docLenBytes: Array[Int] = docLenState
 }
 
 object LocalService {
-  /** A decoded posting list; `positions` is null when fetched without. */
+  /** A decoded posting list: per posting its docId, tf and lossy length
+    * byte (the BM25 norm stored inline in its block); `positions` is null
+    * when fetched without. */
   private[graft] final case class TermList(docIds: Array[Int], tfs: Array[Int],
+                                           norms: Array[Byte],
                                            positions: Array[Array[Int]]) {
     def n: Int = docIds.length
     def hasPositions: Boolean = positions != null
@@ -854,8 +808,9 @@ object LocalService {
   final case class Explanation(term: String, tf: Long, df: Long,
                                idf: Double, tfNorm: Double, contribution: Double)
 
-  /** Largest index (docs) served with the dense per-thread accumulator:
-    * 2^24 docs = 128 MB of doubles per serving thread. */
+  /** Largest docId bound (last docId + 1) served with the dense
+    * per-thread accumulator: 2^24 docIds = 128 MB of doubles per serving
+    * thread. */
   val maxDenseDocs: Long = 1L << 24
 
   /** Ranges a heavy scan splits into — one per core, capped: past ~8 the

@@ -45,36 +45,40 @@ private[graft] final class SnapshotReader private (postings: SnapshotReader.Stag
   }
 
   /** Decoded posting lists of `terms` (blocks in firstDocId order across
-    * files); an absent term has no entry. */
+    * files), each posting with its inline length byte; an absent term has
+    * no entry. */
   def lists(terms: Seq[String], withPositions: Boolean): Map[String, LocalService.TermList] = {
-    val cols =
-      if (withPositions) Seq("prevDocId", "firstDocId", "n", "docIds", "tfs", "positions")
-      else Seq("prevDocId", "firstDocId", "n", "docIds", "tfs")
+    val cols = Seq("prevDocId", "firstDocId", "n", "docIds", "tfs", "lenBytes") ++
+      (if (withPositions) Seq("positions") else Nil)
     postings.lookup(terms.toSet, cols).groupBy(_.term).map { case (t, rows) =>
       val ids = scala.collection.mutable.ArrayBuilder.make[Int]
       val tfs = scala.collection.mutable.ArrayBuilder.make[Int]
+      val norms = scala.collection.mutable.ArrayBuilder.make[Byte]
       val pos = if (withPositions)
         new scala.collection.mutable.ArrayBuffer[Array[Int]]() else null
       rows.sortBy(_.int(1)).foreach { r =>
         val n = r.int(2)
         PostingCodec.decodeDocIdTf(r.int(0), n, r.bytes(3), r.bytes(4))
           .foreach { case (d, tf) => ids += d; tfs += tf }
-        if (withPositions) pos ++= PostingCodec.decodePositions(n, r.bytes(5))
+        PostingCodec.decodeLenBytes(n, r.bytes(5)).foreach(lb => norms += lb.toByte)
+        if (withPositions) pos ++= PostingCodec.decodePositions(n, r.bytes(6))
       }
-      t -> LocalService.TermList(ids.result(), tfs.result(),
+      t -> LocalService.TermList(ids.result(), tfs.result(), norms.result(),
         if (withPositions) pos.toArray else null)
     }
   }
 
-  /** tf of (term, docId), decoding only the blocks whose
-    * [firstDocId, lastDocId] covers the doc; 0 when the doc lacks it. */
-  def tf(term: String, docId: Int): Long = {
-    val covering = postings.lookup(Set(term), Seq("prevDocId", "n", "docIds", "tfs"),
+  /** (tf, lenByte) of (term, docId), decoding only the blocks whose
+    * [firstDocId, lastDocId] covers the doc; None when the doc lacks it. */
+  def tf(term: String, docId: Int): Option[(Long, Int)] = {
+    val covering = postings.lookup(Set(term), Seq("prevDocId", "n", "docIds", "tfs", "lenBytes"),
       where = (Seq("firstDocId", "lastDocId"), r => r.int(0) <= docId && r.int(1) >= docId))
-    covering.iterator
-      .flatMap(r => PostingCodec.decodeDocIdTf(r.int(0), r.int(1), r.bytes(2), r.bytes(3)))
-      .collectFirst { case (d, tf) if d == docId => tf.toLong }
-      .getOrElse(0L)
+    covering.iterator.flatMap { r =>
+      val n = r.int(1)
+      val dt = PostingCodec.decodeDocIdTf(r.int(0), n, r.bytes(2), r.bytes(3))
+      val i = dt.indexWhere(_._1 == docId)
+      if (i < 0) None else Some((dt(i)._2.toLong, PostingCodec.decodeLenBytes(n, r.bytes(4))(i)))
+    }.nextOption()
   }
 }
 

@@ -879,30 +879,43 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(warmMs < 200.0, s"warm serve took ${warmMs}ms — not a resident path")
   }
 
-  test("LocalService: over-budget norms never materialize; results identical") {
+  test("LocalService: a fresh service answers every resident family with no Spark job") {
     built
-    // a budget smaller than the corpus docId space: every scoring path must
-    // route distributed and the corpus norm array must never be collected
-    val svc = new graft.query.LocalService(ix, maxResidentNorms = 4L)
-    val queries = Seq(
-      (Seq("if"), false), (Seq("if", "return"), false),
-      (Seq("hash", "seed", "mask"), false), (Seq("if", "return"), true))
-    queries.foreach { case (terms, phrase) =>
-      val want = Oracle.search(oracle, terms, 10, phrase)
-      val got = svc.search(terms, 10, phrase)
-      assert(got.map(_.docId) == want.map(_.docId), s"gated $terms phrase=$phrase")
-      got.zip(want).foreach { case (g, w) => assert(math.abs(g.score - w.score) < 1e-9) }
+    // norms ride with each posting: construction and the first query of
+    // each family read only the loaded snapshot's files, on the driver
+    val loaded = Searcher.load(spark, tmp)
+    def noJobs[A](what: String)(body: => A): A = {
+      val (jobs, out) = SparkJobs.during(spark)(body)
+      assert(jobs == 0, s"$what launched $jobs Spark jobs")
+      out
     }
-    // bool + expansion paths route distributed; explain point-probes its norm
-    val b = svc.searchBool("if AND return", 5)
-    val bWant = new graft.query.LocalService(ix).searchBool("if AND return", 5)
-    assert(b == bWant)
-    val pfx = svc.searchPrefix("re", 5)
-    assert(pfx.nonEmpty)
-    val ex = svc.explain(Seq("if"), b.head.docId)
-    assert(ex.nonEmpty && ex.head.term == "if")
-    assert(!svc.normsMaterialized,
-      "over-budget index materialized the corpus norm array on the driver")
+    val svc = noJobs("construction")(new graft.query.LocalService(loaded))
+    val queries = Seq(
+      (Seq("if"), false, Nil), (Seq("if", "return"), false, Nil),
+      (Seq("hash", "seed", "mask"), false, Nil), (Seq("if", "return"), true, Nil),
+      (Seq("if"), false, Seq("return")))
+    val served = queries.map { case (terms, phrase, not) =>
+      val want = Oracle.search(oracle, terms, 10, phrase, excludeTerms = not)
+      val got = noJobs(s"$terms phrase=$phrase not=$not")(
+        svc.search(terms, 10, phrase, excludeTerms = not))
+      assert(got.map(_.docId) == want.map(_.docId), s"fresh $terms phrase=$phrase not=$not")
+      got.zip(want).foreach { case (g, w) => assert(math.abs(g.score - w.score) < 1e-9) }
+      got
+    }
+    val b = noJobs("bool")(svc.searchBool("if AND return", 5))
+    val bWant = graft.query.BoolQuery.search(ix, "if AND return", 5).collect().sortBy(_.rank)
+    assert(b == bWant.map(h => Oracle.Hit(h.docId, h.score)).toSeq)
+    // a prefix query's dictionary expansion is a Spark probe of its own
+    // (Searcher.expandPrefix; its first call also resolves the termstats
+    // relation); scoring the expansion adds no job
+    Searcher.expandPrefix(loaded, "re", 5)
+    val (expJobs, terms) = SparkJobs.during(spark)(Searcher.expandPrefix(loaded, "re", 5))
+    val (pfxJobs, pfx) = SparkJobs.during(spark)(svc.searchPrefix("re", 5, 5))
+    assert(pfxJobs == expJobs, s"prefix ran $pfxJobs jobs, its expansion alone $expJobs")
+    assert(pfx.map(_.docId) == Oracle.searchOr(oracle, terms, 5).map(_.docId))
+    val top = served(1).head // the pair's
+    val ex = noJobs("explain")(svc.explain(Seq("if", "return"), top.docId))
+    assert(ex.foldLeft(0.0)(_ + _.contribution) == top.score)
   }
 
   test("Integrity.check: clean index passes every invariant; corruption is flagged") {
@@ -978,6 +991,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tight.explain(terms, hits.head.docId) == svc.explain(terms, hits.head.docId))
     assert(tight.residentPostings == 0L,
       "explain materialized a hot term list on the driver")
+    // every term over the cap: tf and the length byte both come from the
+    // covering blocks, and the decomposition still sums to the served score
+    val capped = new graft.query.LocalService(ix, maxFetchPostings = 1L)
+    hits.foreach { h =>
+      val ex = capped.explain(terms, h.docId)
+      assert(ex.foldLeft(0.0)(_ + _.contribution) == h.score, s"capped explain of ${h.docId}")
+    }
+    assert(capped.residentPostings == 0L)
   }
 
   test("LocalService: parallel range scan is bitwise-identical to sequential") {
@@ -1447,12 +1468,14 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
         rare -> 1L, "zzz_absent" -> 0L))
       // the block-pruned tf probe agrees with the decoded list at every doc
       val ifList = reader.lists(Seq("if"), withPositions = false)("if")
-      ifList.docIds.zip(ifList.tfs).take(200).foreach { case (d, tf) =>
-        assert(reader.tf("if", d) == tf.toLong, s"tf('if', $d)")
+      ifList.docIds.indices.take(200).foreach { i =>
+        val d = ifList.docIds(i)
+        assert(reader.tf("if", d) == Some((ifList.tfs(i).toLong, ifList.norms(i) & 0xff)),
+          s"tf('if', $d)")
       }
       val ifDocs = ifList.docIds.toSet
-      (0 until NDocs.toInt).find(!ifDocs.contains(_)).foreach(d => assert(reader.tf("if", d) == 0L))
-      assert(reader.tf("zzz_absent", 0) == 0L)
+      (0 until NDocs.toInt).find(!ifDocs.contains(_)).foreach(d => assert(reader.tf("if", d).isEmpty))
+      assert(reader.tf("zzz_absent", 0).isEmpty)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -1460,10 +1483,6 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     built
     val svc = new graft.query.LocalService(ix)
     val tight = new graft.query.LocalService(ix, maxFetchPostings = 50L)
-    // the resident norms and the docId space load once per service, with
-    // Spark jobs; load them on a term the probes below never touch
-    svc.search(Seq("fn_1_0"), 1)
-    tight.search(Seq("fn_1_0"), 1)
     val (_, m0, _) = svc.cacheStats
     def noJobs[A](what: String)(body: => A): A = {
       val (jobs, out) = SparkJobs.during(spark)(body)
@@ -1512,6 +1531,7 @@ class EngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       rejects("batch")(Searcher.searchAll(legacy, qs, 10).collect())
       rejects("bool")(graft.query.BoolQuery.search(legacy, "if AND return", 10).collect())
       rejects("fsck")(graft.index.Integrity.check(spark, legacyDir).collect())
+      rejects("resident")(new graft.query.LocalService(legacy).search(Seq("if", "return"), 10))
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacyDir))
     }
@@ -1740,17 +1760,19 @@ object SnapshotReads {
     val plain = reader.lists(terms, withPositions = false)
     terms.foreach { t =>
       val blocks = ix.postings.filter($"term" === t)
-        .select("prevDocId", "firstDocId", "n", "docIds", "tfs", "positions")
-        .as[(Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
+        .select("prevDocId", "firstDocId", "n", "docIds", "tfs", "lenBytes", "positions")
+        .as[(Int, Int, Int, Array[Byte], Array[Byte], Array[Byte], Array[Byte])]
         .collect().sortBy(_._2)
-      val dt = blocks.flatMap { case (prev, _, n, ids, tfs, _) =>
+      val dt = blocks.flatMap { case (prev, _, n, ids, tfs, _, _) =>
         PostingCodec.decodeDocIdTf(prev, n, ids, tfs) }
-      val pos = blocks.flatMap { case (_, _, n, _, _, p) => PostingCodec.decodePositions(n, p) }
+      val lbs = blocks.flatMap { case (_, _, n, _, _, lb, _) => PostingCodec.decodeLenBytes(n, lb) }
+      val pos = blocks.flatMap { case (_, _, n, _, _, _, p) => PostingCodec.decodePositions(n, p) }
       if (blocks.isEmpty) assert(!lists.contains(t) && !plain.contains(t), s"absent '$t' decoded")
       else {
         val got = lists(t)
         assert(got.docIds.toSeq == dt.map(_._1).toSeq, s"docIds differ for '$t'")
         assert(got.tfs.toSeq == dt.map(_._2).toSeq, s"tfs differ for '$t'")
+        assert(got.norms.map(_ & 0xff).toSeq == lbs.toSeq, s"norms differ for '$t'")
         assert(got.positions.map(_.toSeq).toSeq == pos.map(_.toSeq).toSeq,
           s"positions differ for '$t'")
         assert(plain(t).docIds.toSeq == got.docIds.toSeq && !plain(t).hasPositions)

@@ -94,6 +94,31 @@ class FuzzySpec extends AnyFunSuite with BeforeAndAfterAll {
       Searcher.expandFuzzy(engB.ix, "par", 2, 16))
   }
 
+  test("fuzzy marker: a missing one takes the exact fallback, an unparsable one throws") {
+    val s = spark
+    import s.implicits._
+    val corpus = (0 until 20).map { i =>
+      ("r0", f"p$i%04d", "c0", "txt", s"part park pair spar w$i")
+    }.toDF("repo", "path", "commit", "lang", "content")
+    val dir = java.nio.file.Files.createTempDirectory("graft_fz_marker").toString
+    try {
+      val eng = Engine.build(spark, corpus, dir, partitions = 2,
+        withBloom = false, withFuzzy = true)
+      val want = Searcher.expandFuzzy(eng.ix, "par", 1, 16)
+      assert(want.nonEmpty)
+      val marker = java.nio.file.Paths.get(dir, "fuzzy", "_maxdist")
+      java.nio.file.Files.delete(marker)
+      val missing = Searcher.load(spark, dir)
+      // distance 0: the probe-distance guard never passes, so the exact
+      // dictionary scan answers
+      assert(missing.fuzzy.map(_._2) == Some(0), "a missing marker must read as distance 0")
+      assert(Searcher.expandFuzzy(missing, "par", 1, 16) == want)
+      assert(FuzzyIndex.segMaxDist(dir, 7L) == 0) // no table for that segment
+      java.nio.file.Files.writeString(marker, "two")
+      intercept[NumberFormatException](Searcher.load(spark, dir).fuzzy)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("streamed segments carry SymSpell: probe parity, compact rebuilds") {
     val s = spark
     import s.implicits._

@@ -44,23 +44,23 @@ object KernelProperties extends Properties("kernel") {
   } yield Query(terms, phrase, slop, shifts, exclude, boosts, k)
 
   /** The serving path's use of the kernel: slot lists straight from the
-    * postings, one resident length byte per docId, `[0, split)` and
-    * `[split, ∞)` scanned into separate heaps that merge. */
+    * postings, each posting with its doc's length byte (as a posting block
+    * stores it), `[0, split)` and `[split, ∞)` scanned into separate heaps
+    * that merge. */
   private def viaKernel(ix: Oracle.Index, q: Query, after: (Double, Int),
                         split: Int): Seq[(Int, Double)] = {
     if (!q.terms.forall(ix.postings.contains)) return Nil
     val slots = q.terms.map(ix.postings).toArray
     val idfs = q.terms.map(t => Bm25.idf(ix.nDocs, ix.df(t)) * q.boosts.getOrElse(t, 1.0)).toArray
-    val lenBytes = new Array[Int](ix.docLen.keys.max + 1)
-    ix.docLen.foreach { case (d, len) => lenBytes(d) = LenByte.encode(len.toLong) }
-    val conj = new Kernel.Conjunction(slots.map(_.map(_._1)), slots.map(_.map(_._2)), idfs,
+    val norms = slots.map(_.map(p => LenByte.encode(ix.docLen(p._1).toLong).toByte))
+    val conj = new Kernel.Conjunction(slots.map(_.map(_._1)), slots.map(_.map(_._2)), norms, idfs,
       positions = if (q.phrase) slots.map(_.map(_._3)) else null,
       shifts = q.shifts.map(_.toArray).orNull, slop = q.slop,
       excluded = q.exclude.flatMap(ix.postings.get).map(_.map(_._1)).toArray)
     val low = new Kernel.TopK(q.k)
     val high = new Kernel.TopK(q.k)
-    conj.scan(lenBytes, ix.lossyCache, 0, split, low, after._1, after._2)
-    conj.scan(lenBytes, ix.lossyCache, split, Int.MaxValue, high, after._1, after._2)
+    conj.scan(ix.lossyCache, 0, split, low, after._1, after._2)
+    conj.scan(ix.lossyCache, split, Int.MaxValue, high, after._1, after._2)
     val (docs, scores) = low.merge(high).sorted
     docs.toSeq.zip(scores)
   }

@@ -6,7 +6,7 @@ import org.scalacheck.Prop.propBoolean
 
 /** ScalaCheck laws for the interval algebra ([[BlockMax.union]],
   * [[BlockMax.intersect]]) the two-level metadata read is built on:
-  * membership-exact merge/intersect/union against brute-force point sets —
+  * membership-exact union/intersect against brute-force point sets —
   * the soundness the coverage-bounded fine read depends on. */
 object MetaStoreProperties extends Properties("metastore") {
 
@@ -26,20 +26,20 @@ object MetaStoreProperties extends Properties("metastore") {
         case _           => true
       }
 
-  property("mergeIntervals: same point set, disjoint ascending output") =
+  property("union: same point set, disjoint ascending output") =
     Prop.forAll(ivGen) { iv =>
       val m = BlockMax.union(iv.iterator)
       points(m) == points(iv) && disjointAscending(m)
     }
 
-  property("intersectIv = point-set intersection") =
+  property("intersect = point-set intersection") =
     Prop.forAll(ivGen, ivGen) { (a, b) =>
       val ma = BlockMax.union(a.iterator)
       val mb = BlockMax.union(b.iterator)
       points(BlockMax.intersect(ma, mb)) == points(a).intersect(points(b))
     }
 
-  property("unionIv superset-covers both inputs, exact up to gap joins") =
+  property("union of unions covers both inputs, exact up to gap joins") =
     Prop.forAll(ivGen, ivGen) { (a, b) =>
       val u = points(BlockMax.union(
         BlockMax.union(a.iterator).iterator ++ BlockMax.union(b.iterator).iterator))

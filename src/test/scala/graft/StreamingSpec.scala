@@ -310,6 +310,24 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
+  test("an unreadable segment manifest fails the load instead of reviving its sources") {
+    // segment 2 compacted 0 and 1, but its manifest cannot be read (a
+    // directory stands in its place): read as empty, its compactedFrom list
+    // would vanish and 0 and 1 would count beside it
+    val dir = java.nio.file.Files.createTempDirectory("graft_unreadable").toString
+    try {
+      def writeManifest(seg: Long, json: String): Unit =
+        java.nio.file.Files.writeString(
+          graft.index.Manifest.manifestPath(dir, s"segment_$seg"), json)
+      writeManifest(0, """{"segment":0,"docs":10,"docsAfter":10}""")
+      writeManifest(1, """{"segment":1,"docs":10,"docsAfter":20}""")
+      java.nio.file.Files.createDirectory(graft.index.Manifest.manifestPath(dir, "segment_2"))
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "termstats", "seg=2"))
+      intercept[java.io.IOException](graft.index.Manifest.committedSegments(dir))
+      intercept[java.io.IOException](Searcher.load(spark, dir))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   // ---- event-stream analytics (EventWindows) ----
 
   /** Deterministic synthetic events: 5 users, ~3 hours, bursts separated by
